@@ -113,20 +113,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // UTC pin: Tables.t's NTZ→TIMESTAMP normalization must be a pure
-      // reinterpretation (same µs count) regardless of host TZ.
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) in some corpus builds;
-      // session-wide legacy flag (inherited by newSession clones)
-      // instead of a conf.set in the read path — see Tables.t.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: touch every table and exercise one small
     // aggregation so file-index builds, codegen compilation and JIT

@@ -7,11 +7,12 @@ import graft.functions.{CosineSimF, DotProductF, ShingleGen,
   SortedIntersectCountF}
 
 /** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available to SQL. Activate with
+  * expressions available to SQL and installs its optimizer rule and
+  * planner strategies. Activate with
   * `spark.sql.extensions=graft.GraftExtensions` (cluster-wide, no code
-  * changes for users), or imperatively via
-  * `org.apache.spark.sql.graft.GraftFunctions.register(spark)` for an
-  * already-built session.
+  * changes for users); [[GraftSession.local]] sets it for every entry
+  * point. The extensions are read when the session is built and carry
+  * over to `newSession()` clones.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -69,9 +70,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Shared by the extensions path and GraftFunctions.register: the
-    * shingle size must be a foldable integer (it is part of the plan,
-    * not a per-row value). */
+  /** The shingle size must be a foldable integer (it is part of the
+    * plan, not a per-row value). */
   val shingleGenBuilder: Seq[Expression] => Expression = {
     case Seq(a, kExpr) if kExpr.foldable && kExpr.eval() != null =>
       ShingleGen(a, kExpr.eval().asInstanceOf[Number].intValue())

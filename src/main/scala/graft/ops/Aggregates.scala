@@ -598,13 +598,8 @@ object Aggregates extends OpModule {
     * (session, sf), released by [[OpCache.clear]] so a bench rep
     * re-derives it honestly. The bound feeds both the broadcast-vs-
     * merge verdict and the intersect-stage rebalance width. */
-  private val adjGateMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
-  OpCache.onClear("graph_adjGateMemo")(s =>
-    adjGateMemo.keys.filter(_._1 eq s).foreach(adjGateMemo.remove))
-
   private def edgeBound(s: SparkSession, dir: String): Long =
-    adjGateMemo.getOrElseUpdate((s, dir), copurchaseEdgeBound(s, dir))
+    OpCache.memo(s, dir, "graph_edge_bound")(copurchaseEdgeBound(s, dir))
 
   private def adjacencyFits(s: SparkSession, dir: String): Boolean =
     edgeBound(s, dir) <= BroadcastAdjMaxEdges

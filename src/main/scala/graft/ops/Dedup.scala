@@ -925,16 +925,6 @@ object Dedup extends OpModule {
     * OpCache-persisted so all probe stages share one transform. The
     * MLlib boundary uses the built-in `array_to_vector`, not a closure
     * UDF. */
-  /** One KMeans fit per (session, sf) — round 13: the NSW graph/search
-    * family calls [[ivfIndex]] from several stages; re-fitting the
-    * (deterministic, seeded) quantizer each time was pure waste. The
-    * memo dies with `OpCache.clear`, so bench reps still re-fit
-    * honestly (the cbMemo discipline). */
-  private val kmMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.ml.clustering.KMeansModel]
-  OpCache.onClear("dedup_kmMemo")(s =>
-    kmMemo.keys.filter(_._1 eq s).foreach(kmMemo.remove))
-
   private def ivfIndex(s: SparkSession, dir: String)
       : (Array[Array[Double]], DataFrame) =
     ivfIndexOn(s, dir, "", Tables.t(s, dir, "embeddings"))
@@ -950,12 +940,15 @@ object Dedup extends OpModule {
       .select($"vec_id", $"embedding",
         org.apache.spark.ml.functions.array_to_vector($"embedding")
           .as("features"))
-    val model = kmMemo.getOrElseUpdate((s, s"$dir#$tag"), {
-      val km = new KMeans().setK(16).setSeed(42L).setMaxIter(10)
+    // one KMeans fit per (session, sf, tag): the NSW graph/search
+    // family calls [[ivfIndex]] from several stages, and re-fitting the
+    // (deterministic, seeded) quantizer each time was pure waste
+    val model = OpCache.memo(s, dir, s"ivf_kmeans$tag") {
+      new KMeans().setK(16).setSeed(42L).setMaxIter(10)
         .setInitMode("random").setFeaturesCol("features")
         .setPredictionCol("cell")
-      km.fit(e)
-    })
+        .fit(e)
+    }
     val corpus = OpCache.cached(s, dir, s"ivf_corpus$tag")(
       model.transform(e).select($"vec_id", $"embedding", $"cell"))
     (model.clusterCenters.map(_.toArray), corpus)
@@ -1161,16 +1154,6 @@ object Dedup extends OpModule {
   /** Out-degree of the NSW neighbor graph. */
   private val NswM = 8
 
-  /** Env-gated phase timer (dev-only): prints per-phase wall of the NSW
-    * build/walk when SPARK_GRAFT_NSW_DEBUG is set; zero cost otherwise. */
-  private val NswDbg = sys.env.contains("SPARK_GRAFT_NSW_DEBUG")
-  @inline private def nswPhase[T](tag: String)(f: => T): T =
-    if (!NswDbg) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"NSWDBG $tag%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** NSW NEIGHBOR GRAPH (round 13 — the HNSW family beside IVF/PQ/LSH,
     * r12 verdict item #8): each corpus vector keeps directed edges to
     * its [[NswM]] most-cosine-similar neighbors, found among nodes
@@ -1206,12 +1189,12 @@ object Dedup extends OpModule {
       // carry across bench reps)
       val vecs = corpus.select($"vec_id", $"embedding").persist()
       val p = corpus.sparkSession.sparkContext.defaultParallelism
-      // dedup+rank on ONE exchange (r16, guide §2.4): hash by src alone
-      // satisfies both the (src,dst) groupBy clustering and the src
-      // window partitioning, so the pair set crosses the wire once
-      // instead of twice (the former groupBy exchange + window exchange).
-      // min() over duplicates is grouping-invariant (identical sim4),
-      // and the row_number orderBy is a total order — bit-identical.
+      // dedup then rank: the plan runs TWO exchanges, hash(src,dst)
+      // for the groupBy-min and then hash(src) for the window. (A
+      // hash(src) alone would satisfy both; nothing places it there
+      // yet.) min() over duplicates is grouping-invariant (identical
+      // sim4), and the row_number orderBy is a total order, so the
+      // kept edges are deterministic.
       def topM(scored: DataFrame): DataFrame = {
         val w = Window.partitionBy($"src").orderBy($"sim4".desc, $"dst".asc)
         scored.groupBy($"src", $"dst").agg(min($"sim4").as("sim4"))
@@ -1235,9 +1218,11 @@ object Dedup extends OpModule {
       // the 16-center distance fold per row on ONE task — and twice
       // over, once per self-join branch (two sequential ~1 s single-task
       // stages in the job trace). Spreading the corpus by vec_id FIRST
-      // puts the fold in the 2p-wide map stages of the branch exchanges
-      // (the identical repartition subtree is shared via exchange
-      // reuse, so the corpus shuffles once).
+      // puts the fold in the 2p-wide map stages of the branch exchanges.
+      // The corpus shuffles once PER BRANCH: the two vec_id exchanges
+      // are not reused (the join's inferred isnotnull(salt) sinks below
+      // the left one only, and AQE plans each branch's read of the
+      // cached corpus as its own stage).
       val nodes = corpus
         .repartition(2 * p, $"vec_id")
         .select($"vec_id", $"embedding",
@@ -1267,7 +1252,7 @@ object Dedup extends OpModule {
         .select($"src", $"dst",
           round(graft.functions.CosineSimF.cosine($"se", $"de"), 4)
             .as("sim4"))
-      var g = nswPhase("build:seed")(topM(seedScored).localCheckpoint(true))
+      var g = topM(seedScored).localCheckpoint(true)
       // NN-DESCENT refinement (Dong et al.'s distributed k-NN-graph
       // recipe): per node v the round's candidate pool B(v) is its
       // out-neighbors plus its in-neighbors CAPPED at M (the reverse
@@ -1291,7 +1276,7 @@ object Dedup extends OpModule {
       // the same arrays — so the single groupBy-min dedups the union
       // exactly where the anti-join used to; the kept graph is
       // bit-identical (pinned by the saved-index equality law).
-      for (nnRound <- 1 to 3) {
+      for (_ <- 1 to 3) {
         val e = g
         val wIn = Window.partitionBy($"dst")
           .orderBy($"sim4".desc, $"src".asc)
@@ -1310,8 +1295,7 @@ object Dedup extends OpModule {
           .select($"src", $"dst",
             round(graft.functions.CosineSimF.cosine($"se", $"de"), 4)
               .as("sim4"))
-        g = nswPhase(s"build:nnd$nnRound")(topM(scored.unionByName(g))
-          .localCheckpoint(true))
+        g = topM(scored.unionByName(g)).localCheckpoint(true)
       }
       // g is eagerly checkpointed, so the build-scoped persist can go
       vecs.unpersist(blocking = false)
@@ -1382,7 +1366,7 @@ object Dedup extends OpModule {
     // it before a byte of data moves — measured); checkpointing
     // truncates lineage to O(1) per round, the same fixpoint recipe
     // as connectedComponents. Frames are O(visited) tiny.
-    var visited = nswPhase("walk:entry")(entry.localCheckpoint(true))
+    var visited = entry.localCheckpoint(true)
     // best-first, batched: each round EXPANDS the best beamWidth
     // visited-but-unexpanded nodes (the HNSW ef-search queue shape —
     // re-expanding the same stabilized beam would stall in a local
@@ -1391,7 +1375,7 @@ object Dedup extends OpModule {
     var expanded = visited.select($"probe_id", $"nbr_id").limit(0)
       .localCheckpoint(true)
     val roundPersists = Seq.newBuilder[DataFrame]
-    for (walkRound <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       // persist, not localCheckpoint (r15): toExpand is referenced
       // twice (candidate join this round, `expanded` anti-join in later
       // rounds) — the cache serves both without an eager job of its
@@ -1413,8 +1397,7 @@ object Dedup extends OpModule {
         .filter($"probe_id" =!= $"nbr_id")
         .join(visited.select($"probe_id", $"nbr_id"),
           Seq("probe_id", "nbr_id"), "left_anti")
-      val fresh = nswPhase(s"walk:round$walkRound")(
-        scoreOf(cand).localCheckpoint(true))
+      val fresh = scoreOf(cand).localCheckpoint(true)
       // the accumulators stay PLAIN unions of the checkpointed pieces:
       // a union of k LogicalRDDs is a linear plan however often it is
       // referenced, so only the per-round NEW frames need truncation
@@ -1584,10 +1567,8 @@ object Dedup extends OpModule {
     // its own count) — persist for the sweep's lifetime, released below
     val truth = simTopkCosine(s, dir).select($"probe_id", $"nbr_id")
       .persist()
-    // force the SHARED single-build structures (coarse quantizer, cell
-    // assignment, NSW adjacency) before forking: the beam legs would
-    // otherwise race the kmMemo/OpCache first-build (identical results,
-    // duplicated fits — see [[Par]]'s caller contract)
+    // the shared index (coarse quantizer, cell assignment, NSW
+    // adjacency) is built once here and handed to every beam leg
     val (centers, corpus) = ivfIndex(s, dir)
     val graph = nswGraph(s, dir)
     // the three beam widths are INDEPENDENT searches over the same

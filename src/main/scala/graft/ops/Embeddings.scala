@@ -125,16 +125,11 @@ object Embeddings extends OpModule {
     * scoring. Memoized per (session, dir): the 8 block fits are cheap
     * but must not repeat across the ops that share the codebook (the
     * `ivfIndex` single-fit precedent). Scoped to the bench rep: the
-    * memo dies with `OpCache.clear` (r10 ADVICE — rep 2 must refit,
-    * not inherit rep 1's model). */
-  private val cbMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Array[Long]]]]
-  OpCache.onClear("emb_pq_cbMemo")(s =>
-    cbMemo.keys.filter(_._1 eq s).foreach(cbMemo.remove))
-
+    * memo dies with `OpCache.clear` (rep 2 must refit, not inherit
+    * rep 1's model). */
   private[ops] def pqCodebooks(s: SparkSession,
       dir: String): Array[Array[Array[Long]]] =
-    cbMemo.getOrElseUpdate((s, dir), {
+    OpCache.memo(s, dir, "pq_codebooks") {
       import org.apache.spark.ml.clustering.KMeans
       import s.implicits._
       val e = OpCache.cached(s, dir, "pq_learned_e")(
@@ -153,7 +148,7 @@ object Embeddings extends OpModule {
         km.fit(blk).clusterCenters
           .map(_.toArray.map(x => math.floor(x * 1000000 + 0.5).toLong))
       }.toArray
-    })
+    }
 
   def embPqLearned(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -8,7 +8,8 @@ package graft.ops
   * Why this is safe and result-identical: Spark's scheduler runs
   * concurrently submitted jobs FIFO, each leg computes exactly the
   * frame it would compute sequentially (the legs share nothing but
-  * OpCache holders, whose lazy-val build is monitor-serialized), and
+  * OpCache holders — frames and memos — whose single-flight build is
+  * monitor-serialized), and
   * the caller receives results in INPUT order — so the operator's
   * output is bit-identical to the sequential composition, only the
   * idle tail of each leg's stages is back-filled by the next leg's
@@ -16,11 +17,10 @@ package graft.ops
   * leg's straggler tail; the pool is bounded so at most [[MaxLegs]]
   * jobs compete.
   *
-  * IMPORTANT caller contract: any memoized single-build structure the
-  * legs SHARE (kmMemo model fits, OpCache frames) must be forced
-  * BEFORE forking — TrieMap.getOrElseUpdate evaluates its builder
-  * outside the map's lock, so concurrent first-callers would each run
-  * the build (identical results, wasted cluster time).
+  * Caller contract: a persisted frame the legs share is still lazy
+  * until an action runs, so materialize it before forking (as
+  * `Embeddings.pqCodebooks` does); otherwise every leg's first job
+  * schedules the same input stage.
   */
 private[ops] object Par {
   private val MaxLegs = 4

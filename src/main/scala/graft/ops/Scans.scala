@@ -887,9 +887,6 @@ object Scans extends OpModule {
         year($"o_orderdate").as("o_year"))
     VersionedTable.commit(o.filter($"o_year".between(1995, 1996)), root)
     VersionedTable.commit(o.filter($"o_year" === 1997), root)
-    // idempotent registration for sessions built without
-    // spark.sql.extensions (the asofJoin pattern)
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
     def leg(name: String, from: String) =
       s"""SELECT '$name' AS leg, COUNT(*) AS n_rows,
          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4))) AS DOUBLE)
@@ -961,9 +958,6 @@ object Scans extends OpModule {
     import s.implicits._
     import graft.sources.VersionedTable
     val cat = catalogFor(s, dir)
-    // idempotent registration for sessions built without
-    // spark.sql.extensions (the scanTableSql pattern)
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
     s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.dml")
     val run = vtableRun.incrementAndGet()
     val t = s"orders_msql$run"

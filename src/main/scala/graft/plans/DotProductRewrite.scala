@@ -20,8 +20,9 @@ import graft.functions.{CosineSimF, DotProductF}
   * Semantics are identical (both are a strict left fold of the products
   * in array order), so user code written against plain `functions._`
   * silently gets the tight primitive loop. Registered via
-  * `graft.GraftExtensions` (`injectOptimizerRule`) or
-  * `spark.experimental.extraOptimizations`.
+  * `graft.GraftExtensions` (`injectOptimizerRule`); Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.DotProductRewrite`
+  * turns it off for a session.
   *
   * The rule is deliberately NARROW because it is injected session-wide:
   * it fires only when (1) both array inputs resolve to

@@ -1,73 +1,26 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.classic
-import graft.functions.{CosineSimF, DotProductF}
-import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, BandJoinPlan,
-  BandJoinStrategy, SessionizePlan, SessionizeStrategy}
+import graft.plans.{AsOfJoinPlan, BandJoinPlan, SessionizePlan}
 
-/** Imperative twin of `graft.GraftExtensions` for sessions that are
-  * already built (the extensions config is only read at build time).
-  * Lives in the sql package for `sessionState` access.
+/** DataFrame builders for the native operators. Each returns a logical
+  * node that the planner strategies injected by `graft.GraftExtensions`
+  * turn into its exec. Lives in the sql package for `Dataset.ofRows` +
+  * analyzed-plan access.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product_f",
-      { case Seq(a, b) => DotProductF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"dot_product_f requires exactly 2 arguments, got ${other.length}") },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_f",
-      { case Seq(a, b) => CosineSimF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"cosine_sim_f requires exactly 2 arguments, got ${other.length}") },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_gen", graft.GraftExtensions.shingleGenBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count_f",
-      { case Seq(a, b) => graft.functions.SortedIntersectCountF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"sorted_intersect_count_f requires exactly 2 arguments, " +
-            s"got ${other.length}") },
-      "scala_udf")
-    // SQL TABLE functions over the versioned table (snapshot / time
-    // travel / change feed) — same builders as the extensions path
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_table", graft.GraftExtensions.graftTableBuilder, "scala_udf")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_table_changes",
-      graft.GraftExtensions.graftTableChangesBuilder, "scala_udf")
-    // SQL MERGE INTO over the named catalog (round 15): the planner
-    // strategy, injected idempotently so sessions built without
-    // spark.sql.extensions get the statement too
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies
-        .contains(graft.plans.GraftMergeStrategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ graft.plans.GraftMergeStrategy
-  }
-
   /** Backward as-of join through the native operator
     * ([[graft.plans.AsOfJoinExec]]): every `left` row gains `right`'s
     * columns from the latest same-key right row strictly before its
     * timestamp (nulls when none). `key`/`ts` columns must be BIGINT on
-    * both sides (see the operator scaladoc). Lives in the sql package
-    * for `Dataset.ofRows` + analyzed-plan access; registers the
-    * planner strategy idempotently so it works on sessions built
-    * without `spark.sql.extensions`. */
+    * both sides (see the operator scaladoc). */
   def asofJoin(left: DataFrame, right: DataFrame,
       leftKey: String, leftTs: String,
       rightKey: String, rightTs: String): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val lp = left.queryExecution.analyzed
     val rp0 = right.queryExecution.analyzed
     // self-join hygiene: when both inputs descend from the same base
@@ -153,10 +106,6 @@ object GraftFunctions {
       s"bandJoin requires 0 <= loFactor <= hiFactor and binWidth > 0; " +
         s"got ($loFactor, $hiFactor, $binWidth)")
     val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(BandJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ BandJoinStrategy
-    }
     import org.apache.spark.sql.functions.{col, explode, floor, sequence}
     val lBin = "__graft_band_bin_l"
     val rBin = "__graft_band_bin_r"
@@ -192,10 +141,6 @@ object GraftFunctions {
   def sessionize(df: DataFrame, key: String, ts: String, tie: String,
       gapMicros: Long, outCol: String = "session_idx"): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(SessionizeStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SessionizeStrategy
-    }
     val p = df.queryExecution.analyzed
     def attr(n: String) =
       p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(

@@ -193,7 +193,6 @@ class GraftCatalogSpec extends SparkSpec {
           data.filter($"k" > b * 100 && $"k" <= (b + 1) * 100),
           root, statsCol = Some("k"))
       }
-      org.apache.spark.sql.graft.GraftFunctions.register(spark)
       banded(s"$wh/db/msql"); banded(s"$wh/db/mapi")
       // updates: double v for keys 1-50 (band 1 only) + insert 501-510
       val updates = (1L to 50L).map(k => (k, k * 3.0))
@@ -242,7 +241,6 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql(s"CREATE NAMESPACE $c.db")
       spark.sql(s"CREATE TABLE $c.db.t (k BIGINT, v DOUBLE)")
       spark.sql(s"INSERT INTO $c.db.t VALUES (1, 1.0), (2, 2.0)")
-      org.apache.spark.sql.graft.GraftFunctions.register(spark)
       Seq((1L, 9.0)).toDF("k", "v").createOrReplaceTempView("err_src")
       // conditional branch → named unsupported shape
       val e1 = intercept[UnsupportedOperationException] {

@@ -40,6 +40,23 @@ class InfraSpec extends SparkSpec {
     assert(om.readTree(t2).get("healed").asInt() === 1)
   }
 
+  test("OpCache.memo builds once under concurrent first access; clear drops it") {
+    val ns = spark.newSession() // own session: its clear touches no other spec
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def get(): Int = graft.ops.OpCache.memo(ns, "/memo", "k") {
+      Thread.sleep(50); builds.incrementAndGet()
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val got = (1 to 8).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Int] { def call(): Int = get() }))
+      assert(got.map(_.get()).toSet === Set(1))
+    } finally pool.shutdown()
+    assert(builds.get() === 1)
+    graft.ops.OpCache.clear(ns)
+    assert(get() === 2, "clear must drop the memo so the next call rebuilds")
+  }
+
   test("versioned table: snapshot isolation, time travel, atomic manifests") {
     import graft.sources.VersionedTable
     withTmpDir("graft_vtable") { base =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -12,6 +12,21 @@ class OperatorGoldenSpec extends SparkSpec {
 
   private def run(name: String) =
     SparkEntry.queries(name)(spark, sf)
+
+  /** Collect `df` with the session's DotProductRewrite rule excluded,
+    * so a composed reference side stays composed instead of being fused
+    * into the native expression it is checked against. Fails if
+    * `native` still appears in the reference's optimized plan. */
+  private def unrewritten(native: String)(df: => DataFrame): Array[Row] = {
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, "graft.plans.DotProductRewrite")
+    try {
+      val d = df
+      val plan = d.queryExecution.optimizedPlan.toString
+      assert(!plan.contains(native), s"reference side was rewritten:\n$plan")
+      d.collect()
+    } finally spark.conf.unset(excluded)
+  }
 
   test("every declared query runs non-empty on sf0.001") {
     // near-dup pairs don't exist in the tiny corpus; every sf0.001
@@ -201,11 +216,12 @@ class OperatorGoldenSpec extends SparkSpec {
       zip_with($"embedding", $"embedding",
         (a, b) => a.cast("double") * b.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-    val diff = e.select(
-      graft.functions.DotProductF.dot($"embedding", $"embedding").as("native"),
-      hof.as("hof"))
-      .filter($"native" =!= $"hof") // bit-exact equality required
-    assert(diff.count() === 0)
+    val native = e.select($"vec_id",
+      graft.functions.DotProductF.dot($"embedding", $"embedding").as("d"))
+      .orderBy($"vec_id").collect().toSeq
+    val reference = unrewritten("dot_product_f")(
+      e.select($"vec_id", hof.as("d")).orderBy($"vec_id"))
+    assert(native === reference.toSeq) // bit-exact equality required
   }
 
   test("native expressions mirror HOF null semantics (length mismatch / null element)") {
@@ -227,7 +243,6 @@ class OperatorGoldenSpec extends SparkSpec {
         |  array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT)),
         |  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (a, v) -> a + v) AS hof
         |""".stripMargin)
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val nativeNull = spark.sql(
       """SELECT dot_product_f(array(CAST(1.0 AS FLOAT), NULL),
         |  array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT))) AS dp""".stripMargin)
@@ -241,17 +256,19 @@ class OperatorGoldenSpec extends SparkSpec {
     val b = e.select($"vec_id".as("b_id"), $"embedding".as("eb"))
     def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
       graft.functions.DotProductF.dot(x, y)
-    val diff = a.join(b, $"a_id" < $"b_id")
-      .select(
-        graft.functions.CosineSimF.cosine($"ea", $"eb").as("fused"),
+    val pairs = a.join(b, $"a_id" < $"b_id")
+    val fused = pairs.select($"a_id", $"b_id",
+        graft.functions.CosineSimF.cosine($"ea", $"eb").as("cos"))
+      .orderBy($"a_id", $"b_id").collect().toSeq
+    val composed = unrewritten("cosine_sim_f")(pairs.select($"a_id", $"b_id",
         (dot($"ea", $"eb") / (sqrt(dot($"ea", $"ea")) * sqrt(dot($"eb", $"eb"))))
-          .as("composed"))
-      .filter($"fused" =!= $"composed") // bit-exact equality required
-    assert(diff.count() === 0)
+          .as("cos"))
+      .orderBy($"a_id", $"b_id"))
+    assert(fused.nonEmpty)
+    assert(fused === composed.toSeq) // bit-exact equality required
   }
 
   test("dot_product_f is SQL-callable after registration") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     Tables.t(spark, sf, "embeddings").limit(5)
       .createOrReplaceTempView("emb_sql_test")
     val rows = spark.sql(
@@ -262,7 +279,6 @@ class OperatorGoldenSpec extends SparkSpec {
   }
 
   test("cosine_sim_f yields NULL (not NaN) on zero-norm and empty inputs") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT
         |  cosine_sim_f(array(CAST(0.0 AS FLOAT), CAST(0.0 AS FLOAT)),
@@ -298,7 +314,6 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(gen === builtin,
       "custom Generator must emit exactly the built-in composition's rows")
     // shorter-than-k and SQL-callable paths
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val sqlRows = spark.sql(
       """SELECT s.pos, s.shingle
         |FROM (SELECT array('a','b','c') AS w) t
@@ -319,7 +334,6 @@ class OperatorGoldenSpec extends SparkSpec {
   }
 
   test("native expressions reject non-float-array inputs at analysis time") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     // array<double> would be read with getFloat (bit-reinterpreted
     // garbage under codegen) — must fail analysis, not produce numbers
     for (fn <- Seq("dot_product_f", "cosine_sim_f")) {
@@ -919,125 +933,102 @@ class OperatorGoldenSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites HOF dot-product into native expression") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.DotProductRewrite
-    try {
-      val hofDf = Tables.t(spark, sf, "embeddings").limit(50)
-        .select($"vec_id",
-          aggregate(
-            zip_with($"embedding", $"embedding",
-              (a, b) => a.cast("double") * b.cast("double")),
-            lit(0.0), (acc, v) => acc + v).as("d"))
-      val optimized = hofDf.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("dot_product_f"),
-        s"rule did not fire:\n$optimized")
-      // and values are unchanged
-      val native = Tables.t(spark, sf, "embeddings").limit(50)
-        .select($"vec_id",
-          graft.functions.DotProductF.dot($"embedding", $"embedding").as("d"))
-      assert(hofDf.orderBy($"vec_id").collect().toSeq ===
-        native.orderBy($"vec_id").collect().toSeq)
-    } finally spark.experimental.extraOptimizations = prev
+    def hofDf = Tables.t(spark, sf, "embeddings").limit(50)
+      .select($"vec_id",
+        aggregate(
+          zip_with($"embedding", $"embedding",
+            (a, b) => a.cast("double") * b.cast("double")),
+          lit(0.0), (acc, v) => acc + v).as("d"))
+    val optimized = hofDf.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("dot_product_f"),
+      s"rule did not fire:\n$optimized")
+    // and values are unchanged: the rewritten HOF against the HOF
+    // evaluated as written
+    val reference = unrewritten("dot_product_f")(hofDf.orderBy($"vec_id"))
+    assert(hofDf.orderBy($"vec_id").collect().toSeq === reference.toSeq)
   }
 
   test("optimizer rule rewrites the L2 self-product transform pattern") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.DotProductRewrite
-    try {
-      val hofDf = Tables.t(spark, sf, "embeddings").limit(50)
-        .select($"vec_id",
-          aggregate(
-            transform($"embedding", x => x.cast("double") * x.cast("double")),
-            lit(0.0), (acc, v) => acc + v).as("d"))
-      val optimized = hofDf.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("dot_product_f"),
-        s"L2 rule did not fire:\n$optimized")
-      val native = Tables.t(spark, sf, "embeddings").limit(50)
-        .select($"vec_id",
-          graft.functions.DotProductF.dot($"embedding", $"embedding").as("d"))
-      assert(hofDf.orderBy($"vec_id").collect().toSeq ===
-        native.orderBy($"vec_id").collect().toSeq)
-    } finally spark.experimental.extraOptimizations = prev
+    def hofDf = Tables.t(spark, sf, "embeddings").limit(50)
+      .select($"vec_id",
+        aggregate(
+          transform($"embedding", x => x.cast("double") * x.cast("double")),
+          lit(0.0), (acc, v) => acc + v).as("d"))
+    val optimized = hofDf.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("dot_product_f"),
+      s"L2 rule did not fire:\n$optimized")
+    val reference = unrewritten("dot_product_f")(hofDf.orderBy($"vec_id"))
+    assert(hofDf.orderBy($"vec_id").collect().toSeq === reference.toSeq)
   }
 
   test("optimizer rule fuses the composed cosine into cosine_sim_f") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.DotProductRewrite
-    try {
-      val e = Tables.t(spark, sf, "embeddings").limit(40)
-      val a = e.select($"vec_id".as("a_id"), $"embedding".as("ea"))
-      val b = e.select($"vec_id".as("b_id"), $"embedding".as("eb"))
-      def hofDot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-          lit(0.0), (acc, v) => acc + v)
-      // user writes the composed HOF cosine; the rule must fuse the
-      // whole thing (HOF → dot_product_f → cosine_sim_f) in one pass
-      val composed = a.join(b, $"a_id" < $"b_id")
-        .select($"a_id", $"b_id",
-          (hofDot($"ea", $"eb") /
-            (sqrt(hofDot($"ea", $"ea")) * sqrt(hofDot($"eb", $"eb"))))
-            .as("cos"))
-      val optimized = composed.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("cosine_sim_f"),
-        s"cosine fusion did not fire:\n$optimized")
-      // and bit-exact vs the native form
-      val native = a.join(b, $"a_id" < $"b_id")
-        .select($"a_id", $"b_id",
-          graft.functions.CosineSimF.cosine($"ea", $"eb").as("cos"))
-      assert(composed.orderBy($"a_id", $"b_id").collect().toSeq ===
-        native.orderBy($"a_id", $"b_id").collect().toSeq)
-    } finally spark.experimental.extraOptimizations = prev
+    val e = Tables.t(spark, sf, "embeddings").limit(40)
+    val a = e.select($"vec_id".as("a_id"), $"embedding".as("ea"))
+    val b = e.select($"vec_id".as("b_id"), $"embedding".as("eb"))
+    def hofDot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
+      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
+        lit(0.0), (acc, v) => acc + v)
+    // user writes the composed HOF cosine; the rule must fuse the
+    // whole thing (HOF → dot_product_f → cosine_sim_f) in one pass
+    def composed = a.join(b, $"a_id" < $"b_id")
+      .select($"a_id", $"b_id",
+        (hofDot($"ea", $"eb") /
+          (sqrt(hofDot($"ea", $"ea")) * sqrt(hofDot($"eb", $"eb"))))
+          .as("cos"))
+    val optimized = composed.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("cosine_sim_f"),
+      s"cosine fusion did not fire:\n$optimized")
+    // and bit-exact vs the composed HOF evaluated as written
+    val reference =
+      unrewritten("cosine_sim_f")(composed.orderBy($"a_id", $"b_id"))
+    assert(composed.orderBy($"a_id", $"b_id").collect().toSeq ===
+      reference.toSeq)
   }
 
   test("fused cosine preserves ANSI divide-by-zero on zero-norm rows") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.DotProductRewrite
-    try {
-      def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        graft.functions.DotProductF.dot(x, y)
-      // zero vector DERIVED from a column (a literal one would be
-      // constant-folded — and thrown on — before this rule ever runs)
-      val zero = Tables.t(spark, sf, "embeddings").limit(1)
-        .select(transform($"embedding", _ => lit(0.0f)).as("a"),
-          $"embedding".as("b"))
-      val composed = zero.select(
-        (dot($"a", $"b") / (sqrt(dot($"a", $"a")) * sqrt(dot($"b", $"b"))))
-          .as("cos"))
-      assert(composed.queryExecution.optimizedPlan.toString.contains("cosine_sim_f"))
-      // the session runs ANSI: the un-fused divide would throw, so the
-      // fused expression must too (the executor wraps it in
-      // SparkException — walk the cause chain)
-      val e = intercept[Exception] { composed.collect() }
-      def causes(t: Throwable): List[Throwable] =
-        if (t == null) Nil else t :: causes(t.getCause)
+    def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
+      graft.functions.DotProductF.dot(x, y)
+    // zero vector DERIVED from a column (a literal one would be
+    // constant-folded — and thrown on — before this rule ever runs)
+    val zero = Tables.t(spark, sf, "embeddings").limit(1)
+      .select(transform($"embedding", _ => lit(0.0f)).as("a"),
+        $"embedding".as("b"))
+    def composed = zero.select(
+      (dot($"a", $"b") / (sqrt(dot($"a", $"a")) * sqrt(dot($"b", $"b"))))
+        .as("cos"))
+    assert(composed.queryExecution.optimizedPlan.toString.contains("cosine_sim_f"))
+    // the session runs ANSI: the un-fused divide throws, so the fused
+    // expression must too (the executor wraps it in SparkException —
+    // walk the cause chain)
+    def causes(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: causes(t.getCause)
+    for ((side, e) <- Seq(
+        "fused" -> intercept[Exception] { composed.collect() },
+        "un-fused" -> intercept[Exception] {
+          unrewritten("cosine_sim_f")(composed) }))
       assert(causes(e).exists(_.isInstanceOf[ArithmeticException]),
-        s"expected an ArithmeticException in the cause chain, got $e")
-    } finally spark.experimental.extraOptimizations = prev
+        s"$side: expected an ArithmeticException in the cause chain, got $e")
   }
 
   test("optimizer rule does NOT fire on double arrays or uncast floats") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.DotProductRewrite
-    try {
-      // array<double> input: DotProductF reads getFloat — must not fire
-      val dblDf = Tables.t(spark, sf, "embeddings").limit(10)
-        .select(transform($"embedding", x => x.cast("double")).as("emb_d"))
-        .select(
-          aggregate(
-            zip_with($"emb_d", $"emb_d",
-              (a, b) => a.cast("double") * b.cast("double")),
-            lit(0.0), (acc, v) => acc + v).as("d"))
-      assert(!dblDf.queryExecution.optimizedPlan.toString.contains("dot_product_f"),
-        "rule must not fire on array<double> inputs")
-      // uncast float product: per-element float rounding — must not fire
-      val fltDf = Tables.t(spark, sf, "embeddings").limit(10)
-        .select(
-          aggregate(
-            zip_with($"embedding", $"embedding", (a, b) => a * b),
-            lit(0.0).cast("float"), (acc, v) => acc + v).as("d"))
-      assert(!fltDf.queryExecution.optimizedPlan.toString.contains("dot_product_f"),
-        "rule must not fire on uncast float products")
-    } finally spark.experimental.extraOptimizations = prev
+    // array<double> input: DotProductF reads getFloat — must not fire
+    val dblDf = Tables.t(spark, sf, "embeddings").limit(10)
+      .select(transform($"embedding", x => x.cast("double")).as("emb_d"))
+      .select(
+        aggregate(
+          zip_with($"emb_d", $"emb_d",
+            (a, b) => a.cast("double") * b.cast("double")),
+          lit(0.0), (acc, v) => acc + v).as("d"))
+    assert(!dblDf.queryExecution.optimizedPlan.toString.contains("dot_product_f"),
+      "rule must not fire on array<double> inputs")
+    // uncast float product: per-element float rounding — must not fire
+    val fltDf = Tables.t(spark, sf, "embeddings").limit(10)
+      .select(
+        aggregate(
+          zip_with($"embedding", $"embedding", (a, b) => a * b),
+          lit(0.0).cast("float"), (acc, v) => acc + v).as("d"))
+    assert(!fltDf.queryExecution.optimizedPlan.toString.contains("dot_product_f"),
+      "rule must not fire on uncast float products")
   }
 
   test("HLL register sketch estimates distinct users within 20%") {

@@ -675,4 +675,41 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty,
       offenders.map { case (k, v) => s"$k: $v" }.mkString("\n"))
   }
+
+  test("NSW build: the seed cell fold runs on the wide vec_id repartition") {
+    // Dedup.nswGraphOn spreads the cached corpus by vec_id before the
+    // 16-center fold, so the fold runs in 2p-wide stages on BOTH seed
+    // self-join branches. Under this config the two vec_id exchanges
+    // are not reused (see the comment there); a line with a reused
+    // exchange still names the partitioning, so the count of 2 holds
+    // either way. The build runs in localCheckpoint jobs, not in the
+    // query's own plan, so its plans come from an execution listener.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    graft.ops.OpCache.clear(spark) // the graph must be built, not reused
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q_sim_hnsw_topk")(spark, sf).count()
+      val seed = eventually(timeout(30.seconds)) {
+        val found = plans.asScala.find(_.contains("hashpartitioning(gcell"))
+        assert(found.isDefined, "seed build plan not captured")
+        found.get
+      }
+      // the final (adaptive) plan comes before the == Initial Plan ==
+      val fin = seed.linesIterator.takeWhile(!_.contains("Initial Plan"))
+      assert(fin.count(_.contains("hashpartitioning(vec_id")) === 2, seed)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.ops.OpCache.clear(spark)
+    }
+  }
 }
