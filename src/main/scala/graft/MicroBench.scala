@@ -72,7 +72,7 @@ object MicroBench {
 
     // ---- native EXECS vs window/join compositions (r10 item #6) ----
     // As of round 12 all three custom execs implement CodegenSupport
-    // (as-of/sessionize/band-sweep fuse their merge loops into the
+    // (as-of/sessionize/band-probe fuse their merge loops into the
     // stage; the broadcast band exec fuses probe-side like a
     // BroadcastHashJoin), so these sections now record what fusion
     // bought against the composed window/join plans on data big
@@ -131,9 +131,8 @@ object MicroBench {
     sess.unpersist()
 
     // band join, two honest shapes (the *_sweep keys measure the
-    // NATIVE shuffled band exec under its default form — since round
-    // 14 that is the radix-sorted PROBE; key names kept for
-    // cross-round comparability):
+    // NATIVE shuffled band exec — since round 14 the radix-sorted
+    // PROBE; key names kept for cross-round comparability):
     //  (a) BIG right (2M, above threshold): composed hash+filter vs
     //      the native shuffled exec — the at-scale path;
     //  (b) SMALL right (100k, ~2 MB, below threshold) against a 2M
@@ -192,7 +191,7 @@ object MicroBench {
     // at-scale case — neither side broadcastable, both plans shuffle
     // on the bin), values sparse enough (~2 matches per left) that
     // output volume doesn't drown the join cost being measured;
-    // composed explode+hash-join+filter vs the affine sweep.
+    // composed explode+hash-join+filter vs the affine native exec.
     val delta = 500.0
     val abinW = 1000.0
     val ivLeft = spark.range(0, 2000000L, 1L, cpus)
@@ -213,19 +212,12 @@ object MicroBench {
     }
     // "interval_sweep" keys the NATIVE shuffled band exec for
     // cross-round comparability — since round 14 that is the PROBE
-    // form (bin-only radix sorts + per-bin value index); the original
-    // two-key sort-merge sweep stays measurable under its conf and is
-    // reported as interval_sweep_twokey (the occupancy-choice evidence:
-    // probe wins on sort cost, sweep wins on window memory)
+    // form (bin-only radix sorts + per-bin value index)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    def timedInterval() = timeMin(3) {
+    val intervalSweep = timeMin(3) {
       GraftFunctions.bandJoinOffset(ivLeft, "lv", ivRight, "rv",
         -delta, delta, abinW).agg(count(lit(1))).collect()
     }
-    val intervalSweep = timedInterval()
-    spark.conf.set("spark.graft.bandJoin.shuffledExec", "sweep")
-    val intervalSweepTwoKey = timedInterval()
-    spark.conf.unset("spark.graft.bandJoin.shuffledExec")
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     ivLeft.unpersist(); ivRight.unpersist()
 
@@ -245,8 +237,7 @@ object MicroBench {
       s""""band_small_sweep":${d3(bandSmallSweep)},""" +
       s""""band_small_broadcast":${d3(bandSmallBroadcast)},""" +
       s""""interval_composed":${d3(intervalComposed)},""" +
-      s""""interval_sweep":${d3(intervalSweep)},""" +
-      s""""interval_sweep_twokey":${d3(intervalSweepTwoKey)}}""")
+      s""""interval_sweep":${d3(intervalSweep)}}""")
     spark.stop()
   }
 }

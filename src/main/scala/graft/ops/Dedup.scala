@@ -1036,29 +1036,32 @@ object Dedup extends OpModule {
     import s.implicits._
     val truth = simTopkCosine(s, dir)
       .select($"probe_id", $"nbr_id").persist()
-    // one index build, forced BEFORE the legs fork (Par caller contract)
-    val (centers, corpus) = ivfIndex(s, dir)
-    // the five nprobe points are independent searches over the frozen
-    // index — overlapped driver jobs (guide §2.6), results in input
-    // order so the output is the exact sequential composition
-    val legRows = Par.map(Seq(1, 2, 4, 8, 16)) { np =>
-      // ONE candidate materialization per point: the budget count
-      // (round 13 — the equal-budget axis the graph-ANN laws compare
-      // against) and the scoring both read the persisted frame
-      val cand = ivfCandidates(s, centers, corpus, np).persist()
-      val budget = cand.count()
-      val got = ivfSearchFrom(s, cand).select($"probe_id", $"nbr_id")
-      val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
-      cand.unpersist(blocking = false)
-      (np, budget, matched)
-    }
-    val nTruth = truth.count()
-    truth.unpersist(blocking = false)
-    val rows = legRows.map { case (np, budget, matched) =>
-      (np, budget, matched, nTruth, matched * 1000000L / nTruth)
-    }
-    rows.toDF("nprobe", "n_scored", "n_matched", "n_expected", "recall_ppm")
-      .orderBy($"nprobe")
+    // released on every path: a failing leg must not pin the truth
+    try {
+      // one index build, forced BEFORE the legs fork (Par caller contract)
+      val (centers, corpus) = ivfIndex(s, dir)
+      // the five nprobe points are independent searches over the frozen
+      // index — overlapped driver jobs (guide §2.6), results in input
+      // order so the output is the exact sequential composition
+      val legRows = Par.map(Seq(1, 2, 4, 8, 16)) { np =>
+        // ONE candidate materialization per point: the budget count
+        // (round 13 — the equal-budget axis the graph-ANN laws compare
+        // against) and the scoring both read the persisted frame
+        val cand = ivfCandidates(s, centers, corpus, np).persist()
+        try {
+          val budget = cand.count()
+          val got = ivfSearchFrom(s, cand).select($"probe_id", $"nbr_id")
+          val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
+          (np, budget, matched)
+        } finally cand.unpersist(blocking = false)
+      }
+      val nTruth = truth.count()
+      val rows = legRows.map { case (np, budget, matched) =>
+        (np, budget, matched, nTruth, matched * 1000000L / nTruth)
+      }
+      rows.toDF("nprobe", "n_scored", "n_matched", "n_expected", "recall_ppm")
+        .orderBy($"nprobe")
+    } finally truth.unpersist(blocking = false)
   }
 
   /** IVF-PQ retrieval with ASYMMETRIC-DISTANCE (ADC) scoring — the
@@ -1564,35 +1567,37 @@ object Dedup extends OpModule {
   def simHnswSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // the 10-probe truth top-10 is consumed by every sweep point (and
-    // its own count) — persist for the sweep's lifetime, released below
+    // its own count) — persist for the sweep's lifetime, released on
+    // every path in the finally below
     val truth = simTopkCosine(s, dir).select($"probe_id", $"nbr_id")
       .persist()
-    // the shared index (coarse quantizer, cell assignment, NSW
-    // adjacency) is built once here and handed to every beam leg
-    val (centers, corpus) = ivfIndex(s, dir)
-    val graph = nswGraph(s, dir)
-    // the three beam widths are INDEPENDENT searches over the same
-    // frozen index — run them as overlapped driver jobs (guide §2.6);
-    // Par.map keeps input order, so the output rows are the exact
-    // sequential rows. nTruth rides leg 0 alongside the narrowest beam.
-    val legRows = Par.map(Seq(2, 4, 8)) { bw =>
-      val (visited, budget) =
-        nswVisitedFrom(s, centers, corpus, graph, bw, rounds = 3)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy($"probe_id")
-        .orderBy($"sim4".desc, $"nbr_id".asc)
-      val got = visited.withColumn("r", row_number().over(w))
-        .filter($"r" <= 10).select($"probe_id", $"nbr_id")
-      val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
-      (bw, budget(), matched)
-    }
-    val nTruth = truth.count()
-    truth.unpersist(blocking = false)
-    val rows = legRows.map { case (bw, budget, matched) =>
-      (bw, budget, matched, nTruth, matched * 1000000L / nTruth)
-    }
-    rows.toDF("beam", "n_scored", "n_matched", "n_expected", "recall_ppm")
-      .orderBy($"beam")
+    try {
+      // the shared index (coarse quantizer, cell assignment, NSW
+      // adjacency) is built once here and handed to every beam leg
+      val (centers, corpus) = ivfIndex(s, dir)
+      val graph = nswGraph(s, dir)
+      // the three beam widths are INDEPENDENT searches over the same
+      // frozen index — run them as overlapped driver jobs (guide §2.6);
+      // Par.map keeps input order, so the output rows are the exact
+      // sequential rows. nTruth rides leg 0 alongside the narrowest beam.
+      val legRows = Par.map(Seq(2, 4, 8)) { bw =>
+        val (visited, budget) =
+          nswVisitedFrom(s, centers, corpus, graph, bw, rounds = 3)
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy($"probe_id")
+          .orderBy($"sim4".desc, $"nbr_id".asc)
+        val got = visited.withColumn("r", row_number().over(w))
+          .filter($"r" <= 10).select($"probe_id", $"nbr_id")
+        val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
+        (bw, budget(), matched)
+      }
+      val nTruth = truth.count()
+      val rows = legRows.map { case (bw, budget, matched) =>
+        (bw, budget, matched, nTruth, matched * 1000000L / nTruth)
+      }
+      rows.toDF("beam", "n_scored", "n_matched", "n_expected", "recall_ppm")
+        .orderBy($"beam")
+    } finally truth.unpersist(blocking = false)
   }
 
   /** MLlib random-projection LSH ANN — approx, seeded; ScalaTest checks

@@ -156,13 +156,11 @@ object Joins extends OpModule {
     * custom logical node + strategy + execs, the engine's third
     * whole-operator plan): identical binning and identical oracle
     * text, but the per-bin generic join + post-BETWEEN-filter is
-    * replaced by a native band exec — since round 14 the default
-    * shuffled form is the radix-sorted per-bin PROBE (binary search
-    * per left row, no candidate over-emission); the O(band-occupancy)
-    * sort-merge sweep stays conf-selectable for skewed bins, and a
-    * bounded right side broadcasts. Hash-graded against the same
-    * DuckDB SQL as the composition, so the two engines pin each
-    * other. */
+    * replaced by a native band exec — a bounded right side
+    * broadcasts, otherwise both sides shuffle on the bin into the
+    * radix-sorted per-bin PROBE (binary search per left row, no
+    * candidate over-emission). Hash-graded against the same DuckDB SQL
+    * as the composition, so the two engines pin each other. */
   def joinRangeNative(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val part = Tables.t(s, dir, "part")
@@ -206,13 +204,13 @@ object Joins extends OpModule {
     * time keys ([[graft.plans.BandJoinStrategy]] with factors 1 and
     * offsets ∓3.6e9 µs): both sides bin by 2 h of time — bin width =
     * band width, so each error lands in ≤ 2 bins — and the native
-    * exec's per-bin index/window IS the ±1 h predicate. Candidates =
+    * exec's per-bin value index IS the ±1 h predicate. Candidates =
     * band occupancy, never |errors|×|purchases|; at 100 TB the only
     * movement is one time-binned shuffle per side (or a broadcast
-    * when one side is bounded), and a hot bin costs its own band
-    * occupancy, not |bin|². µs offsets are exact in DOUBLE (month
-    * span ≪ 2^53), so the boundary semantics are bit-identical to
-    * the oracle's timestamp BETWEEN. */
+    * when one side is bounded), and a hot bin costs its own
+    * occupancy (one band wide), not |bin|². µs offsets are exact in
+    * DOUBLE (month span ≪ 2^53), so the boundary semantics are
+    * bit-identical to the oracle's timestamp BETWEEN. */
   def joinIntervalEvents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.t(s, dir, "events")

@@ -575,7 +575,13 @@ object MlOps extends OpModule {
     // a·n and percent_rank = (rank−1)/(n−1) — the same integers, the
     // same one IEEE division, hence bit-identical pr_r/pr_f/pr_m. One
     // binning pass + one bin-partitioned window + one pivot replace
-    // three of each plus three custkey join-backs.
+    // three of each plus three custkey join-backs. PRECONDITION: every
+    // v is non-null (all three are aggregates over non-empty
+    // per-custkey groups). A NULL v would make __bo null, and
+    // withGlobalRn's join on the bin column would drop that row after
+    // ranking while __n still counts 3N, shifting every axis offset —
+    // a schema change that admits NULLs must handle them before the
+    // union.
     val longDf = labeled.select($"o_custkey", lit(0L).as("axis"),
         (-$"recency_days").cast("double").as("v"))
       .unionByName(labeled.select($"o_custkey", lit(1L).as("axis"),

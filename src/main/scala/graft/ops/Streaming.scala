@@ -60,23 +60,29 @@ object Streaming extends OpModule {
     * partition per batch — measured 2.0 s / 2.8 s / 7.8 s for the same
     * stream-stream join at 2 / 8 / 32 partitions on this corpus), so
     * the count targets ~[[StreamBytesPerPartition]] of source bytes per
-    * partition, clamped to [2, defaultParallelism]. Operators override
-    * with `spark.graft.stream.statePartitions` — the knob a production
-    * checkpoint is sized with (the count is fixed for a checkpoint's
+    * partition, clamped to [2, defaultParallelism]. A table stored as
+    * a directory (`events.parquet/part-*`) is sized by the regular
+    * files under it. A restarted stream keeps the count recorded in
+    * its checkpoint's offset metadata (fixed for the checkpoint's
     * lifetime). Results are partition-count invariant (asserted across
     * the suite's restarts; only layout changes). */
   private val StreamBytesPerPartition = 16L * 1024 * 1024
-  private def streamParts(s: SparkSession, dir: String): String =
-    s.conf.getOption("spark.graft.stream.statePartitions").getOrElse {
-      val bytes =
-        try java.nio.file.Files.size(
-          java.nio.file.Paths.get(dir, "events.parquet"))
-        catch { case _: Exception => 0L }
-      val want = (bytes + StreamBytesPerPartition - 1) /
-        StreamBytesPerPartition
-      math.max(2L, math.min(s.sparkContext.defaultParallelism.toLong,
-        want)).toString
-    }
+  private[graft] def streamParts(s: SparkSession, dir: String): String = {
+    import java.nio.file.{FileVisitOption, Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val bytes =
+      try {
+        val walk = Files.walk(Paths.get(dir, "events.parquet"),
+          FileVisitOption.FOLLOW_LINKS)
+        try walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(Files.size(_)).sum
+        finally walk.close()
+      } catch { case _: Exception => 0L }
+    val want = (bytes + StreamBytesPerPartition - 1) /
+      StreamBytesPerPartition
+    math.max(2L, math.min(s.sparkContext.defaultParallelism.toLong,
+      want)).toString
+  }
 
   /** Run a streaming aggregation to exhaustion, return the final table.
     *
@@ -87,7 +93,7 @@ object Streaming extends OpModule {
     * a concurrent batch query on the main session can no longer observe
     * the reduced partition count or clobber/get clobbered by a restore
     * (round-2 advisor flag). The count itself comes from
-    * [[streamParts]] (input-sized, conf-overridable).
+    * [[streamParts]] (input-sized).
     *
     * The memory-sink temp view is dropped immediately: the returned
     * DataFrame's resolved plan pins the sink rows for its own lifetime,

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport,
   SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import ExecCodegen.ordinal
 
 /** Whole-operator custom plan: backward as-of join — the §2.C stretch
   * rung of the custom-operator ladder (logical node + SparkStrategy +
@@ -127,15 +128,10 @@ case class AsOfJoinExec(
   override def needCopyResult: Boolean = true
 
   override protected def doProduce(ctx: CodegenContext): String = {
-    def ordinal(attrs: Seq[Attribute], a: Attribute, side: String): Int = {
-      val i = attrs.indexWhere(_.exprId == a.exprId)
-      require(i >= 0, s"as-of $side column ${a.name} not in child output")
-      i
-    }
-    val lkIdx = ordinal(left.output, leftKey, "left key")
-    val ltIdx = ordinal(left.output, leftTs, "left ts")
-    val rkIdx = ordinal(right.output, rightKey, "right key")
-    val rtIdx = ordinal(right.output, rightTs, "right ts")
+    val lkIdx = ordinal(left.output, leftKey, "as-of left key")
+    val ltIdx = ordinal(left.output, leftTs, "as-of left ts")
+    val rkIdx = ordinal(right.output, rightKey, "as-of right key")
+    val rtIdx = ordinal(right.output, rightTs, "as-of right ts")
     val leftInput = ctx.addMutableState("scala.collection.Iterator",
       "asofLeftInput", v => s"$v = inputs[0];")
     val rightInput = ctx.addMutableState("scala.collection.Iterator",
@@ -187,15 +183,10 @@ case class AsOfJoinExec(
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
-    def ordinal(attrs: Seq[Attribute], a: Attribute, side: String): Int = {
-      val i = attrs.indexWhere(_.exprId == a.exprId)
-      require(i >= 0, s"as-of $side column ${a.name} not in child output")
-      i
-    }
-    val lkIdx = ordinal(left.output, leftKey, "left key")
-    val ltIdx = ordinal(left.output, leftTs, "left ts")
-    val rkIdx = ordinal(right.output, rightKey, "right key")
-    val rtIdx = ordinal(right.output, rightTs, "right ts")
+    val lkIdx = ordinal(left.output, leftKey, "as-of left key")
+    val ltIdx = ordinal(left.output, leftTs, "as-of left ts")
+    val rkIdx = ordinal(right.output, rightKey, "as-of right key")
+    val rtIdx = ordinal(right.output, rightTs, "as-of right ts")
     val rightWidth = right.output.size
     val outAttrs = output
     val numOutputRows = longMetric("numOutputRows")

@@ -14,36 +14,26 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport,
   SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
+import ExecCodegen.ordinal
 
 /** Whole-operator custom plan #3: the BAND JOIN — the inner range join
   * `rightVal BETWEEN leftVal*loFactor AND leftVal*hiFactor`, executed
   * natively instead of the composed shape's per-bin generic join +
-  * post-filter (`q_join_range_binned`, `ops/Joins.scala`). Three
-  * physical forms — broadcast, PROBE (the round-14 shuffled default:
-  * bin-only radix sorts + a per-bin value index), and the SORT-MERGE
-  * SWEEP (two-key sort, O(band-occupancy) window memory) — selected by
-  * [[BandJoinStrategy]]; the tradeoff lives on the strategy's scaladoc.
+  * post-filter (`q_join_range_binned`, `ops/Joins.scala`). Two
+  * physical forms — BROADCAST (a bounded right side, indexed once per
+  * executor) and PROBE (both sides shuffled on the bin: bin-only radix
+  * sorts + a per-bin value index) — selected by [[BandJoinStrategy]]
+  * from the right side's estimated size.
   *
   * Distribution contract (shared with the composition — it is the
   * correct 100-TB shape): the caller bins both sides by value
   * (`GraftFunctions.bandJoin` builds the bin columns — the left row
   * replicated into every fixed-width bin its band overlaps, the right
   * row keyed by its single home bin), and a matching pair meets exactly
-  * once, in the right row's home bin. Both shuffled forms require each
+  * once, in the right row's home bin. The shuffled form requires each
   * side hash-clustered on its bin (EnsureRequirements plans the
-  * exchanges and spill-aware sorts, AQE still coalesces/splits them).
-  * The SWEEP form additionally requires (bin, value) order and then:
-  *
-  *  - the right cursor advances through each bin ONCE, appending rows
-  *    with value ≤ the current left's hi bound to a window buffer and
-  *    pruning rows below the current lo bound from its head (both
-  *    bounds are monotone in the left's value, which is the sort key);
-  *  - every buffered row IS a match — the BETWEEN predicate is
-  *    enforced by the buffer bounds, so there is no candidate
-  *    over-emission and no post-join filter;
-  *  - memory is O(max rows inside one band) per partition — the band
-  *    occupancy, strictly smaller than the probe/hash forms' O(rows
-  *    per bin) buffer (bin width ≥ band width by construction).
+  * exchanges and spill-aware sorts, AQE still coalesces/splits them);
+  * the broadcast form streams the left side untouched.
   *
   * Contract: bin columns BIGINT, value columns DOUBLE,
   * 0 ≤ loFactor ≤ hiFactor, values non-negative (multiplicative bands
@@ -57,18 +47,18 @@ import org.apache.spark.sql.internal.SQLConf
   * `rightVal BETWEEN leftVal−Δ AND leftVal+Δ` — the true temporal
   * interval join on packed time keys (`q_join_interval_events`),
   * where a multiplicative band cannot express a constant-width
-  * window. Monotonicity of both bounds in `leftVal` — the sweep's
-  * correctness precondition — is preserved: an affine map with
-  * non-negative factor is monotone. The non-negative-values contract
-  * applies only to FLIPPING (loFactor < hiFactor) bands; an
-  * equal-factor band has constant width for any value, so negative
-  * values are legitimate on both sides (both execs guard
-  * accordingly — round-13 review fix).
+  * window. The non-negative-values contract applies only to FLIPPING
+  * (loFactor < hiFactor) bands; an equal-factor band has constant
+  * width for any value, so negative values are legitimate on both
+  * sides (both execs guard accordingly — round-13 review fix).
   *
   * At 100 TB: one shuffle per side on the bin key (the range join's
-  * inherent cost — same movement as the composition), then linear merge
-  * work per partition; a skewed bin costs its own band occupancy,
-  * never |bin|² hash-probe emission.
+  * inherent cost — same movement as the composition), then per-task
+  * memory of one bin's right rows and O(log bin + matches) work per
+  * left row, never |bin|² hash-probe emission. The caller keeps that
+  * bin small by sizing `binWidth` near the widest band (see
+  * `GraftFunctions.bandJoin`); a hot spot of identical values falls
+  * inside one band and is buffered whole by any exact form.
   */
 case class BandJoinPlan(
     left: LogicalPlan,
@@ -90,31 +80,20 @@ case class BandJoinPlan(
 /** Plans [[BandJoinPlan]] as [[BandJoinBroadcastExec]] when the right
   * side's estimated size clears the session's broadcast threshold
   * (`spark.sql.autoBroadcastJoinThreshold`, same knob and semantics as
-  * the built-in join selection — -1 disables), else as one of TWO
-  * shuffled forms (round 14, r13 verdict item #6), selected by
-  * `spark.graft.bandJoin.shuffledExec`:
-  *
-  *  - `probe` (default) — [[BandJoinProbeExec]]: both sides sorted by
-  *    BIN ONLY (a single BIGINT key, so Spark's SortExec takes its
-  *    RADIX fast path — measured 1.6× faster than the two-key
-  *    comparator sort on 2M+4M rows, the whole gap to the composed
-  *    hash form), each bin's right rows indexed in-memory and
-  *    binary-searched per left row. Memory O(max bin occupancy) per
-  *    task — the same bound the generic SortMergeJoin's per-key match
-  *    buffer pays — but per-left-row work is O(log bin + matches),
-  *    never the generic join's O(bin) filter scan.
-  *  - `sweep` — [[BandJoinExec]]: both sides sorted (bin, value)
-  *    (two keys — comparator sort, no radix), the monotone window
-  *    sweep. Memory O(max BAND occupancy) per task, strictly below
-  *    the probe's bin bound — the robust choice when bin occupancy is
-  *    pathologically skewed relative to band width.
+  * the built-in join selection — -1 disables), else as the shuffled
+  * [[BandJoinProbeExec]]: both sides sorted by BIN ONLY (a single
+  * BIGINT key, so Spark's SortExec takes its RADIX fast path —
+  * measured 1.6× faster than a two-key comparator sort on 2M+4M
+  * rows), each bin's right rows indexed in memory and binary-searched
+  * per left row. Memory O(max bin occupancy) per task — the same bound
+  * the generic SortMergeJoin's per-key match buffer pays — but
+  * per-left-row work is O(log bin + matches), never the generic
+  * join's O(bin) filter scan.
   *
   * Both forms share the distribution contract, NULL/negative
   * semantics, and output (row order modulo ties in the right value);
   * the property specs pin bit-equality of the sorted outputs.
-  * Injected declaratively by `graft.GraftExtensions` and idempotently
-  * by the imperative builder
-  * (`org.apache.spark.sql.graft.GraftFunctions.bandJoin`). */
+  * Injected by `graft.GraftExtensions`. */
 object BandJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: BandJoinPlan =>
@@ -124,11 +103,6 @@ object BandJoinStrategy extends SparkStrategy {
           BandJoinBroadcastExec(planLater(p.left), planLater(p.right),
             p.leftBin, p.leftVal, p.rightBin, p.rightVal,
             p.loFactor, p.hiFactor, p.loOffset, p.hiOffset)
-        else if (SQLConf.get.getConfString(
-            "spark.graft.bandJoin.shuffledExec", "probe") == "sweep")
-          BandJoinExec(planLater(p.left), planLater(p.right), p.leftBin,
-            p.leftVal, p.rightBin, p.rightVal, p.loFactor, p.hiFactor,
-            p.loOffset, p.hiOffset)
         else
           BandJoinProbeExec(planLater(p.left), planLater(p.right),
             p.leftBin, p.leftVal, p.rightBin, p.rightVal,
@@ -150,17 +124,10 @@ class BandIndex(
     val starts: Array[Int],
     val values: Array[Double],
     val rows: Array[InternalRow]) extends Serializable {
-  /** Row range [start, end) of `bin`, or null when absent. */
-  def lookup(bin: Long): (Int, Int) = {
-    val i = java.util.Arrays.binarySearch(bins, bin)
-    if (i < 0) null
-    else (starts(i), if (i + 1 < bins.length) starts(i + 1) else rows.length)
-  }
-
-  /** Codegen-friendly probe: the emission range for `bin` with values
-    * ≥ `lo`, packed `(start << 32) | end` — -1 when the bin is absent.
-    * The index is shared across an executor's tasks (memoized per
-    * broadcast id), so the probe carries no mutable state. */
+  /** The emission range for `bin` with values ≥ `lo`, packed
+    * `(start << 32) | end` — -1 when the bin is absent. The index is
+    * shared across an executor's tasks (memoized per broadcast id), so
+    * the probe carries no mutable state. */
   def probe(bin: Long, lo: Double): Long = {
     val i = java.util.Arrays.binarySearch(bins, bin)
     if (i < 0) -1L
@@ -248,8 +215,8 @@ object BandJoinBroadcastExec {
   * BroadcastExchange), is indexed by home bin ONCE PER EXECUTOR (see
   * [[BandJoinBroadcastExec.index]]), and every left row
   * binary-searches its home bin for the first value ≥ its lo bound
-  * and emits until > hi. Same exactly-once contract as the sweep (a
-  * pair meets only in the right row's home bin, so the caller's
+  * and emits until > hi. Same exactly-once contract as the probe form
+  * (a pair meets only in the right row's home bin, so the caller's
   * left-side bin replication cannot double-emit) and the same
   * NULL/negative semantics. */
 case class BandJoinBroadcastExec(
@@ -269,13 +236,6 @@ case class BandJoinBroadcastExec(
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext,
       "number of output rows"))
-
-  private def ordinal(attrs: Seq[Attribute], a: Attribute,
-      side: String): Int = {
-    val i = attrs.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"band-join $side column ${a.name} not in child output")
-    i
-  }
 
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
@@ -307,10 +267,10 @@ case class BandJoinBroadcastExec(
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode],
       row: ExprCode): String = {
-    val lbEv = input(ordinal(left.output, leftBin, "left bin"))
-    val lvEv = input(ordinal(left.output, leftVal, "left value"))
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
+    val lbEv = input(ordinal(left.output, leftBin, "band-join left bin"))
+    val lvEv = input(ordinal(left.output, leftVal, "band-join left value"))
+    val rbIdx = ordinal(right.output, rightBin, "band-join right bin")
+    val rvIdx = ordinal(right.output, rightVal, "band-join right value")
     val bTerm = ctx.addReferenceObj("bandBroadcast",
       right.executeBroadcast[Array[InternalRow]](),
       "org.apache.spark.broadcast.Broadcast")
@@ -352,10 +312,10 @@ case class BandJoinBroadcastExec(
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val lbIdx = ordinal(left.output, leftBin, "left bin")
-    val lvIdx = ordinal(left.output, leftVal, "left value")
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
+    val lbIdx = ordinal(left.output, leftBin, "band-join left bin")
+    val lvIdx = ordinal(left.output, leftVal, "band-join left value")
+    val rbIdx = ordinal(right.output, rightBin, "band-join right bin")
+    val rvIdx = ordinal(right.output, rightVal, "band-join right value")
     val (loF, hiF) = (loFactor, hiFactor)
     val (loO, hiO) = (loOffset, hiOffset)
     val outAttrs = output
@@ -370,250 +330,16 @@ case class BandJoinBroadcastExec(
       lIter.flatMap { l =>
         if (l.isNullAt(lbIdx) || l.isNullAt(lvIdx) ||
             (dropNegatives && l.getDouble(lvIdx) < 0)) Iterator.empty
-        else idx.lookup(l.getLong(lbIdx)) match {
-          case null => Iterator.empty
-          case (start, end) =>
-            val lv = l.getDouble(lvIdx)
-            val lo = lv * loF + loO
-            val hi = lv * hiF + hiO
-            // first index in the bin's range with value >= lo
-            var a = start; var b = end
-            while (a < b) {
-              val m = (a + b) >>> 1
-              if (idx.values(m) < lo) a = m + 1 else b = m
-            }
-            Iterator.range(a, end)
-              .takeWhile(i => idx.values(i) <= hi)
-              .map { i => numOutputRows += 1; proj(joined(l, idx.rows(i))) }
-        }
-      }
-    }
-  }
-}
-
-/** Per-partition runtime state of the sort-merge sweep, hoisted out of
-  * [[BandJoinExec.doExecute]] so the generated whole-stage loop can
-  * drive the same O(band-occupancy) cursor/buffer logic through one
-  * virtual call per LEFT row (the per-match emission stays in
-  * generated code). Single-threaded per task — no synchronization.
-  *
-  * SPARSE-OCCUPANCY fixes (round 14, r13 verdict item #6 — the sweep
-  * measured 1.4× behind the composed hash form when few right rows
-  * match each band):
-  *  - SKIP-AHEAD: a right row whose value is already below the current
-  *    left's `lo` is never buffered — `lo` is monotone non-decreasing
-  *    in the left sort key (non-negative factor, the exec contract)
-  *    and a pair meets only in the right row's home bin, so such a row
-  *    can match neither this nor any later left row. The old code
-  *    copied EVERY in-bin row ≤ hi and pruned it one call later —
-  *    at sparse occupancy that is one heap allocation per
-  *    never-matching right row, the dominant cost.
-  *  - RING BUFFER instead of ArrayDeque: the window is exposed as
-  *    (size, indexed get) so the generated emission loop reads matches
-  *    by index — no per-window Iterator allocation, no deque node
-  *    churn. */
-final class BandSweeper(rIter: Iterator[InternalRow], rbIdx: Int,
-    rvIdx: Int) {
-  private var ring = new Array[InternalRow](16) // capacity stays 2^k
-  private var head = 0 // ring index of the oldest buffered row
-  private var n = 0 // live rows
-  private var curBin = Long.MinValue
-  private var curBinValid = false
-  private var peakRows = 0L
-  // right cursor; skips rows that can never match (null bin/value)
-  private def advance(): InternalRow = {
-    var r: InternalRow = null
-    while (r == null && rIter.hasNext) {
-      r = rIter.next()
-      if (r.isNullAt(rbIdx) || r.isNullAt(rvIdx)) r = null
-    }
-    r
-  }
-  private var rRow: InternalRow = advance()
-
-  private def grow(): Unit = {
-    val bigger = new Array[InternalRow](ring.length << 1)
-    var i = 0
-    while (i < n) { bigger(i) = get(i); i += 1 }
-    ring = bigger; head = 0
-  }
-
-  /** The i-th (0-based, oldest-first) row of the current window. Valid
-    * until the next [[window]] call. */
-  def get(i: Int): InternalRow = ring((head + i) & (ring.length - 1))
-
-  /** Advances the cursor/buffer to the window for one left row
-    * (`lbin`, band [lo, hi]) and returns its SIZE: every buffered row
-    * IS a match, read back via [[get]]. Monotone (bin, value) left
-    * order is the caller's sort contract; the ring only mutates on the
-    * next call, so the generated emission loop may read it live. */
-  def window(lbin: Long, lo: Double, hi: Double): Int = {
-    if (!curBinValid || lbin != curBin) {
-      // drop the previous bin's window (its rows live only in `ring`;
-      // the cursor never re-visits a bin)
-      head = 0; n = 0; curBin = lbin; curBinValid = true
-    }
-    while (rRow != null && rRow.getLong(rbIdx) < lbin) rRow = advance()
-    while (rRow != null && rRow.getLong(rbIdx) == lbin &&
-        rRow.getDouble(rvIdx) <= hi) {
-      if (rRow.getDouble(rvIdx) >= lo) { // skip-ahead: < lo never matches
-        if (n == ring.length) grow()
-        // copy() required: the child iterator reuses its row buffer
-        ring((head + n) & (ring.length - 1)) = rRow.copy()
-        n += 1
-      }
-      rRow = advance()
-    }
-    while (n > 0 && get(0).getDouble(rvIdx) < lo) {
-      ring(head) = null // release the row for GC
-      head = (head + 1) & (ring.length - 1); n -= 1
-    }
-    if (n > peakRows) peakRows = n
-    n
-  }
-
-  def peak: Long = peakRows
-}
-
-case class BandJoinExec(
-    left: SparkPlan,
-    right: SparkPlan,
-    leftBin: Attribute,
-    leftVal: Attribute,
-    rightBin: Attribute,
-    rightVal: Attribute,
-    loFactor: Double,
-    hiFactor: Double,
-    loOffset: Double = 0.0,
-    hiOffset: Double = 0.0) extends BinaryExecNode with CodegenSupport {
-
-  override def output: Seq[Attribute] = left.output ++ right.output
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext,
-      "number of output rows"),
-    "maxBandBuffer" -> SQLMetrics.createSizeMetric(sparkContext,
-      "peak band-window buffer rows"))
-
-  /** Both children clustered on their bin: EnsureRequirements inserts
-    * the two hash exchanges AND aligns partition counts, so
-    * `zipPartitions` pairs co-binned partitions. */
-  override def requiredChildDistribution: Seq[Distribution] =
-    Seq(ClusteredDistribution(Seq(leftBin)),
-      ClusteredDistribution(Seq(rightBin)))
-
-  /** (bin, value) ascending on both sides — the sweep's precondition;
-    * EnsureRequirements adds spill-aware SortExecs. */
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(Seq(SortOrder(leftBin, Ascending), SortOrder(leftVal, Ascending)),
-      Seq(SortOrder(rightBin, Ascending), SortOrder(rightVal, Ascending)))
-
-  /** Rows stream out in left order with left's clustering intact. */
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = left.outputOrdering
-
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): BandJoinExec =
-    copy(left = newLeft, right = newRight)
-
-  // ---- whole-stage codegen (round 12, r10 verdict item #6) --------
-  // Same two-input recipe as AsOfJoinExec: the sorted children execute
-  // as this stage's input iterators, the sweep's cursor/buffer state
-  // lives in a BandSweeper driven once per LEFT row, and the per-match
-  // emission loop is generated Java — output columns flow as locals
-  // into the parent's consume, no JoinedRow, no per-row
-  // UnsafeProjection. shouldStop() is checked after a left row's
-  // matches drain (the SortMergeJoin convention), so re-entry never
-  // replays a window.
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  // output vars alias the reused left-child row buffer
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(ctx: CodegenContext): String = {
-    val lbIdx = ordinal(left.output, leftBin, "left bin")
-    val lvIdx = ordinal(left.output, leftVal, "left value")
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
-    val leftInput = ctx.addMutableState("scala.collection.Iterator",
-      "bandLeftInput", v => s"$v = inputs[0];")
-    val sweeper = ctx.addMutableState("graft.plans.BandSweeper",
-      "bandSweeper", v => s"$v = new graft.plans.BandSweeper(" +
-        s"(scala.collection.Iterator) inputs[1], $rbIdx, $rvIdx);")
-    val leftRow = ctx.freshName("leftRow")
-    val lv = ctx.freshName("lv")
-    val winN = ctx.freshName("windowSize")
-    val k = ctx.freshName("k")
-    val rRow = ctx.freshName("rightRow")
-    val numOutputRows = metricTerm(ctx, "numOutputRows")
-    val maxBandBuffer = metricTerm(ctx, "maxBandBuffer")
-    val leftVars = ExecCodegen.colVars(ctx, leftRow, left.output)
-    val rightVars = ExecCodegen.colVars(ctx, rRow,
-      output.drop(left.output.size))
-    // negative drop only for flipping (multiplicative) bands — see
-    // the broadcast exec's codegen note
-    val negGuard =
-      if (loFactor == hiFactor) "" else s"if ($lv < 0D) continue;"
-    s"""
-       |while ($limitNotReachedCond $leftInput.hasNext()) {
-       |  InternalRow $leftRow = (InternalRow) $leftInput.next();
-       |  if ($leftRow.isNullAt($lbIdx) || $leftRow.isNullAt($lvIdx)) continue;
-       |  double $lv = $leftRow.getDouble($lvIdx);
-       |  $negGuard
-       |  int $winN = $sweeper.window(
-       |    $leftRow.getLong($lbIdx),
-       |    $lv * ${loFactor}D + ${loOffset}D,
-       |    $lv * ${hiFactor}D + ${hiOffset}D);
-       |  if ($winN == 0) continue;
-       |  $numOutputRows.add($winN);
-       |  $maxBandBuffer.set($sweeper.peak());
-       |  ${evaluateVariables(leftVars)}
-       |  for (int $k = 0; $k < $winN; $k++) {
-       |    InternalRow $rRow = $sweeper.get($k);
-       |    ${evaluateVariables(rightVars)}
-       |    ${consume(ctx, leftVars ++ rightVars)}
-       |  }
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
-  }
-
-  private def ordinal(attrs: Seq[Attribute], a: Attribute,
-      side: String): Int = {
-    val i = attrs.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"band-join $side column ${a.name} not in child output")
-    i
-  }
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    val lbIdx = ordinal(left.output, leftBin, "left bin")
-    val lvIdx = ordinal(left.output, leftVal, "left value")
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
-    val (loF, hiF) = (loFactor, hiFactor)
-    val (loO, hiO) = (loOffset, hiOffset)
-    val outAttrs = output
-    val numOutputRows = longMetric("numOutputRows")
-    val maxBandBuffer = longMetric("maxBandBuffer")
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      val proj = UnsafeProjection.create(outAttrs, outAttrs)
-      val joined = new JoinedRow
-      val sweeper = new BandSweeper(rIter, rbIdx, rvIdx)
-      val dropNegatives = loF != hiF // see the codegen note
-      lIter.flatMap { l =>
-        if (l.isNullAt(lbIdx) || l.isNullAt(lvIdx) ||
-            (dropNegatives && l.getDouble(lvIdx) < 0)) Iterator.empty
         else {
           val lv = l.getDouble(lvIdx)
-          val m = sweeper.window(l.getLong(lbIdx),
-            lv * loF + loO, lv * hiF + hiO)
-          maxBandBuffer.set(sweeper.peak)
-          numOutputRows += m
-          // safe to read the live ring: it only mutates on the NEXT
-          // outer element, after this inner iterator is exhausted
-          Iterator.range(0, m).map(i => proj(joined(l, sweeper.get(i))))
+          val pe = idx.probe(l.getLong(lbIdx), lv * loF + loO)
+          if (pe < 0L) Iterator.empty
+          else {
+            val hi = lv * hiF + hiO
+            Iterator.range((pe >>> 32).toInt, pe.toInt)
+              .takeWhile(i => idx.values(i) <= hi)
+              .map { i => numOutputRows += 1; proj(joined(l, idx.rows(i))) }
+          }
         }
       }
     }
@@ -639,12 +365,11 @@ final class BinProber(rIter: Iterator[InternalRow], rbIdx: Int,
   private var peakRows = 0L
   // right cursor; skips rows that can never match: null bin/value, and
   // NaN values — NaN satisfies no lo<=v<=hi band (every comparison is
-  // false, exactly why the sweep form never emits it either), and
-  // letting one into the bin index would break the quicksort's total
-  // order (NaN compares false both ways), silently unsorting the bin
-  // and losing VALID matches to a misdirected binary search (the probe
-  // input is sorted by bin only, so unlike the sweep there is no
-  // SortExec ordering NaN last for us — ADVICE r14)
+  // false), and letting one into the bin index would break the
+  // quicksort's total order (NaN compares false both ways), silently
+  // unsorting the bin and losing VALID matches to a misdirected binary
+  // search (the input is sorted by bin only, so no SortExec orders NaN
+  // last for us — ADVICE r14)
   private def advance(): InternalRow = {
     var r: InternalRow = null
     while (r == null && rIter.hasNext) {
@@ -672,14 +397,12 @@ final class BinProber(rIter: Iterator[InternalRow], rbIdx: Int,
     while (rRow != null && rRow.getLong(rbIdx) == lbin) {
       if (n == vals.length) {
         // fail ACTIONABLY instead of taking the executor down with an
-        // opaque OOM: a bin this occupied is the documented case for
-        // the sweep form's O(band-occupancy) window
+        // opaque OOM: the bin width is the caller's choice, so name it
         require(n < maxRows,
           s"band-join probe: bin $lbin holds over $maxRows right rows " +
-            "— this workload's bin occupancy outgrows the probe form's " +
-            "in-memory index; set spark.graft.bandJoin.shuffledExec=" +
-            "sweep (window memory bounded by BAND occupancy) or raise " +
-            "spark.graft.bandJoin.probe.maxBinRows")
+            "— this workload's bin occupancy outgrows the in-memory bin " +
+            "index; pass a narrower binWidth to bandJoin/bandJoinOffset " +
+            "(near the widest band)")
         grow()
       }
       // copy() required: the child iterator reuses its row buffer
@@ -708,8 +431,8 @@ final class BinProber(rIter: Iterator[InternalRow], rbIdx: Int,
   def peak: Long = peakRows
 
   // tandem quicksort of (vals, rows) by vals — median-of-three pivots,
-  // insertion sort below 32; ties keep arbitrary order (same contract
-  // as SortExec's unstable sort in the sweep form)
+  // insertion sort below 32; ties keep arbitrary order (the same
+  // contract as SortExec's unstable sort)
   private def swap(i: Int, j: Int): Unit = {
     val v = vals(i); vals(i) = vals(j); vals(j) = v
     val r = rows(i); rows(i) = rows(j); rows(j) = r
@@ -747,38 +470,28 @@ final class BinProber(rIter: Iterator[InternalRow], rbIdx: Int,
 }
 
 object BinProber {
-  /** Default per-bin buffer cap — far above any sane occupancy (an
+  /** Per-bin buffer cap — far above any sane occupancy (an
     * InternalRow copy is ~100 B, so the cap sits near the point an
     * executor dies anyway); exists so the failure is a named,
-    * actionable error, tunable via
-    * `spark.graft.bandJoin.probe.maxBinRows`. */
+    * actionable error. */
   val DefaultMaxBinRows: Int = 1 << 26
 }
 
-/** The PROBE form of the shuffled band join (round 14, r13 verdict
-  * item #6 — see [[BandJoinStrategy]] for the probe/sweep tradeoff):
-  * children hash-clustered on their bin and sorted by BIN ONLY — one
-  * BIGINT sort key, so both SortExecs take the radix fast path that
-  * the sweep's (bin, value) comparator sort cannot — then each bin's
-  * right rows are value-indexed in memory once ([[BinProber]]) and
-  * every left row binary-searches its band. Same exactly-once, NULL
-  * and negative-value semantics as [[BandJoinExec]]; output order
-  * within a left row is right-value ascending (ties arbitrary, as in
-  * the sweep).
+/** The shuffled band join (round 14, r13 verdict item #6): children
+  * hash-clustered on their bin and sorted by BIN ONLY — one BIGINT
+  * sort key, so both SortExecs take the radix fast path — then each
+  * bin's right rows are value-indexed in memory once ([[BinProber]])
+  * and every left row binary-searches its band. Same exactly-once,
+  * NULL and negative-value semantics as [[BandJoinBroadcastExec]];
+  * output order within a left row is right-value ascending (ties
+  * arbitrary).
   *
-  * At 100 TB: identical shuffle movement to the sweep; per-task memory
+  * At 100 TB: one shuffle per side on the bin; per-task memory
   * O(max bin occupancy) (= the generic join's per-key buffer bound);
   * per-left-row work O(log bin + matches), never the generic join's
-  * O(bin) post-filter scan. A pathologically skewed bin that outgrows
-  * task memory is the case the `sweep` conf value exists for. */
-object BandJoinProbeExec {
-  /** The session's per-bin buffer cap, read at planning time on the
-    * driver (see [[BinProber.DefaultMaxBinRows]]). */
-  private[plans] def maxBinRows: Int =
-    SQLConf.get.getConfString("spark.graft.bandJoin.probe.maxBinRows",
-      BinProber.DefaultMaxBinRows.toString).toInt
-}
-
+  * O(bin) post-filter scan. A bin that outgrows
+  * [[BinProber.DefaultMaxBinRows]] fails with a message naming the
+  * remedy: a narrower `binWidth`. */
 case class BandJoinProbeExec(
     left: SparkPlan,
     right: SparkPlan,
@@ -799,6 +512,9 @@ case class BandJoinProbeExec(
     "maxBandBuffer" -> SQLMetrics.createSizeMetric(sparkContext,
       "peak bin-index buffer rows"))
 
+  /** Both children clustered on their bin: EnsureRequirements inserts
+    * the two hash exchanges AND aligns partition counts, so
+    * `zipPartitions` pairs co-binned partitions. */
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(Seq(leftBin)),
       ClusteredDistribution(Seq(rightBin)))
@@ -816,14 +532,7 @@ case class BandJoinProbeExec(
       newLeft: SparkPlan, newRight: SparkPlan): BandJoinProbeExec =
     copy(left = newLeft, right = newRight)
 
-  private def ordinal(attrs: Seq[Attribute], a: Attribute,
-      side: String): Int = {
-    val i = attrs.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"band-join $side column ${a.name} not in child output")
-    i
-  }
-
-  // ---- whole-stage codegen: the BandJoinExec two-input recipe, with
+  // ---- whole-stage codegen: the AsOfJoinExec two-input recipe, with
   // the prober's load/lower/emit driven per LEFT row ----------------
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
@@ -833,16 +542,16 @@ case class BandJoinProbeExec(
   override def needCopyResult: Boolean = true
 
   override protected def doProduce(ctx: CodegenContext): String = {
-    val lbIdx = ordinal(left.output, leftBin, "left bin")
-    val lvIdx = ordinal(left.output, leftVal, "left value")
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
+    val lbIdx = ordinal(left.output, leftBin, "band-join left bin")
+    val lvIdx = ordinal(left.output, leftVal, "band-join left value")
+    val rbIdx = ordinal(right.output, rightBin, "band-join right bin")
+    val rvIdx = ordinal(right.output, rightVal, "band-join right value")
     val leftInput = ctx.addMutableState("scala.collection.Iterator",
       "bandLeftInput", v => s"$v = inputs[0];")
-    val maxBin = BandJoinProbeExec.maxBinRows
     val prober = ctx.addMutableState("graft.plans.BinProber",
       "binProber", v => s"$v = new graft.plans.BinProber(" +
-        s"(scala.collection.Iterator) inputs[1], $rbIdx, $rvIdx, $maxBin);")
+        s"(scala.collection.Iterator) inputs[1], $rbIdx, $rvIdx, " +
+        s"${BinProber.DefaultMaxBinRows});")
     val leftRow = ctx.freshName("leftRow")
     val lv = ctx.freshName("lv")
     val binN = ctx.freshName("binSize")
@@ -887,20 +596,19 @@ case class BandJoinProbeExec(
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val lbIdx = ordinal(left.output, leftBin, "left bin")
-    val lvIdx = ordinal(left.output, leftVal, "left value")
-    val rbIdx = ordinal(right.output, rightBin, "right bin")
-    val rvIdx = ordinal(right.output, rightVal, "right value")
+    val lbIdx = ordinal(left.output, leftBin, "band-join left bin")
+    val lvIdx = ordinal(left.output, leftVal, "band-join left value")
+    val rbIdx = ordinal(right.output, rightBin, "band-join right bin")
+    val rvIdx = ordinal(right.output, rightVal, "band-join right value")
     val (loF, hiF) = (loFactor, hiFactor)
     val (loO, hiO) = (loOffset, hiOffset)
     val outAttrs = output
     val numOutputRows = longMetric("numOutputRows")
     val maxBandBuffer = longMetric("maxBandBuffer")
-    val maxBin = BandJoinProbeExec.maxBinRows
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val proj = UnsafeProjection.create(outAttrs, outAttrs)
       val joined = new JoinedRow
-      val prober = new BinProber(rIter, rbIdx, rvIdx, maxBin)
+      val prober = new BinProber(rIter, rbIdx, rvIdx)
       val dropNegatives = loF != hiF // see the codegen note
       lIter.flatMap { l =>
         if (l.isNullAt(lbIdx) || l.isNullAt(lvIdx) ||

@@ -13,6 +13,15 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   * compiled loop. */
 private[plans] object ExecCodegen {
 
+  /** Ordinal of `a` (matched by exprId) in a child's output `attrs`;
+    * fails naming `what` (e.g. "band-join left bin") when the child no
+    * longer carries the column. */
+  def ordinal(attrs: Seq[Attribute], a: Attribute, what: String): Int = {
+    val i = attrs.indexWhere(_.exprId == a.exprId)
+    require(i >= 0, s"$what column ${a.name} not in child output")
+    i
+  }
+
   /** One ExprCode per attribute, reading ordinally from `rowTerm`.
     * `guard`: when set, a boolean term that must be true for the row
     * to be present at all — columns evaluate NULL when it is false

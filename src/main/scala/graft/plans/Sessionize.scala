@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan,
   SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.LongType
+import ExecCodegen.ordinal
 
 /** Whole-operator custom plan: gaps-and-islands sessionization — the
   * second rung-(c) native operator after [[AsOfJoinPlan]], following
@@ -134,13 +135,8 @@ case class SessionizeExec(
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode],
       row: ExprCode): String = {
-    def ordinal(a: Attribute, what: String): Int = {
-      val i = child.output.indexWhere(_.exprId == a.exprId)
-      require(i >= 0, s"sessionize $what column ${a.name} not in child output")
-      i
-    }
-    val kEv = input(ordinal(key, "key"))
-    val tEv = input(ordinal(ts, "ts"))
+    val kEv = input(ordinal(child.output, key, "sessionize key"))
+    val tEv = input(ordinal(child.output, ts, "sessionize ts"))
     val havePrev = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN,
       "sessHavePrev")
     val prevKey = ctx.addMutableState(CodeGenerator.JAVA_LONG, "sessPrevKey")
@@ -168,13 +164,8 @@ case class SessionizeExec(
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
-    def ordinal(a: Attribute, what: String): Int = {
-      val i = child.output.indexWhere(_.exprId == a.exprId)
-      require(i >= 0, s"sessionize $what column ${a.name} not in child output")
-      i
-    }
-    val kIdx = ordinal(key, "key")
-    val tIdx = ordinal(ts, "ts")
+    val kIdx = ordinal(child.output, key, "sessionize key")
+    val tIdx = ordinal(child.output, ts, "sessionize ts")
     val outAttrs = output
     val gap = gapMicros
     val numOutputRows = longMetric("numOutputRows")

@@ -817,7 +817,8 @@ object VersionedTable {
         // second pass re-reads the whole commit). The footer path is
         // exact only for integral stats columns (see
         // [[footerFileStats]]); anything else — or a footer without
-        // statistics — falls back to the original read-back aggregate.
+        // statistics, or one that fails to read — falls back to the
+        // original read-back aggregate.
         val stats = footerFileStats(spark, df.schema, newPaths, statsCols)
           .getOrElse {
             import org.apache.spark.sql.functions._
@@ -872,12 +873,13 @@ object VersionedTable {
     * cast performs; doubles/floats are excluded for NaN-ordering
     * divergence, strings/dates because their cast semantics have no
     * footer image). Per column, row groups whose chunk carries values
-    * must have min/max statistics — any missing chunk statistic aborts
-    * to the read-back pass (`None`). All-null chunks contribute
-    * nothing; a column with no non-null value in a file gets no range
-    * (same as the aggregate's NULL row); a zero-row file is absent
-    * from the returned map so the caller drops it from the manifest. */
-  private def footerFileStats(spark: SparkSession,
+    * must have min/max statistics — any missing chunk statistic, or an
+    * I/O error reading a footer, aborts to the read-back pass (`None`).
+    * All-null chunks contribute nothing; a column with no non-null
+    * value in a file gets no range (same as the aggregate's NULL row);
+    * a zero-row file is absent from the returned map so the caller
+    * drops it from the manifest. */
+  private[graft] def footerFileStats(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       paths: Seq[String], statsCols: Seq[String])
       : Option[Map[String, Map[String, (Double, Double)]]] = {
@@ -938,8 +940,9 @@ object VersionedTable {
         } finally reader.close()
       }.toMap)
     } catch {
-      // any footer without usable statistics: use the read-back pass
-      case _: IllegalStateException => None
+      // any footer without usable statistics, or one that cannot be
+      // read: use the read-back pass, which reports a real failure
+      case _: IllegalStateException | _: java.io.IOException => None
     }
   }
 

@@ -60,17 +60,20 @@ object GraftFunctions {
   }
 
   /** Inner BAND JOIN through the native operator
-    * ([[graft.plans.BandJoinExec]]): every (`left`, `right`) pair with
-    * `right.rightVal BETWEEN left.leftVal*loFactor AND
+    * ([[graft.plans.BandJoinStrategy]]): every (`left`, `right`) pair
+    * with `right.rightVal BETWEEN left.leftVal*loFactor AND
     * left.leftVal*hiFactor`. This builder constructs the bin columns —
     * the left row exploded into every fixed-width value bin its band
     * overlaps, the right row keyed by its home bin (a pair meets
     * exactly once, in the right row's home bin) — and the exec replaces
     * the composed shape's per-bin hash join + post-filter with a
-    * per-bin sort-merge band sweep (see the operator scaladoc).
-    * Value columns must be non-negative DOUBLEs;
-    * 0 ≤ loFactor ≤ hiFactor; binWidth > 0 (≥ the widest band keeps
-    * left replication ≤ 2 bins/row). */
+    * per-bin value index and binary search: over a broadcast right
+    * side when it is small, else over both sides shuffled on the bin
+    * (see the operator scaladoc). Value columns must be non-negative
+    * DOUBLEs; 0 ≤ loFactor ≤ hiFactor; binWidth > 0. Size binWidth
+    * near the widest band: at least the band keeps left replication
+    * ≤ 2 bins/row, and not much wider keeps the shuffled form's
+    * per-bin buffer near the band's own occupancy. */
   def bandJoin(left: DataFrame, leftVal: String,
       right: DataFrame, rightVal: String,
       loFactor: Double, hiFactor: Double, binWidth: Double): DataFrame =
@@ -87,7 +90,8 @@ object GraftFunctions {
     * natively with factors 1. Values may be ANY doubles including
     * negatives (an equal-factor band never flips — both execs and the
     * binning handle negative values/bins); binWidth ≥
-    * hiOffset−loOffset keeps left replication ≤ 2 bins per row. */
+    * hiOffset−loOffset keeps left replication ≤ 2 bins per row, and
+    * binWidth near hiOffset−loOffset keeps the per-bin buffer small. */
   def bandJoinOffset(left: DataFrame, leftVal: String,
       right: DataFrame, rightVal: String,
       loOffset: Double, hiOffset: Double, binWidth: Double): DataFrame = {

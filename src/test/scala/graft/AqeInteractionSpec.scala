@@ -10,9 +10,9 @@ package graft
   * 1-byte min partition size) and pins (a) result equality with the
   * default session and (b) the custom node surviving into the final
   * adaptive plan. The band join runs with broadcast disabled so the
-  * SHUFFLED sweep (the path whose co-partitioned zipPartitions AQE
-  * could break by coalescing sides independently) is the one under
-  * test. */
+  * SHUFFLED probe form (the path whose co-partitioned zipPartitions
+  * AQE could break by coalescing sides independently) is the one
+  * under test. */
 class AqeInteractionSpec extends SparkSpec {
 
   private def aqeSession = {

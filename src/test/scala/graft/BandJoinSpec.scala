@@ -1,16 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
 
-/** The native band-join operator (`graft.plans.BandJoinExec` and its
-  * broadcast small-side twin `BandJoinBroadcastExec`): boundary
-  * semantics on synthetic data, exactly-once pairing across bin
-  * boundaries, a seeded random property check against a local
-  * brute-force reference, equality with the explode+hash-join
-  * composition on the corpus, and the plan shapes of BOTH physical
-  * paths (the strategy picks broadcast under
-  * `spark.sql.autoBroadcastJoinThreshold`, the shuffled sweep above
+/** The native band-join operator (the shuffled
+  * `graft.plans.BandJoinProbeExec` and its broadcast small-side twin
+  * `BandJoinBroadcastExec`): boundary semantics on synthetic data,
+  * exactly-once pairing across bin boundaries, a seeded random
+  * property check against a local brute-force reference, equality with
+  * the explode+hash-join composition on the corpus, and the plan shapes
+  * of BOTH physical paths (the strategy picks broadcast under
+  * `spark.sql.autoBroadcastJoinThreshold`, the shuffled probe above
   * it — r10 verdict item #5). Every semantic test runs under both
   * paths: same operator, two executions, one truth. */
 class BandJoinSpec extends SparkSpec {
@@ -22,25 +24,16 @@ class BandJoinSpec extends SparkSpec {
     GraftFunctions.bandJoin(l, "lv", r, "rv", loF, hiF, binW)
 
   /** Run `f` once per physical path: default threshold (tiny test
-    * frames broadcast), threshold disabled under the default PROBE
-    * shuffled exec, and threshold disabled under the SWEEP exec
-    * (`spark.graft.bandJoin.shuffledExec=sweep`) — same operator,
-    * three executions, one truth (the round-14 probe/sweep
-    * bit-equality law rides every semantic test here). */
+    * frames broadcast), then threshold disabled (the shuffled PROBE
+    * exec) — same operator, two executions, one truth. */
   private def bothPaths[A](f: String => A): Unit = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val mode = "spark.graft.bandJoin.shuffledExec"
     val old = spark.conf.get(key)
     try {
       f("broadcast")
       spark.conf.set(key, "-1")
       f("shuffle-probe")
-      spark.conf.set(mode, "sweep")
-      f("shuffle-sweep")
-    } finally {
-      spark.conf.set(key, old)
-      spark.conf.unset(mode)
-    }
+    } finally spark.conf.set(key, old)
   }
 
   test("band join is inclusive on both bounds and drops nulls/negatives") {
@@ -63,8 +56,8 @@ class BandJoinSpec extends SparkSpec {
     // tandem quicksort whose total order NaN breaks (both comparisons
     // false) — one NaN right value in a bin could silently misdirect
     // the binary search and LOSE valid matches. NaN satisfies no
-    // lo<=v<=hi band, so the cursor now skips it like a null; all
-    // three paths must agree AND keep every valid match. The NaN row
+    // lo<=v<=hi band, so the cursor now skips it like a null; both
+    // paths must agree AND keep every valid match. The NaN row
     // is planted in the same bin as valid rows, between values that
     // must still be found.
     val left = Seq((100.0, 1L)).toDF("lv", "lid") // band [50, 200]
@@ -118,8 +111,8 @@ class BandJoinSpec extends SparkSpec {
 
   test("a single mega-bin exceeds the initial buffers and still matches brute force") {
     // every right row lands in ONE bin (values within one binW): the
-    // probe's bin index and the sweep's ring both outgrow their initial
-    // 16-slot capacity — the grow() paths must preserve order/content
+    // probe's bin index outgrows its initial 16-slot capacity — the
+    // grow() path must preserve order/content
     val left = (0 until 40).map(i => (100.0 + i * 0.5, i.toLong))
       .toDF("lv", "lid")
     val right = (0 until 500).map(i => (100.0 + (i % 120) * 0.25, i.toLong))
@@ -142,30 +135,14 @@ class BandJoinSpec extends SparkSpec {
   }
 
   test("probe form fails actionably when a bin exceeds the buffer cap") {
-    // a pathological mega-bin must name the knob and the sweep escape
-    // hatch instead of taking the executor down with an opaque OOM
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val cap = "spark.graft.bandJoin.probe.maxBinRows"
-    val old = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
-      spark.conf.set(cap, "8")
-      val left = Seq((100.0, 1L)).toDF("lv", "lid")
-      val right = (0 until 64).map(i => (100.0 + i * 0.01, i.toLong))
-        .toDF("rv", "rid")
-      val e = intercept[Exception] {
-        GraftFunctions.bandJoinOffset(left, "lv", right, "rv",
-          -1.0, 1.0, 1000.0).collect()
-      }
-      val texts = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
-        .mkString("\n")
-      assert(texts.contains("maxBinRows") && texts.contains("sweep"),
-        s"expected the actionable cap message, got:\n$texts")
-    } finally {
-      spark.conf.set(key, old)
-      spark.conf.unset(cap)
-    }
+    // a pathological mega-bin must name the remedy (a narrower
+    // binWidth) instead of taking the executor down with an opaque OOM
+    val rows = (0 until 64).map(i =>
+      new GenericInternalRow(Array[Any](7L, 100.0 + i * 0.01)): InternalRow)
+    val prober = new graft.plans.BinProber(rows.iterator, 0, 1, maxRows = 8)
+    val e = intercept[IllegalArgumentException](prober.load(7L))
+    assert(e.getMessage.contains("binWidth"),
+      s"expected the actionable cap message, got: ${e.getMessage}")
   }
 
   test("native band join equals the explode+hash-join composition on the corpus") {
@@ -278,30 +255,11 @@ class BandJoinSpec extends SparkSpec {
     } finally spark.conf.set(key, old)
   }
 
-  test("plan: shuffledExec=sweep picks the two-key sort-merge sweep") {
-    val dir = "/root/testdata/sf0.001"
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val mode = "spark.graft.bandJoin.shuffledExec"
-    val old = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
-      spark.conf.set(mode, "sweep")
-      val df = SparkEntry.queries("q_join_range_native")(spark, dir)
-      df.count()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("BandJoin") && !p.contains("BandJoinProbe") &&
-        !p.contains("BandJoinBroadcast"), s"sweep exec missing:\n$p")
-    } finally {
-      spark.conf.set(key, old)
-      spark.conf.unset(mode)
-    }
-  }
-
   test("plan: BOTH paths head a whole-stage codegen span; results match") {
     // round 12 (r10 verdict item #6): BandJoinBroadcastExec fuses the
     // probe side via produce/consume (the BroadcastHashJoin recipe);
-    // BandJoinExec feeds its sorted children as stage inputs and
-    // generates the sweep's emission loop (the SortMergeJoin recipe).
+    // BandJoinProbeExec feeds its sorted children as stage inputs and
+    // generates the per-bin emission loop (the SortMergeJoin recipe).
     // AQE's initial-plan string hides codegen spans, so pin the
     // statically collapsed plans in an AQE-off session.
     val dir = "/root/testdata/sf0.001"
@@ -313,10 +271,7 @@ class BandJoinSpec extends SparkSpec {
       def pinned(node: String): Unit = {
         val df = SparkEntry.queries("q_join_range_native")(ss, dir)
         val p = df.queryExecution.executedPlan.toString
-        val line = p.linesIterator
-          .find(l => l.contains(node) && !(node == "BandJoin" &&
-            (l.contains("BandJoinBroadcast") ||
-              l.contains("BandJoinProbe")))).get
+        val line = p.linesIterator.find(_.contains(node)).get
         assert(line.trim.takeWhile(!_.isLetter).contains("*"),
           s"$node must sit inside a WholeStageCodegen span:\n$p")
         assert(df.collect().map(_.toSeq).toSeq === expected,
@@ -327,8 +282,6 @@ class BandJoinSpec extends SparkSpec {
       val key = "spark.sql.autoBroadcastJoinThreshold"
       ss.conf.set(key, "-1")
       pinned("BandJoinProbe")
-      ss.conf.set("spark.graft.bandJoin.shuffledExec", "sweep")
-      pinned("BandJoin")
     } finally graft.ops.OpCache.clear(ss)
   }
 }

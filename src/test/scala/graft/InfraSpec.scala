@@ -57,6 +57,32 @@ class InfraSpec extends SparkSpec {
     assert(get() === 2, "clear must drop the memo so the next call rebuilds")
   }
 
+  test("streamParts sizes a directory-stored table by the files under it") {
+    // two sparse 20 MB part files: 40 MB at 16 MB a partition is 3
+    // partitions on the 4-core spec session (the directory entry alone
+    // would read as a few KB and size to the floor of 2)
+    withTmpDir("graft_stream_parts") { dir =>
+      val table = Files.createDirectory(
+        java.nio.file.Paths.get(dir, "events.parquet"))
+      for (i <- 0 until 2) {
+        val f = new java.io.RandomAccessFile(
+          table.resolve(s"part-$i.parquet").toFile, "rw")
+        try f.setLength(20L * 1024 * 1024) finally f.close()
+      }
+      assert(graft.ops.Streaming.streamParts(spark, dir) === "3")
+    }
+  }
+
+  test("footer stats return None on an unreadable file (read-back decides)") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    withTmpDir("graft_footer_io") { dir =>
+      val missing = s"$dir/part-00000.parquet"
+      assert(graft.sources.VersionedTable.footerFileStats(spark,
+        StructType(Seq(StructField("k", LongType))), Seq(missing),
+        Seq("k")) === None)
+    }
+  }
+
   test("versioned table: snapshot isolation, time travel, atomic manifests") {
     import graft.sources.VersionedTable
     withTmpDir("graft_vtable") { base =>
