@@ -379,8 +379,12 @@ object Aggregates extends OpModule {
     * map-combinable aggregate. The rank vector is O(nodes) — broadcast
     * is correct for any domain-valued graph (event types, categories,
     * countries); for a billion-node identity graph the same loop runs
-    * with a shuffle join, same plan shape, and a fixed iteration count
-    * keeps the lineage bounded. */
+    * with a shuffle join, same plan shape. The node set and the
+    * vectors that feed iterations 2 and 3 are eager `localCheckpoint`s
+    * (the NSW walk's per-round precedent): each iteration plans over
+    * materialized rows instead of re-planning the whole unrolled chain
+    * and re-running the node `distinct`, so the lineage stays one
+    * iteration deep. The last iteration stays in the returned plan. */
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -395,16 +399,18 @@ object Aggregates extends OpModule {
       val out = edges.groupBy($"src").agg(sum($"n").as("n_out"))
       edges.join(out, Seq("src"))
     }
-    val nodes = e.select($"src".as("node")).distinct()
-    var pr = nodes.select($"node", lit(200000L).as("pr"))
-    for (_ <- 1 to 3) {
+    val nodes = e.select($"src".as("node")).distinct().localCheckpoint()
+    def step(pr: DataFrame): DataFrame = {
       val contrib = e.join(broadcast(pr), $"src" === $"node")
         .select($"dst", expr("pr * n div n_out").as("c"))
         .groupBy($"dst").agg(sum($"c").as("s"))
-      pr = nodes.join(contrib, $"node" === $"dst", "left")
+      nodes.join(contrib, $"node" === $"dst", "left")
         .select($"node",
           expr("CAST(30000 + 17 * coalesce(s, 0) div 20 AS BIGINT)").as("pr"))
     }
+    val pr2 = step(nodes.select($"node", lit(200000L).as("pr")))
+      .localCheckpoint()
+    val pr = step(step(pr2).localCheckpoint())
     pr.select($"node".as("event_type"), $"pr".as("pr_ppm"))
       .orderBy($"event_type")
   }

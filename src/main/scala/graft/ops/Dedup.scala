@@ -922,36 +922,30 @@ object Dedup extends OpModule {
     * [[simIvfSweep]] (round-7 advice: the sweep must not re-fit KMeans
     * once per nprobe — 5 identical fits for no behavioral gain):
     * fixed-seed KMeans centers + the cell-assigned corpus,
-    * OpCache-persisted so all probe stages share one transform. The
-    * MLlib boundary uses the built-in `array_to_vector`, not a closure
-    * UDF. */
-  private def ivfIndex(s: SparkSession, dir: String)
+    * OpCache-persisted so all probe stages share one assignment. The
+    * cell is the nearest center by [[nearestCellsExpr]], the same
+    * expression the probe side ranks cells with, so no closure UDF and
+    * no MLlib model crosses into the plan. */
+  private[graft] def ivfIndex(s: SparkSession, dir: String)
       : (Array[Array[Double]], DataFrame) =
     ivfIndexOn(s, dir, "", Tables.t(s, dir, "embeddings"))
 
   /** The IVF fit/assign over an EXPLICIT corpus frame — `tag` scopes
-    * the model memo and the cell-assignment cache so a SUBSET index
+    * the centers memo and the cell-assignment cache so a SUBSET index
     * (the delta-serving base, round 14) coexists with the full one. */
   private def ivfIndexOn(s: SparkSession, dir: String, tag: String,
       rows: DataFrame): (Array[Array[Double]], DataFrame) = {
-    import org.apache.spark.ml.clustering.KMeans
     import s.implicits._
-    val e = rows
-      .select($"vec_id", $"embedding",
-        org.apache.spark.ml.functions.array_to_vector($"embedding")
-          .as("features"))
     // one KMeans fit per (session, sf, tag): the NSW graph/search
     // family calls [[ivfIndex]] from several stages, and re-fitting the
     // (deterministic, seeded) quantizer each time was pure waste
-    val model = OpCache.memo(s, dir, s"ivf_kmeans$tag") {
-      new KMeans().setK(16).setSeed(42L).setMaxIter(10)
-        .setInitMode("random").setFeaturesCol("features")
-        .setPredictionCol("cell")
-        .fit(e)
-    }
+    val centers = OpCache.memo(s, dir, s"ivf_kmeans$tag")(
+      Embeddings.kmeansCenters(rows.select($"embedding"), k = 16,
+        seed = 42L, maxIter = 10))
     val corpus = OpCache.cached(s, dir, s"ivf_corpus$tag")(
-      model.transform(e).select($"vec_id", $"embedding", $"cell"))
-    (model.clusterCenters.map(_.toArray), corpus)
+      rows.select($"vec_id", $"embedding",
+        nearestCellsExpr(centers, $"embedding", 1).getItem(0).as("cell")))
+    (centers, corpus)
   }
 
   /** The IVF search parameterized by nprobe over a prebuilt index. */
@@ -967,7 +961,8 @@ object Dedup extends OpModule {
     * closure's while-loop, so identical IEEE sums), and array_sort
     * over struct(d, i) reproduces the (distance, index) tiebreak
     * exactly. No closure crosses the engine boundary. Shared by the
-    * IVF search and the NSW graph build/entry (round 13). */
+    * IVF cell assignment and search and the NSW graph build/entry
+    * (round 13). */
   private def nearestCellsExpr(centers: Array[Array[Double]],
       vec: org.apache.spark.sql.Column,
       nprobe: Int): org.apache.spark.sql.Column = {
@@ -983,34 +978,38 @@ object Dedup extends OpModule {
   }
 
   /** The IVF candidate set (probe × probed-cell members) — the rows
-    * the search SCORES; its count is the search's honest budget,
-    * shared by the scoring path and the sweep's budget column. */
+    * the search SCORES; its count is the search's honest budget. Each
+    * row carries `pos`, the rank of its cell among the probe's cells
+    * in distance order (0 = nearest): the `nprobe` cells are a prefix
+    * of the full order, so the rows with `pos < np` are exactly the
+    * nprobe-`np` candidates, and one frame over all cells serves every
+    * point of the sweep. */
   private def ivfCandidates(s: SparkSession, centers: Array[Array[Double]],
       corpus: DataFrame, nprobe: Int): DataFrame = {
     import s.implicits._
-    val nearestCells = nearestCellsExpr(centers, $"pe", nprobe)
     corpus
       .select($"vec_id".as("probe_id"), $"embedding".as("pe"))
       .filter($"probe_id" < 10)
-      .withColumn("cell", explode(nearestCells))
+      .select($"probe_id", $"pe", posexplode(
+        nearestCellsExpr(centers, $"pe", nprobe)).as(Seq("pos", "cell")))
       .join(corpus, Seq("cell"))
       .filter($"probe_id" =!= $"vec_id")
   }
 
-  private def ivfSearch(s: SparkSession, centers: Array[Array[Double]],
-      corpus: DataFrame, nprobe: Int): DataFrame =
-    ivfSearchFrom(s, ivfCandidates(s, centers, corpus, nprobe))
-
-  /** The ranking stage over an (optionally pre-persisted) candidate
-    * frame — split out so the sweep can count its budget and score
-    * from ONE materialization instead of rebuilding the join. */
-  private def ivfSearchFrom(s: SparkSession, cand: DataFrame): DataFrame = {
+  /** One `sim4` score per (probe, candidate) pair, keeping `pos`. */
+  private def ivfScored(s: SparkSession, cand: DataFrame): DataFrame = {
     import s.implicits._
-    val scored = cand
-      .select($"probe_id", $"vec_id".as("nbr_id"),
-        round(graft.functions.CosineSimF.cosine($"pe", $"embedding"), 4)
-          .as("sim4"))
+    cand.select($"probe_id", $"pos", $"vec_id".as("nbr_id"),
+      round(graft.functions.CosineSimF.cosine($"pe", $"embedding"), 4)
+        .as("sim4"))
+  }
+
+  /** The per-probe top-10 by (sim4 DESC, nbr_id ASC). */
+  private def ivfSearch(s: SparkSession, centers: Array[Array[Double]],
+      corpus: DataFrame, nprobe: Int): DataFrame = {
+    import s.implicits._
     import org.apache.spark.sql.expressions.Window
+    val scored = ivfScored(s, ivfCandidates(s, centers, corpus, nprobe))
     val w = Window.partitionBy($"probe_id").orderBy($"sim4".desc, $"nbr_id".asc)
     scored.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 10)
@@ -1028,40 +1027,47 @@ object Dedup extends OpModule {
     * monotonicity. Non-oracled (seeded KMeans cells), like the other
     * trained-index ops.
     *
-    * Scale shape: one KMeans fit + per-nprobe candidate joins, each
-    * bounded by probes × probed-cells' members — the brute-force
-    * comparison is confined to the 10-probe evaluation set, never the
-    * corpus. */
+    * Scale shape: one KMeans fit, then ONE planned query — the
+    * candidate join over all K cells, each (probe, candidate) pair
+    * scored once and fanned out to the points whose nprobe exceeds its
+    * cell rank (the incremental top-k idea: a wider search reuses the
+    * narrower one's candidates). The scored rows equal the widest
+    * point's join, bounded by probes × corpus; the brute-force
+    * comparison is confined to the 10-probe evaluation set. Building
+    * the frame runs no Spark job once the index is memoized. */
   def simIvfSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val points = Seq(1, 2, 4, 8, 16)
+    val (centers, corpus) = ivfIndex(s, dir)
+    val scored = ivfScored(s,
+      ivfCandidates(s, centers, corpus, centers.length))
+    // a pair whose cell ranks `pos` is a candidate at every np > pos
+    val fanned = scored.withColumn("nprobe",
+      explode(filter(typedLit(points), np => np > $"pos")))
+    val w = Window.partitionBy($"nprobe", $"probe_id")
+      .orderBy($"sim4".desc, $"nbr_id".asc)
     val truth = simTopkCosine(s, dir)
-      .select($"probe_id", $"nbr_id").persist()
-    // released on every path: a failing leg must not pin the truth
-    try {
-      // one index build, forced BEFORE the legs fork (Par caller contract)
-      val (centers, corpus) = ivfIndex(s, dir)
-      // the five nprobe points are independent searches over the frozen
-      // index — overlapped driver jobs (guide §2.6), results in input
-      // order so the output is the exact sequential composition
-      val legRows = Par.map(Seq(1, 2, 4, 8, 16)) { np =>
-        // ONE candidate materialization per point: the budget count
-        // (round 13 — the equal-budget axis the graph-ANN laws compare
-        // against) and the scoring both read the persisted frame
-        val cand = ivfCandidates(s, centers, corpus, np).persist()
-        try {
-          val budget = cand.count()
-          val got = ivfSearchFrom(s, cand).select($"probe_id", $"nbr_id")
-          val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
-          (np, budget, matched)
-        } finally cand.unpersist(blocking = false)
-      }
-      val nTruth = truth.count()
-      val rows = legRows.map { case (np, budget, matched) =>
-        (np, budget, matched, nTruth, matched * 1000000L / nTruth)
-      }
-      rows.toDF("nprobe", "n_scored", "n_matched", "n_expected", "recall_ppm")
-        .orderBy($"nprobe")
-    } finally truth.unpersist(blocking = false)
+      .select($"probe_id", $"nbr_id", lit(true).as("hit"))
+    val perPoint = fanned.withColumn("rank", row_number().over(w))
+      .join(truth, Seq("probe_id", "nbr_id"), "left")
+      .groupBy($"nprobe")
+      .agg(count(lit(1)).as("n_scored"),
+        count(when($"rank" <= 10 && $"hit", lit(1))).as("n_matched"))
+    val expected = truth.agg(count(lit(1)).as("n_expected"))
+    // driven from the point list: a point with no candidates still
+    // yields its row, as a per-point composition would. Both sides
+    // joined to it hold at most one row per point, and the list is one
+    // partition, so the final sort needs no exchange.
+    points.toDF("nprobe").coalesce(1)
+      .join(broadcast(perPoint), Seq("nprobe"), "left")
+      .crossJoin(broadcast(expected))
+      .select($"nprobe",
+        coalesce($"n_scored", lit(0L)).as("n_scored"),
+        coalesce($"n_matched", lit(0L)).as("n_matched"),
+        $"n_expected")
+      .withColumn("recall_ppm", expr("n_matched * 1000000 div n_expected"))
+      .orderBy($"nprobe")
   }
 
   /** IVF-PQ retrieval with ASYMMETRIC-DISTANCE (ADC) scoring — the

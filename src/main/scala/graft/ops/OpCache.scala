@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once registry for intermediates shared within (and across)
   * operators — exploded shingle rows, minhash signatures, ML feature
-  * inputs ([[cached]]) and driver-side values such as fitted models,
-  * codebooks and plan-gate counts ([[memo]]). One home for every
-  * `.persist` and every driver memo in the op modules, so a long
+  * inputs ([[cached]]) and driver-side values such as k-means centers,
+  * codebooks, plan-gate counts and table schemas ([[memo]]). One home
+  * for every `.persist` and every driver memo in the op modules, so a long
   * session (the bench, a user notebook) can release ALL of them with
   * one call instead of leaking them query over query, and a bench rep
   * never inherits the previous rep's fitted models or persisted frames.

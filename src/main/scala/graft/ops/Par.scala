@@ -2,8 +2,10 @@ package graft.ops
 
 /** Concurrent INDEPENDENT Spark actions from driver threads — the
   * optimization guide's §2.6 "overlap independent jobs" recipe, scoped
-  * to multi-leg operators (recall sweeps, per-band model fits) whose
-  * legs are separate actions with no data dependency.
+  * to multi-leg operators whose legs are separate actions with no data
+  * dependency: the HNSW beam sweep (`Dedup.simHnswSweep`) and the PQ
+  * codebook fits (`Embeddings.pqCodebooks`). A sweep whose points can
+  * share one plan (the IVF recall sweep) is one query instead.
   *
   * Why this is safe and result-identical: Spark's scheduler runs
   * concurrently submitted jobs FIFO, each leg computes exactly the

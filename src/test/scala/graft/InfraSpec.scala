@@ -57,6 +57,33 @@ class InfraSpec extends SparkSpec {
     assert(get() === 2, "clear must drop the memo so the next call rebuilds")
   }
 
+  test("a table's schema is read once; each read still gets fresh attribute ids") {
+    val ns = spark.newSession() // own session: its memo starts empty
+    try {
+      val (first, inferJobs) = jobsDuring(Tables.t(ns, sf, "orders"))
+      assert(inferJobs === 1, "the first read infers the schema in one job")
+      val (second, jobs) = jobsDuring(Tables.t(ns, sf, "orders"))
+      assert(jobs === 0, "the second read must reuse the memoized schema")
+      assert(second.schema === first.schema)
+      val ids = first.queryExecution.analyzed.output.map(_.exprId).toSet
+      assert(second.queryExecution.analyzed.output.forall(a => !ids(a.exprId)),
+        "reads must not share attribute ids (self-joins would not resolve)")
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
+  test("the IVF recall sweep is one planned query: no job at build time") {
+    val ns = spark.newSession() // own session: the index is built here
+    try {
+      val build = SparkEntry.queries("q_sim_ivf_sweep")
+      val (_, warmJobs) = jobsDuring(build(ns, sf))
+      assert(warmJobs > 0, "the first call fits the IVF index")
+      val (sweep, jobs) = jobsDuring(build(ns, sf))
+      assert(jobs === 0,
+        s"with the index memoized, building the sweep must run no job, ran $jobs")
+      assert(sweep.count() === 5)
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
   test("streamParts sizes a directory-stored table by the files under it") {
     // two sparse 20 MB part files: 40 MB at 16 MB a partition is 3
     // partitions on the 4-core spec session (the directory entry alone

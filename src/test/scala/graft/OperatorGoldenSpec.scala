@@ -720,6 +720,22 @@ class OperatorGoldenSpec extends SparkSpec {
       "every customer with purchase history gets recommendations")
   }
 
+  test("ALS recommender output is pinned at sf0.01 (spec session)") {
+    // Scope: the spec session (GraftSession.local(4)) at sf0.01, where
+    // the ratings size ALS to one block. The rows repeat across fresh
+    // JVMs there; another core count or scale factor is not covered.
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val rows = SparkEntry.queries("q_ml_recommend")(spark, sf001)
+      .select($"custkey", $"rec_rank", $"brand_id")
+      .as[(Int, Int, Int)].collect().sorted
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.map { case (c, r, b) => s"$c,$r,$b" }.mkString("\n")
+        .getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(rows.length === 4500)
+    assert(digest === "2089548fa27a43c1602c22b35bc4ad78",
+      s"q_ml_recommend rows changed: md5 $digest")
+  }
+
   test("funnel stages are monotone non-increasing") {
     val stages = run("q_feat_funnel")
       .select($"stage", $"n_users").as[(String, Long)].collect().toMap
@@ -2089,6 +2105,40 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(r.map(_._2).sameElements(r.map(_._2).sorted))
     // nprobe = K probes every cell: IVF degenerates to brute force
     assert(r.last._2 === 1000000L)
+  }
+
+  test("kmeansCenters ≡ ml.clustering.KMeans; IVF cells ≡ KMeansModel.transform") {
+    // the ml estimator is the reference: same k, seed, iterations and
+    // random init, over the same rows in the same partitions
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    val emb = Tables.t(spark, sf, "embeddings")
+    def reference(features: DataFrame, k: Int, seed: Long, iters: Int) =
+      new KMeans().setK(k).setSeed(seed).setMaxIter(iters)
+        .setInitMode("random")
+        .fit(features.select(
+          array_to_vector(col(features.columns.head)).as("features")))
+    def same(a: Array[Array[Double]], b: Array[Array[Double]]): Boolean =
+      a.length == b.length && a.zip(b).forall { case (x, y) => x.sameElements(y) }
+    // the IVF quantizer (Dedup.ivfIndexOn's parameters)
+    val ivfModel = reference(emb.select($"embedding"), 16, 42L, 10)
+    val (centers, corpus) = Dedup.ivfIndex(spark, sf)
+    assert(same(centers, ivfModel.clusterCenters.map(_.toArray)),
+      "IVF centers differ from the ml estimator's")
+    // one PQ block (Embeddings.pqCodebooks's parameters for block 3)
+    val blk = emb.select(expr("slice(embedding, 25, 8)"))
+    assert(same(Embeddings.kmeansCenters(blk, 16, 45L, 5),
+      reference(blk, 16, 45L, 5).clusterCenters.map(_.toArray)),
+      "PQ block centers differ from the ml estimator's")
+    // the expression cell assignment equals the model's prediction
+    val predicted = ivfModel.setPredictionCol("want")
+      .transform(emb.select($"vec_id",
+        array_to_vector($"embedding").as("features")))
+      .select($"vec_id", $"want")
+    val joined = corpus.join(predicted, Seq("vec_id"))
+    assert(joined.count() === emb.count())
+    assert(joined.filter($"cell" =!= $"want").count() === 0L,
+      "IVF cell assignment disagrees with KMeansModel.transform")
   }
 
   test("graph-ANN: recall monotone in beam width, ≥ IVF at ≤-budget points") {

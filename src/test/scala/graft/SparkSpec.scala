@@ -18,6 +18,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
   }
 
+  /** Runs `body` and counts the Spark jobs it starts, on this thread
+    * and on threads it creates (they inherit its job group). A marker
+    * job submitted afterwards flushes the listener bus: once its start
+    * event arrives, every earlier start event has been delivered. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally {
+        sc.setJobGroup(s"$group-marker", "listener-bus flush")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+      }
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start event never arrived")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = () // session shared across suites
 }
 
