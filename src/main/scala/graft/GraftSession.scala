@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's Spark session is built. `Bench`,
-  * `Verify`, `Explain`, `MicroBench` and the test harness all run on
+  * `Verify`, `Explain` and the test harness all run on
   * this config, so a plan pinned by a spec is the plan the graded
   * entry points execute. A caller that needs another runtime SQL conf
   * sets it on the returned session (`spark.conf.set`).

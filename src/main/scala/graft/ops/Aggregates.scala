@@ -1427,21 +1427,6 @@ object Aggregates extends OpModule {
         expr("num_c * 1000000 div den_c").as("index_ppm"))
   }
 
-  /** RFM quintile scoring with named segments — the business-readable
-    * layer on [[featRfm]]'s raw numbers: R/F/M each coded 1–5 by
-    * ntile(5) over a deterministic total order (recency inverted so 5
-    * is always "best"), then the classic rule-based segment labels
-    * (champions / loyal / at-risk / hibernating / other) from the R
-    * and F codes. Everything after the raw RFM aggregate is rank
-    * arithmetic — exact.
-    *
-    * Scale shape (round 8): one custkey aggregate + three TWO-LEVEL
-    * exact ranks ([[Ranks.withGlobalRn]] — range-binned partitioned
-    * windows + broadcast offsets, never a single-partition sort) with
-    * each quintile code reconstructed arithmetically from (rank, n) —
-    * bit-identical to `ntile(5)`, oracle hash unchanged. The pure
-    * approx-boundary quintile ([[Ranks.approxNtile]], zero windows) is
-    * the tested 100-TB variant; O(segments) rollup output. */
   /** The shared custkey-grain (recency, frequency, monetary-cents)
     * aggregate both RFM scoring variants code from — monetary in exact
     * integer cents (the segment rollup's mean must be an
@@ -1461,31 +1446,32 @@ object Aggregates extends OpModule {
             .as("monetary_c"))
     }
 
+  /** RFM quintile scoring with named segments — the business-readable
+    * layer on [[featRfm]]'s raw numbers: R/F/M each coded 1–5 by
+    * ntile(5) over a deterministic total order (recency inverted so 5
+    * is always "best"), then the classic rule-based segment labels
+    * (champions / loyal / at-risk / hibernating / other) from the R
+    * and F codes. Everything after the raw RFM aggregate is rank
+    * arithmetic — exact.
+    *
+    * Scale shape: one custkey aggregate + ONE two-level exact rank
+    * over the three axes ([[Ranks.axisRanks]] — range-binned
+    * partitioned windows + broadcast offsets, never a single-partition
+    * sort) with each quintile code reconstructed arithmetically from
+    * (axis rank, n) — bit-identical to `ntile(5)`, oracle hash
+    * unchanged. The pure approx-boundary quintile
+    * ([[Ranks.approxNtile]], zero windows) is the tested 100-TB
+    * variant; O(segments) rollup output. */
   def featRfmSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // quintile code via the two-level exact rank; binOn is negated for
-    // the DESC recency axis so bins stay ASC-aligned with the order.
-    // Each code rank is computed INDEPENDENTLY from the cached base
-    // and joined back by custkey (nesting levels triples the logical
-    // plan per level — the Catalyst-analysis blowup measured on
-    // q_ml_calibration; join-back is linear in levels).
+    // the three quintile codes from ONE long-form exact rank; recency
+    // is negated so 5 is always "best"
     val base = rfmSegBase(s, dir)
-    def code(value: org.apache.spark.sql.Column,
-        binOn: org.apache.spark.sql.Column,
-        ord: Seq[org.apache.spark.sql.Column], out: String,
-        tag: String): DataFrame =
-      Ranks.withGlobalRn(base.select($"o_custkey", value), binOn, ord,
-          s"__rn_$tag", s"__n_$tag", tag)
-        .select($"o_custkey",
-          Ranks.ntileFromRn(col(s"__rn_$tag"), col(s"__n_$tag"), 5).as(out))
     val coded = base
-      .join(code($"recency_days", -$"recency_days",
-        Seq($"recency_days".desc, $"o_custkey"), "r", "rfm_r"),
+      .join(Ranks.axisRanks(base, "o_custkey",
+        Seq("r" -> -$"recency_days", "f" -> $"frequency",
+          "m" -> $"monetary_c"), "rfm_seg")(Ranks.ntileFromRn(_, _, 5)),
         Seq("o_custkey"))
-      .join(code($"frequency", $"frequency",
-        Seq($"frequency", $"o_custkey"), "f", "rfm_f"), Seq("o_custkey"))
-      .join(code($"monetary_c", $"monetary_c",
-        Seq($"monetary_c", $"o_custkey"), "m", "rfm_m"), Seq("o_custkey"))
       .withColumn("segment",
         when($"r" >= 4 && $"f" >= 4, "1_champions")
           .when($"f" >= 4, "2_loyal")
@@ -3174,28 +3160,31 @@ object Aggregates extends OpModule {
         |  FROM cc GROUP BY rep)
         |SELECT csize, CAST(COUNT(*) AS BIGINT) AS n_components
         |FROM sizes GROUP BY csize ORDER BY csize""".stripMargin,
+    // every CTE MATERIALIZED: DuckDB inlines an unmaterialized CTE at
+    // each reference, which re-ran the lineitem self-join under e0 once
+    // per reference path (a temp spill past 3 GB at sf0.1)
     "q_graph_kcore" ->
-      """WITH li AS (
+      """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e0 AS (
+        |e0 AS MATERIALIZED (
         |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
         |  FROM li a JOIN li b
         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |d1 AS (SELECT v, COUNT(*) AS d FROM (
+        |d1 AS MATERIALIZED (SELECT v, COUNT(*) AS d FROM (
         |    SELECT pa AS v FROM e0 UNION ALL SELECT pb FROM e0) GROUP BY v),
-        |k1 AS (SELECT v FROM d1 WHERE d >= 2),
-        |e1 AS (SELECT pa, pb FROM e0
+        |k1 AS MATERIALIZED (SELECT v FROM d1 WHERE d >= 2),
+        |e1 AS MATERIALIZED (SELECT pa, pb FROM e0
         |  WHERE pa IN (SELECT v FROM k1) AND pb IN (SELECT v FROM k1)),
-        |d2 AS (SELECT v, COUNT(*) AS d FROM (
+        |d2 AS MATERIALIZED (SELECT v, COUNT(*) AS d FROM (
         |    SELECT pa AS v FROM e1 UNION ALL SELECT pb FROM e1) GROUP BY v),
-        |k2 AS (SELECT v FROM d2 WHERE d >= 2),
-        |e2 AS (SELECT pa, pb FROM e1
+        |k2 AS MATERIALIZED (SELECT v FROM d2 WHERE d >= 2),
+        |e2 AS MATERIALIZED (SELECT pa, pb FROM e1
         |  WHERE pa IN (SELECT v FROM k2) AND pb IN (SELECT v FROM k2)),
-        |d3 AS (SELECT v, COUNT(*) AS d FROM (
+        |d3 AS MATERIALIZED (SELECT v, COUNT(*) AS d FROM (
         |    SELECT pa AS v FROM e2 UNION ALL SELECT pb FROM e2) GROUP BY v),
-        |k3 AS (SELECT v FROM d3 WHERE d >= 2),
-        |e3 AS (SELECT pa, pb FROM e2
+        |k3 AS MATERIALIZED (SELECT v FROM d3 WHERE d >= 2),
+        |e3 AS MATERIALIZED (SELECT pa, pb FROM e2
         |  WHERE pa IN (SELECT v FROM k3) AND pb IN (SELECT v FROM k3))
         |SELECT CAST(1 AS INTEGER) AS round,
         |  CAST((SELECT COUNT(*) FROM k1) AS BIGINT) AS n_vertices,

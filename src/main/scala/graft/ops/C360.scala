@@ -60,27 +60,18 @@ object C360 extends OpModule {
       .orderBy($"c_custkey")
   }
 
-  /** Profile + KMeans RFM segment (fixed seed) — the AML-scored profile
-    * analogue. Trained model ⇒ non-oracled; golden-tested. */
+  /** Profile + KMeans RFM segment (fixed seed,
+    * [[Embeddings.kmeansSegment]]) — the AML-scored profile analogue.
+    * Trained model ⇒ non-oracled; golden-tested. */
   def scoredProfile(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-    import org.apache.spark.ml.Pipeline
     import s.implicits._
     // registry persist (released via OpCache.clear) — a bare .persist
     // here leaked across the rest of a bench session
     val base = OpCache.cached(s, dir, "c360_base")(profile(s, dir))
-    val pipe = new Pipeline().setStages(Array(
-      new VectorAssembler()
-        .setInputCols(Array("recency_days", "frequency", "monetary"))
-        .setOutputCol("raw"),
-      new StandardScaler().setInputCol("raw").setOutputCol("features")
-        .setWithMean(true).setWithStd(true),
-      new KMeans().setK(5).setSeed(42L).setMaxIter(20).setInitMode("random")
-        .setPredictionCol("segment")))
-    pipe.fit(base).transform(base)
-      .select($"c_custkey", $"c_mktsegment", $"recency_days", $"frequency",
-        $"monetary", $"segment")
+    val segment = Embeddings.kmeansSegment(base,
+      Seq("recency_days", "frequency", "monetary"))
+    base.select($"c_custkey", $"c_mktsegment", $"recency_days", $"frequency",
+        $"monetary", segment.as("segment"))
       .orderBy($"c_custkey")
   }
 

@@ -923,9 +923,9 @@ object Dedup extends OpModule {
     * once per nprobe — 5 identical fits for no behavioral gain):
     * fixed-seed KMeans centers + the cell-assigned corpus,
     * OpCache-persisted so all probe stages share one assignment. The
-    * cell is the nearest center by [[nearestCellsExpr]], the same
-    * expression the probe side ranks cells with, so no closure UDF and
-    * no MLlib model crosses into the plan. */
+    * cell is the nearest center by [[Embeddings.nearestCellsExpr]], the
+    * same expression the probe side ranks cells with, so no closure UDF
+    * and no MLlib model crosses into the plan. */
   private[graft] def ivfIndex(s: SparkSession, dir: String)
       : (Array[Array[Double]], DataFrame) =
     ivfIndexOn(s, dir, "", Tables.t(s, dir, "embeddings"))
@@ -940,11 +940,11 @@ object Dedup extends OpModule {
     // family calls [[ivfIndex]] from several stages, and re-fitting the
     // (deterministic, seeded) quantizer each time was pure waste
     val centers = OpCache.memo(s, dir, s"ivf_kmeans$tag")(
-      Embeddings.kmeansCenters(rows.select($"embedding"), k = 16,
-        seed = 42L, maxIter = 10))
+      Embeddings.kmeansCenters(rows.select($"embedding".cast("array<double>")),
+        k = 16, seed = 42L, maxIter = 10))
     val corpus = OpCache.cached(s, dir, s"ivf_corpus$tag")(
-      rows.select($"vec_id", $"embedding",
-        nearestCellsExpr(centers, $"embedding", 1).getItem(0).as("cell")))
+      rows.select($"vec_id", $"embedding", Embeddings.nearestCellsExpr(
+        centers, $"embedding", 1).getItem(0).as("cell")))
     (centers, corpus)
   }
 
@@ -954,44 +954,24 @@ object Dedup extends OpModule {
     ivfSearch(s, centers, corpus, nprobe)
   }
 
-  /** The `nprobe` nearest coarse cells of `vec` — pure expression form
-    * (r8 advice): the 16 centroids ride along as an array<array<
-    * double>> literal, per-cell squared distance is a codegen-visible
-    * zip_with/aggregate fold (same element order as the former
-    * closure's while-loop, so identical IEEE sums), and array_sort
-    * over struct(d, i) reproduces the (distance, index) tiebreak
-    * exactly. No closure crosses the engine boundary. Shared by the
-    * IVF cell assignment and search and the NSW graph build/entry
-    * (round 13). */
-  private def nearestCellsExpr(centers: Array[Array[Double]],
-      vec: org.apache.spark.sql.Column,
-      nprobe: Int): org.apache.spark.sql.Column = {
-    val centersLit = typedLit(centers.map(_.toSeq).toSeq)
-    val cellDists = transform(centersLit, (c, i) => struct(
-      aggregate(
-        zip_with(vec, c, (x, cc) => {
-          val t = x.cast("double") - cc; t * t
-        }),
-        lit(0.0d), (acc, x) => acc + x).as("d"),
-      i.as("i")))
-    transform(slice(array_sort(cellDists), 1, nprobe), st => st.getField("i"))
-  }
-
   /** The IVF candidate set (probe × probed-cell members) — the rows
     * the search SCORES; its count is the search's honest budget. Each
     * row carries `pos`, the rank of its cell among the probe's cells
     * in distance order (0 = nearest): the `nprobe` cells are a prefix
     * of the full order, so the rows with `pos < np` are exactly the
     * nprobe-`np` candidates, and one frame over all cells serves every
-    * point of the sweep. */
+    * point of the sweep. The probe side (10 probes × `nprobe` cells) is
+    * bounded, so it is the broadcast side; left to the planner, AQE
+    * sometimes broadcast the corpus instead, and the sweep's shuffle
+    * bytes changed from run to run. */
   private def ivfCandidates(s: SparkSession, centers: Array[Array[Double]],
       corpus: DataFrame, nprobe: Int): DataFrame = {
     import s.implicits._
-    corpus
+    broadcast(corpus
       .select($"vec_id".as("probe_id"), $"embedding".as("pe"))
       .filter($"probe_id" < 10)
-      .select($"probe_id", $"pe", posexplode(
-        nearestCellsExpr(centers, $"pe", nprobe)).as(Seq("pos", "cell")))
+      .select($"probe_id", $"pe", posexplode(Embeddings.nearestCellsExpr(
+        centers, $"pe", nprobe)).as(Seq("pos", "cell"))))
       .join(corpus, Seq("cell"))
       .filter($"probe_id" =!= $"vec_id")
   }
@@ -1235,7 +1215,8 @@ object Dedup extends OpModule {
       val nodes = corpus
         .repartition(2 * p, $"vec_id")
         .select($"vec_id", $"embedding",
-          explode(nearestCellsExpr(centers, $"embedding", 3)).as("gcell"))
+          explode(Embeddings.nearestCellsExpr(centers, $"embedding", 3))
+            .as("gcell"))
       // SALTED self-join (guide §2.5): the join key has only K=16
       // distinct values and its INPUT is tiny while its OUTPUT explodes
       // quadratically per cell — AQE's byte-based coalescing therefore
@@ -1359,7 +1340,8 @@ object Dedup extends OpModule {
     val wSeed = Window.partitionBy($"probe_id").orderBy($"nbr_id".asc)
     val entry = probes
       .select($"probe_id", $"pe",
-        nearestCellsExpr(centers, $"pe", 1).getItem(0).as("cell"))
+        Embeddings.nearestCellsExpr(centers, $"pe", 1).getItem(0)
+          .as("cell"))
       .join(corpus, Seq("cell"))
       .filter($"probe_id" =!= $"vec_id")
       .select($"probe_id", $"vec_id".as("nbr_id"), $"pe", $"embedding")

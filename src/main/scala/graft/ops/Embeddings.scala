@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -103,23 +103,70 @@ object Embeddings extends OpModule {
       .orderBy($"vec_id")
   }
 
-  /** Fixed-seed k-means centers of a one-column `array<float>` frame:
+  /** Fixed-seed k-means centers of a one-column `array<double>` frame:
     * MLlib's RDD k-means, random init, the given seed and iteration
     * count. The `ml.clustering.KMeans` estimator runs this same
     * algorithm but adds a feature-count pass before it and a
     * cluster-size pass after it, both only for its logging — two extra
     * scans of the training set. The centers equal the estimator's for
-    * the same k, seed, iterations and init (pinned in ScalaTest). Shared
-    * by the IVF quantizer (`Dedup.ivfIndexOn`) and [[pqCodebooks]]. */
+    * the same k, seed, iterations and init (pinned in ScalaTest). Random
+    * init samples by partition, so the same rows in the same partitions
+    * give the same centers. Shared by the IVF quantizer
+    * (`Dedup.ivfIndexOn`), [[pqCodebooks]] and [[kmeansSegment]]. */
   private[graft] def kmeansCenters(features: DataFrame, k: Int, seed: Long,
       maxIter: Int): Array[Array[Double]] = {
     import org.apache.spark.mllib.clustering.KMeans
     import org.apache.spark.mllib.linalg.Vectors
     val points = features.rdd.map(r =>
-      Vectors.dense(r.getSeq[Float](0).map(_.toDouble).toArray))
+      Vectors.dense(r.getSeq[Double](0).toArray))
     new KMeans().setK(k).setSeed(seed).setMaxIterations(maxIter)
       .setInitializationMode(KMeans.RANDOM)
       .run(points).clusterCenters.map(_.toArray)
+  }
+
+  /** The `nprobe` nearest centers of `vec` — pure expression form
+    * (r8 advice): the centers ride along as an array<array<double>>
+    * literal, per-center squared distance is a codegen-visible
+    * zip_with/aggregate fold (same element order as the former
+    * closure's while-loop, so identical IEEE sums), and array_sort
+    * over struct(d, i) reproduces the (distance, index) tiebreak
+    * exactly. No closure crosses the engine boundary. Shared by
+    * [[kmeansSegment]], the IVF cell assignment and search and the NSW
+    * graph build/entry (round 13). */
+  private[graft] def nearestCellsExpr(centers: Array[Array[Double]],
+      vec: Column, nprobe: Int): Column = {
+    val centersLit = typedLit(centers.map(_.toSeq).toSeq)
+    val cellDists = transform(centersLit, (c, i) => struct(
+      aggregate(
+        zip_with(vec, c, (x, cc) => {
+          val t = x.cast("double") - cc; t * t
+        }),
+        lit(0.0d), (acc, x) => acc + x).as("d"),
+      i.as("i")))
+    transform(slice(array_sort(cellDists), 1, nprobe), st => st.getField("i"))
+  }
+
+  /** K-means segment (k = 5, seed 42, 20 iterations) over `cols`
+    * standardized to mean 0 and unit sample std — the segmentation of
+    * `MlOps.mlSegmentation` and `C360.scoredProfile`. A `StandardScaler`
+    * fit gives the means and stds; the scaled features are its model's
+    * own arithmetic, `(x − mean)·(1/std)`, as SQL, so they equal its
+    * `transform` bit for bit. Returns the IntegerType segment, an
+    * expression over `cols` only. Persist `data`: both fits must read
+    * the same partitions. */
+  private[graft] def kmeansSegment(data: DataFrame,
+      cols: Seq[String]): Column = {
+    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+    val scaler = new StandardScaler().setInputCol("__raw")
+      .setWithMean(true).setWithStd(true)
+      .fit(new VectorAssembler().setInputCols(cols.toArray)
+        .setOutputCol("__raw").transform(data))
+    val inv = scaler.std.toArray.map(v => if (v == 0) 0.0 else 1.0 / v)
+    val scaled = array(cols.indices.map(i =>
+      (col(cols(i)).cast("double") - scaler.mean(i)) * inv(i)): _*)
+    val centers = kmeansCenters(data.select(scaled), k = 5, seed = 42L,
+      maxIter = 20)
+    nearestCellsExpr(centers, scaled, 1).getItem(0)
   }
 
   /** LEARNED product-quantization codebook — the k-means refinement of
@@ -159,7 +206,8 @@ object Embeddings extends OpModule {
       // keeps block order, each fit is seed-deterministic, so the
       // codebook array is bit-identical to the sequential build
       Par.map((0 until 8).toSeq) { b =>
-        kmeansCenters(e.select(expr(s"slice(embedding, ${b * 8 + 1}, 8)")),
+        kmeansCenters(e.select(
+            expr(s"slice(embedding, ${b * 8 + 1}, 8)").cast("array<double>")),
           k = 16, seed = 42L + b, maxIter = 5)
           .map(_.map(x => math.floor(x * 1000000 + 0.5).toLong))
       }.toArray

@@ -122,17 +122,14 @@ object MlOps extends OpModule {
           .getItem(1).as("p1"))
   }
 
-  /** KMeans customer segmentation on RFM features, k=5, fixed seed.
-    * Emits cluster sizes + centroid-distance profile. */
+  /** KMeans customer segmentation on RFM features, k=5, fixed seed
+    * ([[Embeddings.kmeansSegment]]). Emits cluster sizes. */
   def mlSegmentation(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-    import org.apache.spark.ml.Pipeline
     import s.implicits._
     val o = Tables.t(s, dir, "orders")
     val maxd = o.agg(max($"o_orderdate").cast("date").as("maxd"))
-    // registry persist (released via OpCache.clear): assembler/scaler
-    // fits + every KMeans iteration re-derive the input otherwise
+    // registry persist (released via OpCache.clear): the scaler fit and
+    // every KMeans iteration re-derive the input otherwise
     val rfm = OpCache.cached(s, dir, "ml_rfm") {
       o.crossJoin(broadcast(maxd))
         .groupBy($"o_custkey")
@@ -142,17 +139,9 @@ object MlOps extends OpModule {
           count(lit(1)).cast("double").as("frequency"),
           sumMoney($"o_totalprice").as("monetary"))
     }
-    val pipe = new Pipeline().setStages(Array(
-      new VectorAssembler()
-        .setInputCols(Array("recency", "frequency", "monetary"))
-        .setOutputCol("raw"),
-      new StandardScaler().setInputCol("raw").setOutputCol("features")
-        .setWithMean(true).setWithStd(true),
-      // random init: k-means|| spends several Spark jobs picking seeds,
-      // which dwarfs the actual clustering at this k
-      new KMeans().setK(5).setSeed(42L).setMaxIter(20).setInitMode("random")))
-    pipe.fit(rfm).transform(rfm)
-      .groupBy($"prediction")
+    val segment = Embeddings.kmeansSegment(rfm,
+      Seq("recency", "frequency", "monetary"))
+    rfm.groupBy(segment.as("prediction"))
       .agg(count(lit(1)).as("n"))
       .orderBy($"prediction")
   }
@@ -474,10 +463,11 @@ object MlOps extends OpModule {
     * downstream is an exact integer sum cast once to double.
     *
     * Scale shape (round 8): one custkey shuffle for history features,
-    * a semi-join label, then three TWO-LEVEL exact percent-ranks and
-    * one two-level decile ([[Ranks.withGlobalRn]] — range-binned
-    * partitioned windows + broadcast offsets; zero single-partition
-    * sorts at any corpus size). percent_rank is reconstructed as
+    * a semi-join label, then the three exact percent-ranks from one
+    * long-form rank ([[Ranks.axisRanks]]) and one two-level decile
+    * ([[Ranks.withGlobalRn]] — range-binned partitioned windows +
+    * broadcast offsets; zero single-partition sorts at any corpus
+    * size). percent_rank is reconstructed as
     * (rn−1)/(n−1) — the identical IEEE division Spark's PercentRank
     * evaluates over this tie-free total order, so the oracle hash is
     * unchanged; [[Ranks.approxNtile]] is the tested approx-boundary
@@ -541,10 +531,9 @@ object MlOps extends OpModule {
 
   /** Shared by [[mlCalibration]]/[[mlAuc]]: the leakage-free temporal
     * split (features strictly before cutoff = max date − 365 d, label
-    * = any order after), the three exact percent-ranks via
-    * [[Ranks.withGlobalRn]]'s two-level rank (recency negated so bins
-    * stay ASC-aligned with its DESC axis), and the integer per-myriad
-    * composite score. */
+    * = any order after), the three exact percent-ranks from one
+    * [[Ranks.axisRanks]] (recency negated for its DESC axis), and the
+    * integer per-myriad composite score. */
   private def rfmScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val o = Tables.t(s, dir, "orders")
@@ -562,56 +551,13 @@ object MlOps extends OpModule {
     val labeled = OpCache.cached(s, dir, "rfm_labeled")(
       hist.join(future, $"o_custkey" === $"f_custkey", "left")
         .withColumn("label", when($"f_custkey".isNotNull, 1L).otherwise(0L)))
-    // ONE long-form two-level rank replaces the former three (r16,
-    // guide §2.4 — the r15 report's left-on-table item): each axis
-    // contributes one (custkey, axis, v) row with v an EXACT double —
-    // recency/frequency are small integers (double-exact) and monetary
-    // is already the double sumMoney produces, so the union's sort key
-    // loses nothing (the r15 decimal-collision concern applied to a
-    // decimal axis this table does not have). Within axis `a`, rows
-    // ordered by (axis, v, custkey) are the identical permutation the
-    // old per-axis rank sorted ((recency DESC ≡ -recency ASC)), each
-    // axis holds exactly n = N/3 rows, so per-axis rank = global_rn −
-    // a·n and percent_rank = (rank−1)/(n−1) — the same integers, the
-    // same one IEEE division, hence bit-identical pr_r/pr_f/pr_m. One
-    // binning pass + one bin-partitioned window + one pivot replace
-    // three of each plus three custkey join-backs. PRECONDITION: every
-    // v is non-null (all three are aggregates over non-empty
-    // per-custkey groups). A NULL v would make __bo null, and
-    // withGlobalRn's join on the bin column would drop that row after
-    // ranking while __n still counts 3N, shifting every axis offset —
-    // a schema change that admits NULLs must handle them before the
-    // union.
-    val longDf = labeled.select($"o_custkey", lit(0L).as("axis"),
-        (-$"recency_days").cast("double").as("v"))
-      .unionByName(labeled.select($"o_custkey", lit(1L).as("axis"),
-        $"frequency".cast("double").as("v")))
-      .unionByName(labeled.select($"o_custkey", lit(2L).as("axis"),
-        $"monetary".as("v")))
-    // binOn must be ASC-monotone over the (axis, v) lexicographic order
-    // (the withGlobalRn contract): per-axis min/max normalization maps
-    // each axis's v into [axis·2, axis·2 + 1] — monotone within an axis
-    // (IEEE subtract/divide by a positive constant are monotone) and
-    // strictly separated across axes. Boundary QUALITY only affects
-    // balance, never the answer.
-    val mm = longDf.groupBy($"axis")
-      .agg(min($"v").as("__mn"), max($"v").as("__mx"))
-    val withBin = OpCache.cached(s, dir, "rfm_long")(
-      longDf.join(broadcast(mm), Seq("axis"))
-        .withColumn("__bo", $"axis".cast("double") * 2.0 +
-          when($"__mx" > $"__mn",
-            ($"v" - $"__mn") / ($"__mx" - $"__mn")).otherwise(lit(0.0d)))
-        .drop("__mn", "__mx"))
-    val ranked = Ranks.withGlobalRn(withBin, $"__bo",
-      Seq($"axis", $"v", $"o_custkey"), "__rn", "__n", "rfm_long")
-    val n1 = expr("__n div 3")
-    val prs = ranked
-      .select($"o_custkey", $"axis",
-        Ranks.percentRankUnique($"__rn" - $"axis" * n1, n1).as("pr"))
-      .groupBy($"o_custkey").agg(
-        max(when($"axis" === 0L, $"pr")).as("pr_r"),
-        max(when($"axis" === 1L, $"pr")).as("pr_f"),
-        max(when($"axis" === 2L, $"pr")).as("pr_m"))
+    // recency/frequency are small integers and monetary the double
+    // sumMoney produces: all exact as axisRanks' doubles
+    val prs = Ranks.axisRanks(labeled, "o_custkey",
+        Seq("pr_r" -> -$"recency_days", "pr_f" -> $"frequency",
+          "pr_m" -> $"monetary"), "rfm_long",
+        persist = OpCache.cached(s, dir, "rfm_long")(_))(
+      Ranks.percentRankUnique)
     labeled.join(prs, Seq("o_custkey"))
       .withColumn("score_pm", expr(
         "CAST(ROUND((pr_r + pr_f + pr_m) / 3 * 10000) AS BIGINT)"))

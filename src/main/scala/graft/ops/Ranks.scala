@@ -52,8 +52,9 @@ object Ranks {
     *
     * Adds `rnCol` (1-based global row_number) and `nCol` (total rows)
     * to `df`; all intermediate columns are dropped. `tag` keeps
-    * internal column names unique when stacking several ranks on one
-    * frame (RFM needs three, calibration four).
+    * internal column names unique when several ranks meet in one plan
+    * (calibration's decile over the RFM rank); several axes of one key
+    * take [[axisRanks]] instead.
     *
     * @param binOn non-null numeric column, ASC-aligned with `order`'s
     *              leading key (pass `-key` for a DESC leading key);
@@ -69,8 +70,8 @@ object Ranks {
     val off = s"__off_$tag"
     // the input is read three times (boundary sketch, bin counts, the
     // ranked pass itself) — without the persist hook each read would
-    // recompute the ENTIRE upstream lineage, and stacked ranks (RFM ×3,
-    // calibration ×4) would multiply that recomputation geometrically
+    // recompute the ENTIRE upstream lineage, and stacked ranks would
+    // multiply that recomputation geometrically
     val in = persist(df)
     val probs = (1 until bins).map(i => i.toDouble / bins)
     val bnds = in.agg(percentile_approx(binOn.cast("double"),
@@ -95,6 +96,46 @@ object Ranks {
       .join(broadcast(offsets), Seq(b))
       .withColumn(rnCol, col(off) + col(lrn))
       .drop(b, lrn, off)
+  }
+
+  /** Exact per-axis ranks of several sort axes of one key from ONE
+    * [[withGlobalRn]] over the long form: each axis adds a (key, axis, v)
+    * row per input row, v an ascending double (negate a DESC axis) that
+    * must be exact as a double (integers below 2⁵³, or doubles). Within
+    * axis a, (axis, v, key) order is the per-axis (v, key) order and
+    * every axis holds n = N / #axes rows, so the axis rank is
+    * global_rn − a·n. One binning pass, one bin exchange and one offset
+    * rollup serve all axes. Returns `key` plus one column per axis,
+    * named by its pair, holding `f(rank, n)`; `persist` wraps the binned
+    * long frame, which the rank reads three times. A NULL v would sort
+    * outside its axis and shift the later axes, so it raises an error
+    * in the pass that reads it (no extra job). */
+  def axisRanks(df: DataFrame, key: String, axes: Seq[(String, Column)],
+      tag: String, persist: DataFrame => DataFrame = identity)
+      (f: (Column, Column) => Column): DataFrame = {
+    val (axis, v) = (col("__axis"), col("__v"))
+    val long = axes.zipWithIndex.map { case ((name, value), a) =>
+      df.select(col(key), lit(a.toLong).as("__axis"),
+        coalesce(value.cast("double"),
+          raise_error(lit(s"$tag: NULL value on rank axis $name"))).as("__v"))
+    }.reduce(_ unionByName _)
+    // binOn must be ASC-monotone over (axis, v) (the withGlobalRn
+    // contract): min/max scaling maps axis a's v monotonically into
+    // [2a, 2a + 1], so the axes never share a bin range
+    val mm = long.groupBy(axis).agg(min(v).as("__mn"), max(v).as("__mx"))
+    val (mn, mx) = (col("__mn"), col("__mx"))
+    val binned = persist(long.join(broadcast(mm), Seq("__axis"))
+      .withColumn("__bo", axis.cast("double") * 2.0 +
+        when(mx > mn, (v - mn) / (mx - mn)).otherwise(lit(0.0d)))
+      .drop("__mn", "__mx"))
+    val n = expr(s"__n div ${axes.size}")
+    withGlobalRn(binned, col("__bo"), Seq(axis, v, col(key)),
+        "__rn", "__n", tag)
+      .select(col(key), axis, f(col("__rn") - axis * n, n).as("__out"))
+      .groupBy(col(key))
+      .agg(max(when(axis === 0L, col("__out"))).as(axes.head._1),
+        axes.indices.tail.map(a =>
+          max(when(axis === a.toLong, col("__out"))).as(axes(a)._1)): _*)
   }
 
   /** Exact global EXCLUSIVE running sum of `valueCol` over `order` —

@@ -84,6 +84,28 @@ class InfraSpec extends SparkSpec {
     } finally graft.ops.OpCache.clear(ns)
   }
 
+  /** The jobs of building query `name` in a fresh session: its tables'
+    * schema reads, the persisted input and every driver-side fit. */
+  private def buildJobs(name: String): Int = {
+    val ns = spark.newSession()
+    try jobsDuring(SparkEntry.queries(name)(ns, sf))._2
+    finally graft.ops.OpCache.clear(ns)
+  }
+
+  // The two k-means segment fits (Embeddings.kmeansSegment). Each build
+  // is: the schema read of every table, the maxd broadcast, the scaler
+  // fit (which also fills the persisted input), k-means' random init
+  // and one job per Lloyd iteration until it converges (inherent). The
+  // ml estimator's feature-count and cluster-size logging passes are
+  // gone; a pass added to either fit later fails here.
+  test("the segmentation fit runs a pinned number of jobs") {
+    assert(buildJobs("q_ml_segmentation") === 22) // 26 with the ml Pipeline
+  }
+
+  test("the scored-profile fit runs a pinned number of jobs") {
+    assert(buildJobs("q_c360_scored") === 35) // 39 with the ml Pipeline
+  }
+
   test("streamParts sizes a directory-stored table by the files under it") {
     // two sparse 20 MB part files: 40 MB at 16 MB a partition is 3
     // partitions on the 4-core spec session (the directory entry alone

@@ -736,6 +736,40 @@ class OperatorGoldenSpec extends SparkSpec {
       s"q_ml_recommend rows changed: md5 $digest")
   }
 
+  /** (row count, MD5 of the sorted rows) of a query over `dir`, built
+    * in a fresh session so no earlier test's persisted frames feed it. */
+  private def pinnedRows(name: String, dir: String): (Int, String) = {
+    val ns = spark.newSession()
+    try {
+      val rows = SparkEntry.queries(name)(ns, dir).collect()
+        .map(_.mkString(",")).sorted
+      (rows.length, java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString)
+    } finally OpCache.clear(ns)
+  }
+
+  // The two k-means segment ops, pinned to the rows the ml Pipeline
+  // (assembler → scaler → ml.clustering.KMeans) gave before both moved
+  // onto Embeddings.kmeansSegment; the digests were taken from that
+  // Pipeline code. Random init samples by partition, so a pin holds only
+  // where the fit's persisted input is partitioned the same on every
+  // build. Segmentation's input is hash-partitioned by custkey: pinned
+  // at sf0.01. The scored profile's input is range-partitioned by its
+  // orderBy, whose sampled bounds moved from build to build at sf0.01
+  // (and its segments with them); at sf0.001 they were the same on
+  // every build measured: pinned there.
+  test("k-means segmentation output is pinned at sf0.01 (spec session)") {
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    assert(pinnedRows("q_ml_segmentation", sf001) ===
+      ((5, "5ff78f40e74b06e63b1d8bd12acc63d7")))
+  }
+
+  test("scored-profile output is pinned at sf0.001 (spec session)") {
+    assert(pinnedRows("q_c360_scored", sf) ===
+      ((150, "38210ace9374331cb502ffb3c0168464")))
+  }
+
   test("funnel stages are monotone non-increasing") {
     val stages = run("q_feat_funnel")
       .select($"stage", $"n_users").as[(String, Long)].collect().toMap
@@ -2126,7 +2160,7 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(same(centers, ivfModel.clusterCenters.map(_.toArray)),
       "IVF centers differ from the ml estimator's")
     // one PQ block (Embeddings.pqCodebooks's parameters for block 3)
-    val blk = emb.select(expr("slice(embedding, 25, 8)"))
+    val blk = emb.select(expr("slice(embedding, 25, 8)").cast("array<double>"))
     assert(same(Embeddings.kmeansCenters(blk, 16, 45L, 5),
       reference(blk, 16, 45L, 5).clusterCenters.map(_.toArray)),
       "PQ block centers differ from the ml estimator's")
@@ -2139,6 +2173,50 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(joined.count() === emb.count())
     assert(joined.filter($"cell" =!= $"want").count() === 0L,
       "IVF cell assignment disagrees with KMeansModel.transform")
+    // the RFM segment fits (Embeddings.kmeansSegment's parameters) over
+    // the StandardScaler's own output, on the inputs of
+    // MlOps.mlSegmentation and C360.scoredProfile at sf0.001 and sf0.01:
+    // the direct trainer's centers, and kmeansSegment's SQL-scaled
+    // segment against KMeansModel.transform, row for row
+    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+    import org.apache.spark.ml.functions.vector_to_array
+    def segments(what: String, data: DataFrame, key: String,
+        cols: Seq[String]): Unit = {
+      val raw = new VectorAssembler().setInputCols(cols.toArray)
+        .setOutputCol("raw").transform(data)
+      val scaled = new StandardScaler().setInputCol("raw").setOutputCol("f")
+        .setWithMean(true).setWithStd(true).fit(raw).transform(raw)
+        .select(col(key), vector_to_array($"f").as("f"))
+      val model = reference(scaled.select($"f"), 5, 42L, 20)
+      assert(same(Embeddings.kmeansCenters(scaled.select($"f"), 5, 42L, 20),
+        model.clusterCenters.map(_.toArray)),
+        s"$what: centers differ from the ml estimator's")
+      val want = model.setPredictionCol("want").transform(scaled
+        .select(col(key), array_to_vector($"f").as("features")))
+      val got = data.select(col(key), Embeddings.kmeansSegment(data, cols)
+        .as("seg")).join(want, key)
+      assert(got.count() === data.count())
+      assert(got.filter($"seg" =!= $"want").count() === 0L,
+        s"$what: segment disagrees with KMeansModel.transform")
+    }
+    Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)
+      .foreach { dir =>
+        val o = Tables.t(spark, dir, "orders")
+        val maxd = o.agg(max($"o_orderdate").cast("date").as("maxd"))
+        val rfm = o.crossJoin(broadcast(maxd)).groupBy($"o_custkey")
+          .agg(datediff(max($"maxd"), max($"o_orderdate".cast("date")))
+            .cast("double").as("recency"),
+            count(lit(1)).cast("double").as("frequency"),
+            Det.sumMoney($"o_totalprice").as("monetary"))
+          .cache()
+        val profile = C360.profile(spark, dir).cache()
+        try {
+          segments(s"segmentation $dir", rfm, "o_custkey",
+            Seq("recency", "frequency", "monetary"))
+          segments(s"scored profile $dir", profile, "c_custkey",
+            Seq("recency_days", "frequency", "monetary"))
+        } finally { rfm.unpersist(); profile.unpersist() }
+      }
   }
 
   test("graph-ANN: recall monotone in beam width, ≥ IVF at ≤-budget points") {
@@ -2540,6 +2618,46 @@ class OperatorGoldenSpec extends SparkSpec {
     assert((bound <= Aggregates.BroadcastAdjMaxEdges) ===
       (exact <= Aggregates.BroadcastAdjMaxEdges),
       "gate verdict diverged between bound and exact count at this SF")
+  }
+
+  test("axisRanks ≡ one single-partition row_number per axis (randomized)") {
+    // Newly covered: the long-form rank against the plain per-axis
+    // window, over heavy ties, a negated (DESC) axis and a double axis.
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(777)
+    val df = (0 until 613).map(k => (k.toLong, rnd.nextInt(9).toLong,
+        rnd.nextInt(50) - 25L, rnd.nextInt(1000) / 8.0))
+      .toDF("k", "a", "b", "c")
+    val axes = Seq("ra" -> -$"a", "rb" -> $"b", "rc" -> $"c")
+    val got = Ranks.axisRanks(df, "k", axes, "law_axes")(
+      (rn, n) => rn * 100000 + n)
+    val want = df.select($"k" +: axes.map { case (name, v) =>
+      (row_number().over(Window.orderBy(v, $"k")).cast("long") * 100000 +
+        613L).as(name) }: _*)
+    assert(got.count() === 613L)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("axisRanks fails loudly on a NULL axis value (RFM segments, NULL monetary)") {
+    // One customer's order prices are NULL, so its monetary sum is NULL.
+    // A NULL sorts outside its axis and would shift the later axes'
+    // ranks; the rank must raise instead of returning shifted codes.
+    withTmpDir("graft_null_axis") { dir =>
+      val o = Tables.t(spark, sf, "orders")
+      val victim = o.agg(min($"o_custkey")).first().get(0)
+      o.withColumn("o_totalprice", when($"o_custkey" =!= lit(victim),
+          $"o_totalprice"))
+        .write.parquet(s"$dir/orders.parquet")
+      val ns = spark.newSession()
+      try {
+        val e = intercept[Exception](
+          SparkEntry.queries("q_feat_rfm_segments")(ns, dir).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        assert(msgs.exists(_.contains("NULL value on rank axis m")),
+          s"unexpected failure: $e")
+      } finally OpCache.clear(ns)
+    }
   }
 
   test("withGlobalRn ≡ single-partition row_number (randomized)") {

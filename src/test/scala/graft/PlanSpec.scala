@@ -634,8 +634,8 @@ class PlanSpec extends SparkSpec {
     val whitelist: Map[String, String] = Map(
       "q_agg_leaderboard" -> "LIMIT-10 frame (TakeOrderedAndProject)",
       "q_feat_tier_migration" -> "O(bins) offsets rollup (Ranks)",
-      "q_feat_rfm_segments" -> "O(bins) offsets rollup (Ranks) x3",
-      "q_ml_calibration" -> "O(bins) offsets rollup (Ranks) x4",
+      "q_feat_rfm_segments" -> "O(bins) offsets rollup (Ranks.axisRanks: 3 axes, 1 rank)",
+      "q_ml_calibration" -> "O(bins) offsets rollups (Ranks.axisRanks + decile) x2",
       "q_ml_auc" -> "O(bins) + O(score domain<=10001) rollups",
       "q_split_temporal" -> "O(days) per-day-count rollup",
       "q_sample_mix" -> "O(sources) per-source-total rollup",
