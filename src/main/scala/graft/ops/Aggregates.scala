@@ -384,7 +384,15 @@ object Aggregates extends OpModule {
     * (the NSW walk's per-round precedent): each iteration plans over
     * materialized rows instead of re-planning the whole unrolled chain
     * and re-running the node `distinct`, so the lineage stays one
-    * iteration deep. The last iteration stays in the returned plan. */
+    * iteration deep. The last iteration stays in the returned plan.
+    *
+    * Both joins to an O(nodes) side (the out-degrees in the edge-list
+    * build, the contributions in each step) carry a broadcast hint.
+    * Planned as shuffled joins, their final shape was settled at run
+    * time: the same data built the edge list and the rank vectors on 1
+    * or on 4 partitions from one build to the next (21–24 jobs, their
+    * tasks moving with them). With the hints the plan is fixed before
+    * any stage runs. */
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -397,14 +405,14 @@ object Aggregates extends OpModule {
         .groupBy($"event_type".as("src"), $"dst")
         .agg(count(lit(1)).as("n"))
       val out = edges.groupBy($"src").agg(sum($"n").as("n_out"))
-      edges.join(out, Seq("src"))
+      edges.join(broadcast(out), Seq("src"))
     }
     val nodes = e.select($"src".as("node")).distinct().localCheckpoint()
     def step(pr: DataFrame): DataFrame = {
       val contrib = e.join(broadcast(pr), $"src" === $"node")
         .select($"dst", expr("pr * n div n_out").as("c"))
         .groupBy($"dst").agg(sum($"c").as("s"))
-      nodes.join(contrib, $"node" === $"dst", "left")
+      nodes.join(broadcast(contrib), $"node" === $"dst", "left")
         .select($"node",
           expr("CAST(30000 + 17 * coalesce(s, 0) div 20 AS BIGINT)").as("pr"))
     }

@@ -69,13 +69,6 @@ object Dedup extends OpModule {
     * (both join sides + the per-doc counts) would otherwise re-run the
     * scan+explode each. MEMORY_AND_DISK is the level that still works
     * when the exploded table outgrows executor memory at scale. */
-  /** Persist-once intermediates (shingle rows, minhash signatures,
-    * banded vectors) live in the module-wide [[OpCache]], released per
-    * bench query / on demand via `OpCache.clear`. */
-  private def cached(s: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame =
-    OpCache.cached(s, dir, key)(build)
-
   private def shingleRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // explode_OUTER: plain explode makes the optimizer synthesize a
@@ -83,7 +76,7 @@ object Dedup extends OpModule {
     // shingle-building expression inlined (re-evaluated per row) —
     // measured several× slower. Outer explode skips that filter; the
     // ≥5-word guard already guarantees ≥1 shingle per doc.
-    cached(s, dir, "sh") {
+    OpCache.cached(s, dir, "sh") {
       shingles(s, dir).select($"doc_id", explode_outer($"sh").as("shingle"))
         .filter($"shingle".isNotNull)
     }
@@ -94,7 +87,7 @@ object Dedup extends OpModule {
     * (without the persist the broadcast self-join re-aggregates it per
     * side — measured ~1 s extra at sf0.1). */
   private def sigTable(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "mh_sig") { minhashOf(shingleRows(s, dir)) }
+    OpCache.cached(s, dir, "mh_sig") { minhashOf(shingleRows(s, dir)) }
 
   /** Affine MinHash signatures (mh0..mh7) from (doc_id, shingle) rows.
     * Shared by the session sig table, the capped-doc fallback, and the
@@ -134,7 +127,7 @@ object Dedup extends OpModule {
     * (n_sh) always come from the FULL shingle table. */
   private def prunedShingleRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    cached(s, dir, "sh_pruned") {
+    OpCache.cached(s, dir, "sh_pruned") {
       val sh = shingleRows(s, dir)
       val lowDf = sh.groupBy($"shingle")
         .agg(count(lit(1)).as("df"))
@@ -154,7 +147,7 @@ object Dedup extends OpModule {
     * keeps the predicate float-free on both engines. */
   private def cappedDocs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    cached(s, dir, "sh_capped_docs") {
+    OpCache.cached(s, dir, "sh_capped_docs") {
       val full = shingleRows(s, dir).groupBy($"doc_id")
         .agg(count(lit(1)).as("n_sh"))
       val kept = prunedShingleRows(s, dir).groupBy($"doc_id")
@@ -177,7 +170,7 @@ object Dedup extends OpModule {
     * quadratic in cluster size) rather than with shingle df. */
   private def cappedCandidates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    cached(s, dir, "sh_capped_cand") {
+    OpCache.cached(s, dir, "sh_capped_cand") {
       val sig = minhashOf(shingleRows(s, dir)
         .join(cappedDocs(s, dir), Seq("doc_id"), "left_semi"))
       val banded = sig.select($"doc_id", explode(array((0 until 4).map { b =>
@@ -207,7 +200,7 @@ object Dedup extends OpModule {
   private def cappedVerified(s: SparkSession, dir: String,
       bothDirections: Boolean): DataFrame = {
     import s.implicits._
-    val both = cached(s, dir, "sh_capped_verified") {
+    val both = OpCache.cached(s, dir, "sh_capped_verified") {
       val sh = shingleRows(s, dir)
       val cnt = sh.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
       cappedCandidates(s, dir)
@@ -387,7 +380,7 @@ object Dedup extends OpModule {
     * recursive CTE computing the same reachability minimum. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    cached(s, dir, "dedup_cc_labels")(dedupClustersBuild(s, dir))
+    OpCache.cached(s, dir, "dedup_cc_labels")(dedupClustersBuild(s, dir))
       .orderBy($"doc_id")
   }
 
@@ -525,7 +518,7 @@ object Dedup extends OpModule {
     * sides of the Hamming band join. */
   private def simhash60(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    cached(s, dir, "simhash60") {
+    OpCache.cached(s, dir, "simhash60") {
       val words = Tables.t(s, dir, "documents")
         .select($"doc_id",
           explode(array_distinct(split($"text", " "))).as("word"))
@@ -861,7 +854,7 @@ object Dedup extends OpModule {
       .select($"embedding".as("pe"), $"nrm".as("pn"))
     // persisted: four consumers below (two key sides, two vector sides)
     // would otherwise re-run the scan + pivot job + dot products each
-    val banded = cached(s, dir, "emb_banded") {
+    val banded = OpCache.cached(s, dir, "emb_banded") {
       e.crossJoin(broadcast(piv))
         .select($"vec_id", $"embedding", $"nrm",
           floor(sqrt(greatest(lit(0.0),
@@ -1017,7 +1010,6 @@ object Dedup extends OpModule {
     * the frame runs no Spark job once the index is memoized. */
   def simIvfSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val points = Seq(1, 2, 4, 8, 16)
     val (centers, corpus) = ivfIndex(s, dir)
     val scored = ivfScored(s,
@@ -1025,13 +1017,26 @@ object Dedup extends OpModule {
     // a pair whose cell ranks `pos` is a candidate at every np > pos
     val fanned = scored.withColumn("nprobe",
       explode(filter(typedLit(points), np => np > $"pos")))
-    val w = Window.partitionBy($"nprobe", $"probe_id")
+    sweepRecall(s, dir, "nprobe", points, fanned)
+  }
+
+  /** The recall rows of an ANN sweep: `scored` holds every scored
+    * candidate (`point`, probe_id, nbr_id, sim4) of every sweep point.
+    * Per point: `n_scored` (its budget), `n_matched` (its top-10 per
+    * probe that is in the brute-force truth), `n_expected` and the
+    * integer `recall_ppm`. One planned query over the unpersisted
+    * truth; building it runs no job. */
+  private def sweepRecall(s: SparkSession, dir: String, point: String,
+      points: Seq[Int], scored: DataFrame): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(point), $"probe_id")
       .orderBy($"sim4".desc, $"nbr_id".asc)
     val truth = simTopkCosine(s, dir)
       .select($"probe_id", $"nbr_id", lit(true).as("hit"))
-    val perPoint = fanned.withColumn("rank", row_number().over(w))
+    val perPoint = scored.withColumn("rank", row_number().over(w))
       .join(truth, Seq("probe_id", "nbr_id"), "left")
-      .groupBy($"nprobe")
+      .groupBy(col(point))
       .agg(count(lit(1)).as("n_scored"),
         count(when($"rank" <= 10 && $"hit", lit(1))).as("n_matched"))
     val expected = truth.agg(count(lit(1)).as("n_expected"))
@@ -1039,15 +1044,15 @@ object Dedup extends OpModule {
     // yields its row, as a per-point composition would. Both sides
     // joined to it hold at most one row per point, and the list is one
     // partition, so the final sort needs no exchange.
-    points.toDF("nprobe").coalesce(1)
-      .join(broadcast(perPoint), Seq("nprobe"), "left")
+    points.toDF(point).coalesce(1)
+      .join(broadcast(perPoint), Seq(point), "left")
       .crossJoin(broadcast(expected))
-      .select($"nprobe",
+      .select(col(point),
         coalesce($"n_scored", lit(0L)).as("n_scored"),
         coalesce($"n_matched", lit(0L)).as("n_matched"),
         $"n_expected")
       .withColumn("recall_ppm", expr("n_matched * 1000000 div n_expected"))
-      .orderBy($"nprobe")
+      .orderBy(col(point))
   }
 
   /** IVF-PQ retrieval with ASYMMETRIC-DISTANCE (ADC) scoring — the
@@ -1160,7 +1165,7 @@ object Dedup extends OpModule {
     * and the finished graph is O(n·M) rows keyed by source — the
     * shuffle-free adjacency a distributed beam search walks. Fully
     * deterministic (seeded cells, exact distances, id tiebreaks). */
-  private def nswGraph(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def nswGraph(s: SparkSession, dir: String): DataFrame = {
     val (centers, corpus) = ivfIndex(s, dir)
     nswGraphOn(s, dir, "", centers, corpus)
   }
@@ -1292,64 +1297,77 @@ object Dedup extends OpModule {
       g.select($"src", $"dst")
     }
 
-  /** Distributed BEAM SEARCH over the NSW graph: all probes advance in
-    * lockstep rounds (the Pregel shape — per round ONE equi-join of
-    * the current beams against the O(n·M) adjacency, one probe-bounded
-    * scoring join, one WindowGroupLimit re-beam; rounds fixed and
-    * unrolled, per-round persists bound lineage). Entry = the probe's
-    * home-cell members scored exactly (the IVF-1 seed). The visited
-    * set is per-probe exact (anti-join), so a candidate is scored at
-    * most once — the scored-candidate count is the search's honest
-    * BUDGET, returned beside the results so the recall laws compare
-    * equal-budget searches, not equal knobs. Returns every visited
-    * (probe, neighbor, sim4). */
-  private def nswVisited(s: SparkSession, dir: String,
-      beamWidth: Int, rounds: Int): (DataFrame, () => Long) = {
-    val (centers, corpus) = ivfIndex(s, dir)
-    nswVisitedFrom(s, centers, corpus, nswGraph(s, dir), beamWidth, rounds)
-  }
+  /** Rounds of every NSW beam walk. */
+  private val NswRounds = 3
 
-  /** The same beam search over an EXPLICIT (centers, corpus, graph)
-    * index — one code path shared by the in-session build above and
-    * the persisted-artifact search ([[simHnswSaved]]), so the
-    * saved ≡ in-session equality law compares searches that differ
-    * ONLY in where the index came from. */
-  private def nswVisitedFrom(s: SparkSession,
+  /** Distributed BEAM SEARCH over the NSW graph, for every beam width in
+    * `beams` in one walk: all probes advance in lockstep rounds (the
+    * Pregel shape — per round ONE equi-join of the current beams
+    * against the O(n·M) adjacency, one probe-bounded scoring join, one
+    * windowed re-beam; [[NswRounds]] rounds, unrolled, each round's new
+    * rows checkpointed). Entry = the probe's home-cell members scored
+    * exactly (the IVF-1 seed).
+    *
+    * The legs are keyed by a `beam` column — the entry seeds,
+    * `visited`, `expanded`, the re-beam window (per (beam, probe), keep
+    * `r <= beam`) and both anti-joins — so they never interact: the
+    * rows of beam b are exactly the walk over `Seq(b)` (law-tested),
+    * and a sweep pays one walk's jobs for all its widths. The visited
+    * set is exact per (beam, probe), so a candidate is scored at most
+    * once per beam: a beam's row count is its honest scored-candidate
+    * BUDGET, the number the recall laws compare at equal cost.
+    *
+    * Every frame the walk builds is bounded by probes × budget, and
+    * every join of one to the corpus, the graph or another such frame
+    * broadcasts it (the [[ivfCandidates]] rule). Left to AQE, a
+    * shuffled join here took its final shape at run time, and the
+    * sweep ran 49 or 51 jobs from one build to the next; with the hints
+    * it runs the same jobs and tasks on every build.
+    *
+    * One code path for the in-session index, the persisted artifacts
+    * ([[simHnswSaved]]) and the delta base, so the saved ≡ in-session
+    * law compares searches that differ ONLY in where the index came
+    * from. Returns every visited (beam, probe_id, nbr_id, sim4); the
+    * walk's jobs (its eager checkpoints) run here, none after. */
+  private[graft] def nswVisitedFrom(s: SparkSession,
       centers: Array[Array[Double]], corpus: DataFrame, graph: DataFrame,
-      beamWidth: Int, rounds: Int): (DataFrame, () => Long) = {
+      beams: Seq[Int]): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
+    val key = Seq("beam", "probe_id", "nbr_id")
     val probes = corpus.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"embedding".as("pe"))
     val nv = corpus.select($"vec_id".as("nbr_id"), $"embedding".as("ne"))
-    def scoreOf(cand: DataFrame): DataFrame = cand
+    def scoreOf(cand: DataFrame): DataFrame = nv
+      .join(broadcast(cand), Seq("nbr_id"))
       .join(broadcast(probes), Seq("probe_id"))
-      .join(nv, Seq("nbr_id"))
-      .select($"probe_id", $"nbr_id",
+      .select($"beam", $"probe_id", $"nbr_id",
         round(graft.functions.CosineSimF.cosine($"pe", $"ne"), 4).as("sim4"))
-    val wBeam = Window.partitionBy($"probe_id")
-      .orderBy($"sim4".desc, $"nbr_id".asc)
-    def topPer(df: DataFrame, k: Int): DataFrame =
-      df.withColumn("r", row_number().over(wBeam)).filter($"r" <= k)
-        .select($"probe_id", $"nbr_id", $"sim4")
-    // entry seeds: 2·beamWidth DETERMINISTIC members (smallest ids) of
-    // the probe's home cell — scoring the WHOLE cell would spend the
+    // entry seeds: the 2·beam DETERMINISTIC members (smallest ids) of
+    // the probe's home cell, scored once and fanned out to every beam
+    // wide enough to take them — scoring the WHOLE cell would spend the
     // IVF-probe budget before the graph moved (measured: the graph
     // phase earns ~1.5× more recall per scored candidate than IVF's
     // marginal cells, so budget belongs in the walk, not the seed)
     val wSeed = Window.partitionBy($"probe_id").orderBy($"nbr_id".asc)
-    val entry = probes
+    val entry = broadcast(probes
       .select($"probe_id", $"pe",
         Embeddings.nearestCellsExpr(centers, $"pe", 1).getItem(0)
-          .as("cell"))
+          .as("cell")))
       .join(corpus, Seq("cell"))
       .filter($"probe_id" =!= $"vec_id")
       .select($"probe_id", $"vec_id".as("nbr_id"), $"pe", $"embedding")
       .withColumn("sr", row_number().over(wSeed))
-      .filter($"sr" <= 2 * beamWidth)
-      .select($"probe_id", $"nbr_id",
+      .filter($"sr" <= 2 * beams.max)
+      .select(explode(filter(typedLit(beams), b => b * 2 >= $"sr"))
+        .as("beam"), $"probe_id", $"nbr_id",
         round(graft.functions.CosineSimF.cosine($"pe", $"embedding"), 4)
           .as("sim4"))
+    // re-beam: the literal bound lets the planner cut each window
+    // partition to the widest beam before the shuffle (WindowGroupLimit);
+    // the column bound keeps each beam's own width
+    val wBeam = Window.partitionBy($"beam", $"probe_id")
+      .orderBy($"sim4".desc, $"nbr_id".asc)
     // eager localCheckpoint per round: `visited` and `expanded` are
     // each referenced from THREE plan branches per round (re-beam,
     // candidate anti-join, union), so plain persist would still nest
@@ -1358,36 +1376,33 @@ object Dedup extends OpModule {
     // truncates lineage to O(1) per round, the same fixpoint recipe
     // as connectedComponents. Frames are O(visited) tiny.
     var visited = entry.localCheckpoint(true)
-    // best-first, batched: each round EXPANDS the best beamWidth
+    // best-first, batched: each round EXPANDS the best `beam`
     // visited-but-unexpanded nodes (the HNSW ef-search queue shape —
     // re-expanding the same stabilized beam would stall in a local
     // optimum after one round; expanding the best FRESH nodes keeps
     // the walk moving until the neighborhood is exhausted)
-    var expanded = visited.select($"probe_id", $"nbr_id").limit(0)
+    var expanded = visited.select(key.map(col): _*).limit(0)
       .localCheckpoint(true)
     val roundPersists = Seq.newBuilder[DataFrame]
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to NswRounds) {
       // persist, not localCheckpoint (r15): toExpand is referenced
       // twice (candidate join this round, `expanded` anti-join in later
       // rounds) — the cache serves both without an eager job of its
       // own; it materializes as a side effect of `fresh`'s checkpoint
-      // job below. One driver action per round instead of three (the
-      // other two were this checkpoint and the per-round budget count —
-      // the budget is now the final visited count, an identical value
-      // because entry/fresh are pairwise-disjoint by the anti-joins).
-      // Lineage growth stays bounded: rounds are fixed and small, and
-      // `visited` — the frame the final rank reads — remains a linear
-      // union of checkpointed pieces.
-      val toExpand = topPer(visited.join(expanded,
-        Seq("probe_id", "nbr_id"), "left_anti"), beamWidth)
-        .select($"probe_id", $"nbr_id").persist()
+      // job below, so a round is one driver action. Lineage growth
+      // stays bounded: rounds are fixed and small, and `visited` — the
+      // frame the caller ranks — remains a linear union of
+      // checkpointed pieces.
+      val toExpand = visited.join(broadcast(expanded), key, "left_anti")
+        .withColumn("r", row_number().over(wBeam))
+        .filter($"r" <= beams.max && $"r" <= $"beam")
+        .select(key.map(col): _*).persist()
       roundPersists += toExpand
-      val cand = toExpand
+      val cand = broadcast(toExpand)
         .join(graph, toExpand("nbr_id") === graph("src"))
-        .select($"probe_id", $"dst".as("nbr_id")).distinct()
+        .select($"beam", $"probe_id", $"dst".as("nbr_id")).distinct()
         .filter($"probe_id" =!= $"nbr_id")
-        .join(visited.select($"probe_id", $"nbr_id"),
-          Seq("probe_id", "nbr_id"), "left_anti")
+        .join(broadcast(visited.select(key.map(col): _*)), key, "left_anti")
       val fresh = scoreOf(cand).localCheckpoint(true)
       // the accumulators stay PLAIN unions of the checkpointed pieces:
       // a union of k LogicalRDDs is a linear plan however often it is
@@ -1398,11 +1413,7 @@ object Dedup extends OpModule {
     // every round's fresh set is checkpointed, so the walk's working
     // persists can be released before the caller ever acts on `visited`
     roundPersists.result().foreach(_.unpersist(blocking = false))
-    // scored-candidate budget = |entry ∪ fresh_1..r| — the same number
-    // the per-round counts summed to (all pieces pairwise disjoint via
-    // the visited anti-join); deferred so searches that don't report a
-    // budget (topk/saved/delta) never pay the extra action
-    (visited, () => visited.count())
+    visited
   }
 
   /** Top-10 per probe over a visited set — the shared output shape of
@@ -1422,8 +1433,11 @@ object Dedup extends OpModule {
   /** Graph-ANN top-k — the graded search at beam 8, 3 rounds. Same
     * output shape as [[simIvfTopk]]; non-oracled (trained cells +
     * graph index) with the recall laws in ScalaTest. */
-  def simHnswTopk(s: SparkSession, dir: String): DataFrame =
-    hnswTopkOf(s, nswVisited(s, dir, beamWidth = 8, rounds = 3)._1)
+  def simHnswTopk(s: SparkSession, dir: String): DataFrame = {
+    val (centers, corpus) = ivfIndex(s, dir)
+    hnswTopkOf(s,
+      nswVisitedFrom(s, centers, corpus, nswGraph(s, dir), Seq(8)))
+  }
 
   /** PERSISTED ANN INDEX (round 14 — r13 verdict item #7): the three
     * index pieces — the IVF coarse quantizer's 16 centroids, the
@@ -1467,9 +1481,7 @@ object Dedup extends OpModule {
     * the ScalaTest law pins saved ≡ in-session bit-equality. */
   def simHnswSaved(s: SparkSession, dir: String): DataFrame = {
     val (centers, corpus, graph) = annArtifacts(s, dir)
-    hnswTopkOf(s,
-      nswVisitedFrom(s, centers, corpus, graph, beamWidth = 8,
-        rounds = 3)._1)
+    hnswTopkOf(s, nswVisitedFrom(s, centers, corpus, graph, Seq(8)))
   }
 
   /** DELTA-SEGMENT serving (round 14 — the production pattern behind
@@ -1526,9 +1538,8 @@ object Dedup extends OpModule {
       dir: String): DataFrame = {
     import s.implicits._
     val (centers, baseCorpus, graph, cut) = annBaseArtifacts(s, dir)
-    val (visitedBase, _) =
-      nswVisitedFrom(s, centers, baseCorpus, graph, beamWidth = 8,
-        rounds = 3)
+    val visitedBase =
+      nswVisitedFrom(s, centers, baseCorpus, graph, Seq(8)).drop("beam")
     // the probe set is the graded 10-probe convention (ids 0..9 — all
     // in the base segment); the delta leg scores EVERY fresh vector
     // exactly, so nothing ingested since the index build can be missed
@@ -1547,45 +1558,21 @@ object Dedup extends OpModule {
 
   /** Graph-ANN recall curve over beam width ∈ {2, 4, 8} vs the
     * brute-force truth — the [[simIvfSweep]] twin for the graph index,
-    * carrying each sweep point's SCORED-CANDIDATE budget so the
-    * equal-budget comparison against IVF is explicit in the graded
-    * artifact. Laws (ScalaTest): recall monotone in beam width, and
-    * recall@10 at beam 8 ≥ the IVF nprobe=4 recall at comparable
-    * budget. */
+    * carrying each sweep point's SCORED-CANDIDATE budget (its per-beam
+    * visited count) so the equal-budget comparison against IVF is
+    * explicit in the graded artifact. Laws (ScalaTest): recall monotone
+    * in beam width, and recall@10 at beam 8 ≥ the IVF nprobe=4 recall
+    * at comparable budget.
+    *
+    * Scale shape: ONE walk over all three widths, its legs keyed by
+    * `beam` ([[nswVisitedFrom]]), then one planned query in
+    * [[simIvfSweep]]'s shape, ranked per (beam, probe). The walk's
+    * round checkpoints are the only jobs before the caller acts. */
   def simHnswSweep(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // the 10-probe truth top-10 is consumed by every sweep point (and
-    // its own count) — persist for the sweep's lifetime, released on
-    // every path in the finally below
-    val truth = simTopkCosine(s, dir).select($"probe_id", $"nbr_id")
-      .persist()
-    try {
-      // the shared index (coarse quantizer, cell assignment, NSW
-      // adjacency) is built once here and handed to every beam leg
-      val (centers, corpus) = ivfIndex(s, dir)
-      val graph = nswGraph(s, dir)
-      // the three beam widths are INDEPENDENT searches over the same
-      // frozen index — run them as overlapped driver jobs (guide §2.6);
-      // Par.map keeps input order, so the output rows are the exact
-      // sequential rows. nTruth rides leg 0 alongside the narrowest beam.
-      val legRows = Par.map(Seq(2, 4, 8)) { bw =>
-        val (visited, budget) =
-          nswVisitedFrom(s, centers, corpus, graph, bw, rounds = 3)
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy($"probe_id")
-          .orderBy($"sim4".desc, $"nbr_id".asc)
-        val got = visited.withColumn("r", row_number().over(w))
-          .filter($"r" <= 10).select($"probe_id", $"nbr_id")
-        val matched = got.join(truth, Seq("probe_id", "nbr_id")).count()
-        (bw, budget(), matched)
-      }
-      val nTruth = truth.count()
-      val rows = legRows.map { case (bw, budget, matched) =>
-        (bw, budget, matched, nTruth, matched * 1000000L / nTruth)
-      }
-      rows.toDF("beam", "n_scored", "n_matched", "n_expected", "recall_ppm")
-        .orderBy($"beam")
-    } finally truth.unpersist(blocking = false)
+    val beams = Seq(2, 4, 8)
+    val (centers, corpus) = ivfIndex(s, dir)
+    sweepRecall(s, dir, "beam", beams,
+      nswVisitedFrom(s, centers, corpus, nswGraph(s, dir), beams))
   }
 
   /** MLlib random-projection LSH ANN — approx, seeded; ScalaTest checks
@@ -1714,6 +1701,24 @@ object Dedup extends OpModule {
        |  FROM (SELECT * FROM mainj UNION ALL SELECT * FROM fbj) u
        |  GROUP BY a_id, b_id)""".stripMargin
 
+  /** The near-dup edges and the component walk shared by the two
+    * recursive cluster oracles; yields CTE `walk(doc_id, rep)`. `jacc`
+    * is MATERIALIZED: `e` reads it twice and the walk joins `e` on every
+    * step, and DuckDB inlines a CTE that is not materialized, so the
+    * shingle self-join under `jacc` ran once per read (sf0.1: 95 s →
+    * 10 s per oracle; the same rows at sf0.001, sf0.01 and sf0.1). */
+  private val clusterWalkCte =
+    s"""$shinglesCte,
+       |$prunedShinglesCte,
+       |$cappedFallbackCte,
+       |${jaccardPairsCte.replace("jacc AS (", "jacc AS MATERIALIZED (")},
+       |e AS (SELECT a_id AS src, b_id AS dst FROM jacc
+       |  UNION ALL SELECT b_id, a_id FROM jacc),
+       |walk(doc_id, rep) AS (
+       |  SELECT DISTINCT src, src FROM e
+       |  UNION
+       |  SELECT e.dst, w.rep FROM walk w JOIN e ON e.src = w.doc_id)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q_dedup_exact" ->
       """SELECT sha256(text) AS digest, COUNT(*) AS n, min(doc_id) AS min_id
@@ -1764,29 +1769,11 @@ object Dedup extends OpModule {
          |$jaccardPairsCte
          |SELECT a_id, b_id, jaccard FROM jacc ORDER BY a_id, b_id""".stripMargin,
     "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$prunedShinglesCte,
-         |$cappedFallbackCte,
-         |$jaccardPairsCte,
-         |e AS (SELECT a_id AS src, b_id AS dst FROM jacc
-         |  UNION ALL SELECT b_id, a_id FROM jacc),
-         |walk(doc_id, rep) AS (
-         |  SELECT DISTINCT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, w.rep FROM walk w JOIN e ON e.src = w.doc_id)
+      s"""WITH RECURSIVE $clusterWalkCte
          |SELECT doc_id, MIN(rep) AS rep FROM walk
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "q_dedup_survivors_near" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$prunedShinglesCte,
-         |$cappedFallbackCte,
-         |$jaccardPairsCte,
-         |e AS (SELECT a_id AS src, b_id AS dst FROM jacc
-         |  UNION ALL SELECT b_id, a_id FROM jacc),
-         |walk(doc_id, rep) AS (
-         |  SELECT DISTINCT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, w.rep FROM walk w JOIN e ON e.src = w.doc_id),
+      s"""WITH RECURSIVE $clusterWalkCte,
          |cc AS (SELECT doc_id, MIN(rep) AS rep FROM walk GROUP BY doc_id)
          |SELECT d.doc_id, d.lang, d.source, d.n_chars
          |FROM documents d

@@ -1,11 +1,13 @@
 package graft.ops
 
 /** Concurrent INDEPENDENT Spark actions from driver threads — the
-  * optimization guide's §2.6 "overlap independent jobs" recipe, scoped
-  * to multi-leg operators whose legs are separate actions with no data
-  * dependency: the HNSW beam sweep (`Dedup.simHnswSweep`) and the PQ
-  * codebook fits (`Embeddings.pqCodebooks`). A sweep whose points can
-  * share one plan (the IVF recall sweep) is one query instead.
+  * optimization guide's §2.6 "overlap independent jobs" recipe. Its one
+  * user is `Embeddings.pqCodebooks`: the 8 PQ block fits are separate
+  * iterative k-means actions over disjoint slices, and no single plan
+  * can carry them. Run in sequence they take about twice the wall time
+  * for the same 58 jobs and identical codebooks. A sweep whose points
+  * can share one plan (the IVF recall sweep, the HNSW beam sweep) is
+  * one query or one walk instead.
   *
   * Why this is safe and result-identical: Spark's scheduler runs
   * concurrently submitted jobs FIFO, each leg computes exactly the
@@ -21,8 +23,8 @@ package graft.ops
   *
   * Caller contract: a persisted frame the legs share is still lazy
   * until an action runs, so materialize it before forking (as
-  * `Embeddings.pqCodebooks` does); otherwise every leg's first job
-  * schedules the same input stage.
+  * `pqCodebooks` does); otherwise every leg's first job schedules the
+  * same input stage.
   */
 private[ops] object Par {
   private val MaxLegs = 4

@@ -84,6 +84,42 @@ class InfraSpec extends SparkSpec {
     } finally graft.ops.OpCache.clear(ns)
   }
 
+  test("the HNSW recall sweep is one walk: a pinned number of jobs") {
+    // With the index and graph memoized, building and collecting the
+    // sweep runs the one three-beam walk (entry, empty frontier and one
+    // checkpoint per round, each with its map stages) and the ranked
+    // recall query. Three single-beam walks as parallel legs, each with
+    // its two counts, ran 147 here.
+    val ns = spark.newSession() // own session: the index is built here
+    try {
+      val build = SparkEntry.queries("q_sim_hnsw_sweep")
+      build(ns, sf).collect() // fits the index and builds the graph
+      val (rows, jobs) = jobsDuring(build(ns, sf).collect())
+      assert(rows.length === 3)
+      assert(jobs === 49, s"the sweep ran $jobs jobs")
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
+  test("PageRank runs the same jobs and tasks on every build") {
+    // Each build starts from an empty OpCache, so the edge list, the
+    // node set and both checkpointed rank vectors are rebuilt. sf0.01:
+    // no other spec builds PageRank there, and Spark's cache manager is
+    // shared across sessions, so a shared corpus would let the first
+    // build find the edge list another spec had cached.
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val ns = spark.newSession()
+    try {
+      val counts = (1 to 3).map { _ =>
+        graft.ops.OpCache.clear(ns)
+        val (_, jobs, tasks) = jobsAndTasksDuring(
+          SparkEntry.queries("q_graph_pagerank")(ns, sf001).collect())
+        (jobs, tasks)
+      }
+      assert(counts.distinct.length === 1,
+        s"(jobs, tasks) differ between builds: ${counts.mkString(" ")}")
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
   /** The jobs of building query `name` in a fresh session: its tables'
     * schema reads, the persisted input and every driver-side fit. */
   private def buildJobs(name: String): Int = {

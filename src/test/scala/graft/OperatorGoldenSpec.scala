@@ -2248,6 +2248,39 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(topk.groupBy(_._1).forall(_._2.map(_._2).sorted.sameElements(1 to 10)))
   }
 
+  test("beam walk: the legs do not interact (joint walk per beam ≡ its own walk)") {
+    // every frame of the walk is keyed by beam, so the rows of beam b in
+    // the three-beam walk must be exactly the rows of the walk over b
+    // alone — the sweep's budgets and recalls are then those of three
+    // separate searches
+    val (centers, corpus) = Dedup.ivfIndex(spark, sf)
+    val graph = Dedup.nswGraph(spark, sf)
+    def walk(beams: Seq[Int]) =
+      Dedup.nswVisitedFrom(spark, centers, corpus, graph, beams)
+        .select($"beam", $"probe_id", $"nbr_id", $"sim4")
+        .as[(Int, Long, Long, Double)].collect().sorted.toSeq
+    val joint = walk(Seq(2, 4, 8))
+    assert(joint.map(_._1).distinct.sorted === Seq(2, 4, 8))
+    for (b <- Seq(2, 4, 8)) {
+      val alone = walk(Seq(b))
+      assert(alone.nonEmpty)
+      assert(joint.filter(_._1 == b) === alone, s"beam $b differs")
+    }
+  }
+
+  test("HNSW recall sweep rows are pinned at sf0.01 (spec session)") {
+    // (beam, n_scored, n_matched, n_expected, recall_ppm), the rows the
+    // three single-beam walks gave before they became one walk
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val ns = spark.newSession()
+    try {
+      val rows = SparkEntry.queries("q_sim_hnsw_sweep")(ns, sf001)
+        .as[(Int, Long, Long, Long, Long)].collect().toSeq
+      assert(rows === Seq((2, 432L, 25L, 100L, 250000L),
+        (4, 807L, 42L, 100L, 420000L), (8, 1449L, 60L, 100L, 600000L)))
+    } finally OpCache.clear(ns)
+  }
+
   test("persisted ANN index: saved search ≡ in-session build, artifacts committed") {
     // round 14 (r13 verdict item #7), the q_ml_score_saved recipe for
     // ANN: the saved search reads centroids/cells/adjacency from

@@ -23,18 +23,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * job submitted afterwards flushes the listener bus: once its start
     * event arrives, every earlier start event has been delivered. */
   def jobsDuring[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (out, jobs, _) = jobsAndTasksDuring(body)
+    (out, jobs)
+  }
+
+  /** [[jobsDuring]] plus the tasks those jobs ran (a skipped stage runs
+    * none). The earlier jobs have ended before the marker job is
+    * submitted, so their task-end events precede its start event. */
+  def jobsAndTasksDuring[A](body: => A): (A, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val group = s"counted-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            e.stageIds.foreach(stages.add)
           case Some(g) if g == s"$group-marker" => flushed.countDown()
           case _ => ()
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
@@ -46,7 +61,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the marker job's start event never arrived")
-      (out, jobs.get())
+      (out, jobs.get(), tasks.get())
     } finally sc.removeSparkListener(listener)
   }
 

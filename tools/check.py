@@ -12,11 +12,15 @@ if this passes, the driver's hash compare passes.
 DuckDB spills under `<verifyOutDir>/.duckdb_tmp`, capped at TEMP_CAP. An
 oracle that runs out of disk or memory is reported as RESOURCE, a class
 of its own; it still counts as a failure.
+
+Each verdict line carries the oracle's DuckDB seconds, and a list of the
+SLOWEST oracles precedes the summary line.
 """
-import sys, glob, json, os
+import sys, glob, json, os, time
 import duckdb
 
 TEMP_CAP = "4GB"
+SLOWEST = 10
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -38,6 +42,7 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     fails, okc, resource = [], 0, 0
+    secs = {}  # DuckDB seconds per oracle, failed runs included
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -45,14 +50,17 @@ def main():
         files = sorted(glob.glob(f"{out}/{name}/*.parquet"))
         if not files:
             print(f"{name}: MISSING spark output"); fails.append(name); continue
+        t0 = time.perf_counter()
         try:
             exp = con.execute(sql).fetch_arrow_table()
+            secs[name] = time.perf_counter() - t0
             # all part files, in sorted (= Spark output) order — a
             # multi-part output would otherwise spuriously fail rows
             got = con.execute("SELECT * FROM read_parquet(?)", [files]).fetch_arrow_table()
         except Exception as e:
+            secs.setdefault(name, time.perf_counter() - t0)
             kind = "RESOURCE" if is_resource(e) else "ERROR"
-            print(f"{name}: {kind} {e}"); fails.append(name)
+            print(f"{name}: {kind} [{secs[name]:.2f} s] {e}"); fails.append(name)
             resource += kind == "RESOURCE"
             continue
         exps = exp.select(sorted(exp.column_names))
@@ -76,7 +84,10 @@ def main():
                         break
             fails.append(name); continue
         okc += 1
-        print(f"{name}: OK ({exps.num_rows} rows)")
+        print(f"{name}: OK ({exps.num_rows} rows) [{secs[name]:.2f} s]")
+    slow = sorted(secs.items(), key=lambda kv: -kv[1])[:SLOWEST]
+    print(f"slowest {len(slow)} oracles (DuckDB s): "
+          + ", ".join(f"{n} {s:.2f}" for n, s in slow))
     print(f"== {okc} ok, {len(fails)} fail" + (": " + ",".join(fails) if fails else "")
           + (f" ({resource} of them RESOURCE)" if resource else ""))
     # optional JSON artifact (round-7 verdict item 8: routine cross-SF
