@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Parquet table loader for the driver-generated test corpus
   * (`TESTDATA.md`): one parquet file per table under `$sfDir/`.
@@ -26,38 +27,44 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val schema = graft.ops.OpCache.memo(spark, sfDir, s"schema:$name")(
-      spark.read.parquet(path).schema)
-    val raw = spark.read.schema(schema).parquet(path)
-    if (name == "events") {
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) (rounds 1–6)
-      // and as naive TIMESTAMP(MICROS) (round-7 regeneration). Both are
-      // normalized HERE to the session-TZ TIMESTAMP every consumer
-      // (watermarks, unix_micros, window ranges) expects:
-      //  * NANOS — Spark's vectorized reader rejects it unless the
-      //    session carries spark.sql.legacy.parquet.nanosAsLong=true
-      //    (set at BUILD time in Verify/Bench/SparkSpec — a conf.set
-      //    here would be a session mutation inside a read path, racing
-      //    any conf-isolation test); the long is converted to a µs
-      //    timestamp — lossless: the generator's ns values are
-      //    µs-aligned, and DuckDB's TIMESTAMP_NS→TIMESTAMP cast
-      //    truncates identically.
-      //  * naive MICROS — Spark reads it as TIMESTAMP_NTZ; the cast to
-      //    TIMESTAMP reinterprets the same µs count in the session TZ,
-      //    which is pinned to UTC in every entrypoint, so the integer
-      //    value is unchanged and matches DuckDB's naive read exactly.
-      // integral `div`, NOT `/`: double division loses precision above
-      // 2^53 and epoch-ns values are ~1.7e18.
-      raw.schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
-    } else raw
+    val raw = spark.read.schema(schema(spark, sfDir, name))
+      .parquet(s"$sfDir/$name.parquet")
+    if (name == "events") eventsTs(raw) else raw
   }
+
+  /** Table `name`'s schema, read once per (session, sf dir) — the memo
+    * [[t]] reads with, and the schema the events stream is declared
+    * with. */
+  private[graft] def schema(spark: SparkSession, sfDir: String,
+      name: String): StructType =
+    graft.ops.OpCache.memo(spark, sfDir, s"schema:$name")(
+      spark.read.parquet(s"$sfDir/$name.parquet").schema)
+
+  /** `events` (batch or streaming) with `ts` normalized to the
+    * session-TZ TIMESTAMP every consumer (watermarks, unix_micros,
+    * window ranges) expects. events.ts has shipped as parquet
+    * TIMESTAMP(NANOS) (rounds 1–6) and as naive TIMESTAMP(MICROS)
+    * (round-7 regeneration):
+    *  - NANOS — Spark's vectorized reader rejects it unless the session
+    *    carries spark.sql.legacy.parquet.nanosAsLong=true (set at BUILD
+    *    time by [[GraftSession.local]] — a conf.set here would be a
+    *    session mutation inside a read path); the long is converted to a
+    *    µs timestamp — lossless: the generator's ns values are
+    *    µs-aligned, and DuckDB's TIMESTAMP_NS→TIMESTAMP cast truncates
+    *    identically. Integral `div`, NOT `/`: double division loses
+    *    precision above 2^53 and epoch-ns values are ~1.7e18.
+    *  - naive MICROS — Spark reads it as TIMESTAMP_NTZ; the cast to
+    *    TIMESTAMP reinterprets the same µs count in the session TZ,
+    *    which is pinned to UTC in every entrypoint, so the integer value
+    *    is unchanged and matches DuckDB's naive read exactly. */
+  private[graft] def eventsTs(events: DataFrame): DataFrame =
+    events.schema("ts").dataType match {
+      case LongType =>
+        events.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType =>
+        events.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => events
+    }
 
   /** Per-JVM /tmp sink root for the source/sink round-trip ops. The pid
     * segment isolates concurrently running JVMs (the driver's Verify and

@@ -1446,26 +1446,31 @@ object Dedup extends OpModule {
     * embeddings corpus fingerprint, and every later session SEARCHES
     * FROM THE ARTIFACTS instead of re-fitting the quantizer and
     * re-running the NN-descent build. The builds delegate to the
-    * in-session builders ([[ivfIndex]], [[nswGraph]] — seeded,
-    * deterministic at fixed partitioning), so artifact content ≡
-    * in-session content by construction; the law spec pins the graded
-    * search equality. This is the `q_ml_score_saved` recipe applied to
-    * ANN: a 100 TB corpus builds its graph once and serves it for
-    * weeks, refreshing only when the corpus fingerprint moves. */
-  private def annArtifacts(s: SparkSession, dir: String)
-      : (Array[Array[Double]], DataFrame, DataFrame) = {
+    * in-session builders ([[ivfIndexOn]], [[nswGraphOn]] over `rows`,
+    * cached under `tag` — seeded, deterministic at fixed partitioning),
+    * so artifact content ≡ in-session content by construction; the law
+    * spec pins the graded search equality. Tag "" indexes the full
+    * corpus (`ann_centers@1`, `ann_corpus@1`, `ann_graph@1`), tag
+    * "base" the delta-serving base (`ann_base_…@1`). This is the
+    * `q_ml_score_saved` recipe applied to ANN: a 100 TB corpus builds
+    * its graph once and serves it for weeks, refreshing only when the
+    * corpus fingerprint moves. */
+  private def annArtifacts(s: SparkSession, dir: String, tag: String,
+      rows: => DataFrame): (Array[Array[Double]], DataFrame, DataFrame) = {
     import s.implicits._
     val store = graft.sources.ArtifactStore
-    val centersDf = store.table(s, dir, "ann_centers@1", Seq("embeddings")) {
-      val (centers, _) = ivfIndex(s, dir)
-      s.createDataFrame(centers.toSeq.zipWithIndex
+    val prefix = if (tag.isEmpty) "ann" else s"ann_$tag"
+    def index = ivfIndexOn(s, dir, tag, rows)
+    val centersDf = store.table(s, dir, s"${prefix}_centers@1",
+      Seq("embeddings")) {
+      s.createDataFrame(index._1.toSeq.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }).toDF("cell", "center")
     }
-    val corpus = store.table(s, dir, "ann_corpus@1", Seq("embeddings")) {
-      ivfIndex(s, dir)._2
-    }
-    val graph = store.table(s, dir, "ann_graph@1", Seq("embeddings")) {
-      nswGraph(s, dir)
+    val corpus = store.table(s, dir, s"${prefix}_corpus@1",
+      Seq("embeddings"))(index._2)
+    val graph = store.table(s, dir, s"${prefix}_graph@1", Seq("embeddings")) {
+      val (centers, c) = index
+      nswGraphOn(s, dir, tag, centers, c)
     }
     // 16 fixed-k rows — O(1) driver state, same bound as the in-session
     // clusterCenters array; doubles round-trip parquet bit-exactly
@@ -1480,7 +1485,8 @@ object Dedup extends OpModule {
     * ArtifactStore tables, not rebuilt. Non-oracled (trained index);
     * the ScalaTest law pins saved ≡ in-session bit-equality. */
   def simHnswSaved(s: SparkSession, dir: String): DataFrame = {
-    val (centers, corpus, graph) = annArtifacts(s, dir)
+    val (centers, corpus, graph) =
+      annArtifacts(s, dir, "", Tables.t(s, dir, "embeddings"))
     hnswTopkOf(s, nswVisitedFrom(s, centers, corpus, graph, Seq(8)))
   }
 
@@ -1496,48 +1502,22 @@ object Dedup extends OpModule {
     * two candidate sets merge into one top-10. Exactness on the delta
     * leg guarantees no fresh vector can be missed (law-tested: every
     * full-corpus truth neighbor living in the delta lands in the
-    * merged top-10; merged recall ≥ base-only recall). */
-  private def annBaseArtifacts(s: SparkSession, dir: String)
-      : (Array[Array[Double]], DataFrame, DataFrame, Long) = {
-    import s.implicits._
-    val store = graft.sources.ArtifactStore
-    val all = Tables.t(s, dir, "embeddings")
-    // deterministic build horizon: the oldest 90% of ids are "indexed",
-    // the newest 10% arrived after the last index build. O(1) driver
-    // scalar — at scale this is the indexed snapshot's max ingest id.
-    val cut = all.agg(max($"vec_id")).as[Long].head() * 9L / 10L
-    def base = all.filter($"vec_id" <= cut)
-    val centersDf = store.table(s, dir, "ann_base_centers@1",
-      Seq("embeddings")) {
-      val (centers, _) = ivfIndexOn(s, dir, "base", base)
-      s.createDataFrame(centers.toSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }).toDF("cell", "center")
-    }
-    val corpus = store.table(s, dir, "ann_base_corpus@1",
-      Seq("embeddings")) {
-      ivfIndexOn(s, dir, "base", base)._2
-    }
-    val graph = store.table(s, dir, "ann_base_graph@1",
-      Seq("embeddings")) {
-      val (centers, c) = ivfIndexOn(s, dir, "base", base)
-      nswGraphOn(s, dir, "base", centers, c)
-    }
-    val centers = centersDf.orderBy($"cell").collect()
-      .map(_.getSeq[Double](1).toArray)
-    (centers, corpus, graph, cut)
-  }
-
-  /** The merged base-graph + exact-delta search, beam 8, 3 rounds —
-    * same output shape as [[simHnswTopk]]. Non-oracled (trained
-    * index); delta-exactness and recall-monotonicity laws in
-    * ScalaTest. */
+    * merged top-10; merged recall ≥ base-only recall). Beam 8,
+    * 3 rounds, same output shape as [[simHnswTopk]]. Non-oracled
+    * (trained index). */
   def simHnswDelta(s: SparkSession, dir: String): DataFrame =
     hnswTopkOf(s, hnswDeltaVisited(s, dir))
 
   private[graft] def hnswDeltaVisited(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    val (centers, baseCorpus, graph, cut) = annBaseArtifacts(s, dir)
+    val all = Tables.t(s, dir, "embeddings")
+    // deterministic build horizon: the oldest 90% of ids are "indexed",
+    // the newest 10% arrived after the last index build. O(1) driver
+    // scalar — at scale this is the indexed snapshot's max ingest id.
+    val cut = all.agg(max($"vec_id")).as[Long].head() * 9L / 10L
+    val (centers, baseCorpus, graph) =
+      annArtifacts(s, dir, "base", all.filter($"vec_id" <= cut))
     val visitedBase =
       nswVisitedFrom(s, centers, baseCorpus, graph, Seq(8)).drop("beam")
     // the probe set is the graded 10-probe convention (ids 0..9 — all

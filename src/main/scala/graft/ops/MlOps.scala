@@ -97,7 +97,10 @@ object MlOps extends OpModule {
     * ScalaTest pins better-than-chance accuracy AND the 0.5-threshold
     * law — prediction ≡ [P(1) ≥ 0.5] row-for-row. Scale shape: MLlib
     * GBT is the standard distributed boosting layout (per-iteration
-    * tree fits over the partitioned frame); scoring is map-side. */
+    * tree fits over the partitioned frame); scoring is map-side.
+    * Passes: 10 boosting iterations, each growing a depth-3 tree with
+    * one split-search pass per level — inherent to the fit. The build
+    * runs 34 jobs in a fresh session at sf0.001 (pinned in InfraSpec). */
   def mlGbtPropensity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     gbtScored(s, dir).groupBy($"label", $"prediction")
@@ -154,7 +157,10 @@ object MlOps extends OpModule {
     * (rows-only check), ranking sanity asserted in ScalaTest. Scale
     * shape: the ratings build is two shuffles + a broadcast dim, and
     * ALS itself is MLlib's blocked alternating least squares — the
-    * standard 100-TB recommender layout. */
+    * standard 100-TB recommender layout. Passes: the ratings count that
+    * sizes the blocks and 5 ALS sweeps, each solving the user and then
+    * the item factors — inherent to the fit. The build runs 24 jobs in a
+    * fresh session at sf0.001 (pinned in InfraSpec). */
   def mlRecommend(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.recommendation.ALS
     import s.implicits._
@@ -668,7 +674,11 @@ object MlOps extends OpModule {
     * row carries them in integer ppm. One row per grid point with the
     * winner flagged. Scale: CV is k×grid independent fits — MLlib
     * parallelizes folds over the cluster; selection state is O(grid)
-    * on the driver. */
+    * on the driver. Passes: 3 folds × 2 grid points of LBFGS fits plus
+    * the winner's refit on all rows, each up to 20 iterations of one
+    * gradient pass, and one evaluation per fold and grid point — all
+    * inherent. The build runs 157 jobs in a fresh session at sf0.001
+    * (pinned in InfraSpec). */
   def mlCvSelect(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator

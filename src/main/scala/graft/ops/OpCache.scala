@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Build-once registry for intermediates shared within (and across)
   * operators — exploded shingle rows, minhash signatures, ML feature
@@ -44,6 +44,8 @@ object OpCache {
       cleared = true
       if (forced) release(value)
     }
+    /** The value if it is built; never starts a build. */
+    def built: Option[T] = if (forced) Some(value) else None
   }
 
   private val cache = scala.collection.concurrent
@@ -69,12 +71,29 @@ object OpCache {
       if (d.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else d
-    }, _.unpersist(blocking = false))
+    }, d => if (!heldElsewhere(s, d)) d.unpersist(blocking = false))
+
+  /** Whether a session other than `s` holds a built frame of `d`'s plan.
+    * Spark's cache manager is shared by every session of a SparkContext
+    * and keyed by plan, so such frames are ONE cache entry: unpersisting
+    * it for `s` would make the other session's frame recompute silently.
+    * The entry is released by whichever holder clears last. */
+  private def heldElsewhere(s: SparkSession, d: DataFrame): Boolean = {
+    val plan = d.queryExecution.normalized
+    cache.exists { case ((o, _, _), h) =>
+      (o ne s) && h.built.exists {
+        case f: Dataset[_] => f.queryExecution.normalized.sameResult(plan)
+        case _ => false
+      }
+    }
+  }
 
   /** Release and forget every cached frame and memo of this session.
     * Never-forced holders are dropped without building them; a holder
     * whose build is IN FLIGHT is flagged so the builder releases its
-    * own result on completion (see Holder.cleared). */
+    * own result on completion (see Holder.cleared). A frame whose cache
+    * entry another session still holds is forgotten but not unpersisted
+    * ([[heldElsewhere]]). */
   def clear(s: SparkSession): Unit =
     cache.keys.filter(_._1 eq s).foreach(k => cache.remove(k).foreach(_.drop()))
 }

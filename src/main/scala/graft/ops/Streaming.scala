@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.Det
 
 /** SURVEY.md §2.I — Structured Streaming over the `events` log.
@@ -22,15 +22,16 @@ object Streaming extends OpModule {
 
   private val runId = new AtomicInteger(0)
 
-  /** events as a streaming DataFrame (ts physical-type drift handled as
-    * in Tables.t: ns-as-long → µs conversion, naive-µs NTZ → session-TZ
-    * cast). */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    // nanosAsLong is a session-build conf (see Tables.t) — newSession
-    // clones inherit it from the shared SparkConf, no mutation here.
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    // The file-stream source requires a DIRECTORY; the corpus is one
-    // read-only file. Stage a symlink dir under /tmp (data not copied).
+  /** `events` as a streaming DataFrame on the clone `ss` that
+    * [[drain]] hands a builder. The stream is declared with the schema
+    * memoized in the CALLING session `s` ([[graft.Tables.schema]]): a
+    * clone has its own memo, so reading it there would infer the schema
+    * again, one job per stream. `ts` is normalized as in batch reads
+    * ([[graft.Tables.eventsTs]]). The file-stream source requires a
+    * DIRECTORY and the corpus is one read-only file, so the file is
+    * staged as a symlink under /tmp (no data copied). */
+  private[graft] def eventsStream(s: SparkSession, ss: SparkSession,
+      dir: String): DataFrame = {
     val stageDir = java.nio.file.Paths.get(
       "/tmp/graft_stream_src", dir.replaceAll("[^A-Za-z0-9.]", "_"))
     java.nio.file.Files.createDirectories(stageDir)
@@ -41,15 +42,9 @@ object Streaming extends OpModule {
     try java.nio.file.Files.createSymbolicLink(
       link, java.nio.file.Paths.get(dir, "events.parquet"))
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    val stream = s.readStream.schema(raw.schema).parquet(stageDir.toString)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream
-    }
+    graft.Tables.eventsTs(ss.readStream
+      .schema(graft.Tables.schema(s, dir, "events"))
+      .parquet(stageDir.toString))
   }
 
   /** State/shuffle partition count for the streaming queries — SIZED
@@ -84,42 +79,82 @@ object Streaming extends OpModule {
       want)).toString
   }
 
-  /** Run a streaming aggregation to exhaustion, return the final table.
-    *
-    * The whole query (source → agg → memory sink) is built on a CLONED
-    * session (`newSession`: shared SparkContext + cached blocks, own
-    * SQLConf + catalog) so the bounded state-store partition count is a
-    * per-query setting, never a mutation of the shared session's conf —
-    * a concurrent batch query on the main session can no longer observe
-    * the reduced partition count or clobber/get clobbered by a restore
-    * (round-2 advisor flag). The count itself comes from
-    * [[streamParts]] (input-sized).
-    *
-    * The memory-sink temp view is dropped immediately: the returned
-    * DataFrame's resolved plan pins the sink rows for its own lifetime,
-    * but the catalog no longer does — so a long bench session frees
-    * each sink once the consumer is done instead of accumulating all of
-    * them in driver memory (round-1 judge flag). */
+  /** The one way a streaming op runs. The query is built and started
+    * on a CLONE of `s` (`newSession`: shared SparkContext and cached
+    * blocks, own SQLConf and catalog), so its state/shuffle partition
+    * count ([[streamParts]], input-sized) and any conf a builder sets
+    * are per-query settings, never a mutation of the caller's conf that
+    * a concurrent batch query could observe. The caller's writer is
+    * started with `Trigger.AvailableNow` and drained to exhaustion.
+    * Returns the clone, whose catalog holds a memory sink's table. */
+  private def drain(s: SparkSession, dir: String)
+      (writer: SparkSession => DataStreamWriter[Row]): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
+    writer(ss).trigger(Trigger.AvailableNow()).start().awaitTermination()
+    ss
+  }
+
+  /** [[drain]]s the stream `build` returns into a memory sink in output
+    * `mode` and returns the final table. The sink's temp view is
+    * dropped at once: the returned DataFrame's resolved plan pins the
+    * sink rows for its own lifetime, but the catalog no longer does, so
+    * a long bench session frees each sink once the consumer is done
+    * instead of accumulating all of them in driver memory. */
   private def runToTable(s: SparkSession, dir: String, mode: String)
       (build: SparkSession => DataFrame): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
-    val q = build(ss).writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val ss = drain(s, dir)(build(_).writeStream
+      .format("memory").queryName(name).outputMode(mode))
     val out = ss.table(name)
     ss.catalog.dropTempView(name)
     out
   }
 
+  /** The purchase/click stream-stream join of the three outer-join ops,
+    * `how` its join type: purchases before a FIXED cutoff safely inside
+    * the corpus (Jan 29; events run through Jan 31), each joined to the
+    * same user's clicks in the preceding hour, both sides watermarked
+    * 1 hour. The watermark policy is MAX (set on the clone `ss`): with
+    * the default min policy the global watermark is capped by the
+    * purchase stream's own max (cutoff − 1 h), so purchases in the final
+    * hour before the cutoff would never receive their outer emission.
+    * The click stream runs a day past the cutoff, and its watermark
+    * releases every retained purchase. The single staged file is one
+    * data micro-batch, so the laxer policy cannot drop late rows here. */
+  private def cutJoin(s: SparkSession, ss: SparkSession, dir: String,
+      how: String): DataFrame = {
+    import ss.implicits._
+    ss.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
+    val purchases = eventsStream(s, ss, dir)
+      .filter($"event_type" === "purchase" &&
+        $"ts" < lit("2024-01-29").cast("timestamp"))
+      .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    val clicks = eventsStream(s, ss, dir).filter($"event_type" === "click")
+      .select($"event_id".as("c_id"), $"user_id".as("c_user"),
+        $"ts".as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    purchases.join(clicks,
+      $"user_id" === $"c_user" &&
+        $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") && $"c_ts" <= $"p_ts",
+      how)
+  }
+
+  /** The RocksDB state-store provider on the clone `ss`: required by
+    * `transformWithState`, and the production answer (HDFS-backed heap
+    * state does not survive 100-TB key cardinality). The other ops keep
+    * the default provider, which ran the stream-stream joins 1.5–1.8×
+    * faster on this corpus. */
+  private def useRocksDb(ss: SparkSession): Unit =
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+
   def streamTumbling(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "complete") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"), sumMoney($"value").as("val_sum"))
@@ -137,7 +172,7 @@ object Streaming extends OpModule {
   def streamTumblingAppend(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "append") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"), sumMoney($"value").as("val_sum"))
@@ -159,7 +194,7 @@ object Streaming extends OpModule {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val counts = runToTable(s, dir, "complete") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"))
@@ -189,17 +224,11 @@ object Streaming extends OpModule {
     import s.implicits._
     val target = graft.Tables.sinkPath("upsert", dir,
       s"t${runId.incrementAndGet()}")
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
-    val q = eventsStream(ss, dir).writeStream
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
+    drain(s, dir)(ss => eventsStream(s, ss, dir).writeStream
+      .foreachBatch((batch: Dataset[Row], id: Long) =>
         graft.streaming.ForeachUpsert.applyBatch(
           ss, target, id, batch.toDF(), "event_type"))
-      .option("checkpointLocation", s"${target}_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"${target}_ckpt"))
     graft.streaming.ForeachUpsert.read(s, target)
       .select($"key".as("event_type"), $"n")
       .orderBy($"event_type")
@@ -208,7 +237,7 @@ object Streaming extends OpModule {
   def streamSliding(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "complete") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 hour", "15 minutes"), $"event_type")
         .agg(count(lit(1)).as("n"))
@@ -220,7 +249,7 @@ object Streaming extends OpModule {
   def streamSession(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "complete") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(session_window($"ts", "30 minutes"), $"user_id")
         .agg(count(lit(1)).as("n_events"))
@@ -239,7 +268,7 @@ object Streaming extends OpModule {
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "append") { ss =>
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .select($"user_id", $"event_type")
         .dropDuplicates("user_id", "event_type")
@@ -256,10 +285,10 @@ object Streaming extends OpModule {
   def streamJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "append") { ss =>
-      val purchases = eventsStream(ss, dir).filter($"event_type" === "purchase")
+      val purchases = eventsStream(s, ss, dir).filter($"event_type" === "purchase")
         .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
         .withWatermark("p_ts", "1 hour")
-      val clicks = eventsStream(ss, dir).filter($"event_type" === "click")
+      val clicks = eventsStream(s, ss, dir).filter($"event_type" === "click")
         .select($"event_id".as("c_id"), $"user_id".as("c_user"), $"ts".as("c_ts"))
         .withWatermark("c_ts", "1 hour")
       purchases.join(clicks,
@@ -278,34 +307,12 @@ object Streaming extends OpModule {
     * Jan 31) so the final watermark (max event time − 1 h, advanced by
     * the closing no-data micro-batch) passes every retained left row —
     * end-of-stream output is then deterministically total and equals
-    * the batch left join the oracle runs. At 100 TB the same watermark
-    * bound is what keeps the outer-join state store finite. */
+    * the batch left join the oracle runs ([[cutJoin]]). At 100 TB the
+    * same watermark bound is what keeps the outer-join state store
+    * finite. */
   def streamJoinOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    runToTable(s, dir, "append") { ss =>
-      // watermark policy MAX (set on the CLONED session): with the
-      // default min policy the global watermark is capped by the
-      // purchase stream's own max (cutoff − 1 h), so purchases in the
-      // final hour before the cutoff would never receive their outer
-      // emission. The click stream runs a day past the cutoff; its
-      // watermark releases every retained left row. Single staged file
-      // ⇒ one data micro-batch, so the laxer policy cannot drop late
-      // rows here.
-      ss.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-      val purchases = eventsStream(ss, dir)
-        .filter($"event_type" === "purchase" &&
-          $"ts" < lit("2024-01-29").cast("timestamp"))
-        .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = eventsStream(ss, dir).filter($"event_type" === "click")
-        .select($"event_id".as("c_id"), $"user_id".as("c_user"),
-          $"ts".as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      purchases.join(clicks,
-        $"user_id" === $"c_user" &&
-          $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") && $"c_ts" <= $"p_ts",
-        "left_outer")
-    }
+    runToTable(s, dir, "append")(cutJoin(s, _, dir, "left_outer"))
       .select($"p_id", $"c_id", $"user_id")
       .orderBy($"p_id", $"c_id")
   }
@@ -318,7 +325,7 @@ object Streaming extends OpModule {
   def streamStateful(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "update") { ss =>
-      graft.streaming.StatefulOps.typeProfile(eventsStream(ss, dir))
+      graft.streaming.StatefulOps.typeProfile(eventsStream(s, ss, dir))
     }
       .groupBy($"user_id")
       .agg(max($"n_events").as("n_events"),
@@ -339,7 +346,7 @@ object Streaming extends OpModule {
     runToTable(s, dir, "complete") { ss =>
       val dim = broadcast(graft.Tables.t(ss, dir, "customer")
         .select($"c_custkey", $"c_mktsegment"))
-      eventsStream(ss, dir)
+      eventsStream(s, ss, dir)
         .filter($"event_type" === "purchase")
         .join(dim, $"user_id" === $"c_custkey")
         .groupBy($"c_mktsegment")
@@ -398,16 +405,11 @@ object Streaming extends OpModule {
     val ckpt = graft.Tables.sinkPath("statewatch", dir,
       s"ckpt_${runId.incrementAndGet()}")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
-    val q = eventsStream(ss, dir)
+    drain(s, dir)(ss => eventsStream(s, ss, dir)
       .select($"user_id", $"event_type")
       .dropDuplicates("user_id", "event_type")
       .writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     s.read.format("statestore").load(ckpt)
       .select($"key.user_id".as("user_id"),
         $"key.event_type".as("event_type"))
@@ -423,13 +425,8 @@ object Streaming extends OpModule {
   def streamTwsProfile(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "update") { ss =>
-      // transformWithState requires the RocksDB provider — which is
-      // also the production answer (HDFS-backed heap state does not
-      // survive 100-TB key cardinality)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      graft.streaming.StatefulOps.typeProfileTws(eventsStream(ss, dir))
+      useRocksDb(ss)
+      graft.streaming.StatefulOps.typeProfileTws(eventsStream(s, ss, dir))
     }
       .groupBy($"user_id")
       .agg(max($"n_events").as("n_events"),
@@ -455,10 +452,8 @@ object Streaming extends OpModule {
     import s.implicits._
     runToTable(s, dir, "update") { ss =>
       import ss.implicits._
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      val typed = eventsStream(ss, dir)
+      useRocksDb(ss)
+      val typed = eventsStream(s, ss, dir)
         .select($"user_id", unix_micros($"ts").as("us"), $"event_id",
           expr("CAST(ROUND(value * 10000) AS BIGINT)").as("c4"))
         .as[(Long, Long, Long, Long)]
@@ -501,10 +496,8 @@ object Streaming extends OpModule {
     import s.implicits._
     runToTable(s, dir, "update") { ss =>
       import ss.implicits._
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      val typed = eventsStream(ss, dir)
+      useRocksDb(ss)
+      val typed = eventsStream(s, ss, dir)
         .withWatermark("ts", "1 hour")
         .select($"user_id", unix_micros($"ts").as("us"), $"event_id",
           expr("CAST(ROUND(value * 10000) AS BIGINT)").as("c4"))
@@ -531,8 +524,8 @@ object Streaming extends OpModule {
     * its p_ts; an unmatched click emits (null, c_id) once the
     * watermark passes c_ts + 1 h (the join condition bounds a click's
     * matchable purchases to p_ts ≤ c_ts + 1 h, so that is its state
-    * expiry). Same fixed Jan-29 left cutoff + MAX watermark policy as
-    * [[streamJoinOuter]]; the final watermark (max click ts − 1 h,
+    * expiry). Same Jan-29 purchase cutoff + MAX watermark policy
+    * ([[cutJoin]]); the final watermark (max click ts − 1 h,
     * advanced by the closing no-data batch) then releases every
     * retained purchase, while clicks in the last pre-watermark window
     * stay retained — so the graded set is the batch full join with
@@ -541,22 +534,7 @@ object Streaming extends OpModule {
     * contract at 100 TB: emit only what the watermark has proven). */
   def streamJoinFull(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    runToTable(s, dir, "append") { ss =>
-      ss.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-      val purchases = eventsStream(ss, dir)
-        .filter($"event_type" === "purchase" &&
-          $"ts" < lit("2024-01-29").cast("timestamp"))
-        .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = eventsStream(ss, dir).filter($"event_type" === "click")
-        .select($"event_id".as("c_id"), $"user_id".as("c_user"),
-          $"ts".as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      purchases.join(clicks,
-        $"user_id" === $"c_user" &&
-          $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") && $"c_ts" <= $"p_ts",
-        "full_outer")
-    }
+    runToTable(s, dir, "append")(cutJoin(s, _, dir, "full_outer"))
       .select($"p_id", $"c_id", coalesce($"user_id", $"c_user").as("user_id"))
       .orderBy($"p_id", $"c_id")
   }
@@ -568,27 +546,12 @@ object Streaming extends OpModule {
     * its null-emission waits until the watermark passes THAT (the
     * distinct state-expiry semantics vs the left-outer op, where the
     * retained row's own timestamp is the clock). Same Jan-29 purchase
-    * cutoff + MAX watermark policy as [[streamJoinFull]]; graded set =
+    * cutoff + MAX watermark policy ([[cutJoin]]); graded set =
     * batch right join with the unmatched-click side filtered to
     * watermark-expired clicks. */
   def streamJoinRight(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    runToTable(s, dir, "append") { ss =>
-      ss.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-      val purchases = eventsStream(ss, dir)
-        .filter($"event_type" === "purchase" &&
-          $"ts" < lit("2024-01-29").cast("timestamp"))
-        .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val clicks = eventsStream(ss, dir).filter($"event_type" === "click")
-        .select($"event_id".as("c_id"), $"user_id".as("c_user"),
-          $"ts".as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      purchases.join(clicks,
-        $"user_id" === $"c_user" &&
-          $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") && $"c_ts" <= $"p_ts",
-        "right_outer")
-    }
+    runToTable(s, dir, "append")(cutJoin(s, _, dir, "right_outer"))
       .select($"p_id", $"c_id", coalesce($"user_id", $"c_user").as("user_id"))
       .orderBy($"p_id", $"c_id")
   }
@@ -609,12 +572,10 @@ object Streaming extends OpModule {
     val root = graft.Tables.sinkPath("vtable", dir,
       s"events_ingest${runId.incrementAndGet()}")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
-    val q = eventsStream(ss, dir)
+    drain(s, dir)(ss => eventsStream(s, ss, dir)
       .select($"event_id", $"user_id", $"event_type", $"value")
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         // appId = the checkpoint path: restart-stable and unique per
         // query, so a second stream feeding this table (also counting
         // batchIds from 0) can never collide in the idempotence window
@@ -622,10 +583,7 @@ object Streaming extends OpModule {
           appId = s"$root/_ckpt")
         ()
       }
-      .option("checkpointLocation", s"$root/_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$root/_ckpt"))
     graft.sources.VersionedTable.read(s, root)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
@@ -666,23 +624,17 @@ object Streaming extends OpModule {
     graft.sources.LogSegments.append(e.filter($"event_id" <= t1), logDir)
     graft.sources.LogSegments.append(
       e.filter($"event_id" > t1 && $"event_id" <= t2), logDir)
-    def run(ckpt: String): Unit = {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", streamParts(s, dir))
-      val q = ss.readStream.format("graft-log").option("path", logDir).load()
+    def run(ckpt: String): Unit = drain(s, dir)(ss =>
+      ss.readStream.format("graft-log").option("path", logDir).load()
         .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        .foreachBatch { (batch: DataFrame, id: Long) =>
           // appId = the TABLE root (restart-stable across checkpoints —
           // the fresh-checkpoint redelivery leg depends on it)
           graft.sources.VersionedTable.commitBatch(batch, root, id,
             appId = root)
           ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .option("checkpointLocation", ckpt))
     run(s"$root/_ckpt1") // leg 1: segments 1–2
     graft.sources.LogSegments.append(e.filter($"event_id" > t2), logDir)
     run(s"$root/_ckpt1") // leg 2: offset resume — only segment 3
@@ -704,7 +656,7 @@ object Streaming extends OpModule {
   def streamAnomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runToTable(s, dir, "update") { ss =>
-      graft.streaming.StatefulOps.anomalyFlags(eventsStream(ss, dir))
+      graft.streaming.StatefulOps.anomalyFlags(eventsStream(s, ss, dir))
     }
       .orderBy($"event_id")
   }

@@ -142,6 +142,62 @@ class InfraSpec extends SparkSpec {
     assert(buildJobs("q_c360_scored") === 35) // 39 with the ml Pipeline
   }
 
+  // The MLlib fits, each pinned at the count three fresh builds repeat.
+  // Their inherent passes (boosting iterations × tree levels, LBFGS
+  // iterations per CV fold and grid point, ALS sweeps) are stated in
+  // each op's scaladoc; a hidden pass added later fails here.
+  test("the GBT propensity fit runs a pinned number of jobs") {
+    assert(buildJobs("q_ml_gbt_propensity") === 34)
+  }
+
+  test("the cross-validated selection runs a pinned number of jobs") {
+    assert(buildJobs("q_ml_cv_select") === 157)
+  }
+
+  test("the ALS recommender fit runs a pinned number of jobs") {
+    assert(buildJobs("q_ml_recommend") === 24)
+  }
+
+  test("OpCache.clear keeps a cache entry another session still holds") {
+    // Spark's cache manager is shared by every session of one context
+    // and keyed by plan, so the two sessions' frames are ONE entry
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val (a, b) = (spark.newSession(), spark.newSession())
+    val tag = java.util.UUID.randomUUID().toString // no other spec's plan
+    def frame(s: SparkSession): DataFrame =
+      graft.ops.OpCache.cached(s, "/shared", "k")(
+        s.range(100).select(col("id"), lit(tag).as("tag")))
+    // a derived plan, planned now: the cache lookup happens at planning
+    def readsCache(df: DataFrame): Boolean =
+      df.select("*").queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r }.isDefined
+    try {
+      frame(a)
+      val fb = frame(b)
+      graft.ops.OpCache.clear(a)
+      assert(readsCache(fb), "clearing a must not uncache b's frame")
+      graft.ops.OpCache.clear(b)
+      assert(!readsCache(fb) &&
+        fb.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the last clear must release the entry")
+    } finally Seq(a, b).foreach(graft.ops.OpCache.clear)
+  }
+
+  test("the events stream runs no job once the calling session read events") {
+    // the stream takes its schema from the calling session's memo; the
+    // clone it runs on has a memo of its own and would infer it again
+    val ns = spark.newSession()
+    try {
+      Tables.t(ns, sf, "events")
+      val (stream, jobs) =
+        jobsDuring(graft.ops.Streaming.eventsStream(ns, ns.newSession(), sf))
+      assert(jobs === 0, s"building the events stream ran $jobs jobs")
+      assert(stream.isStreaming)
+      assert(stream.schema === Tables.t(ns, sf, "events").schema)
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
   test("streamParts sizes a directory-stored table by the files under it") {
     // two sparse 20 MB part files: 40 MB at 16 MB a partition is 3
     // partitions on the 4-core spec session (the directory entry alone
