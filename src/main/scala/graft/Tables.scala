@@ -26,8 +26,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.schema(schema(spark, sfDir, name))
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    tOn(spark, spark, sfDir, name)
+
+  /** [[t]] read on the session `ss` — a `newSession()` clone of the
+    * calling session `s` that carries its own confs — with the schema
+    * memoized in `s`: a clone has a memo of its own, so reading there
+    * would infer the schema again on every build and leave a memo
+    * holder keyed by a clone nothing ever clears. */
+  private[graft] def tOn(s: SparkSession, ss: SparkSession, sfDir: String,
+      name: String): DataFrame = {
+    val raw = ss.read.schema(schema(s, sfDir, name))
       .parquet(s"$sfDir/$name.parquet")
     if (name == "events") eventsTs(raw) else raw
   }

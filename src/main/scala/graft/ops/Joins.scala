@@ -590,10 +590,10 @@ object Joins extends OpModule {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
       "0")
     ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val o = Tables.t(ss, dir, "orders")
+    val o = Tables.tOn(s, ss, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderdate"))
-    val l = Tables.t(ss, dir, "lineitem")
+    val l = Tables.tOn(s, ss, dir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     val one = lit(1).cast(D6)
     l.join(o, col("l_orderkey") === col("o_orderkey"))

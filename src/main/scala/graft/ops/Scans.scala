@@ -349,18 +349,19 @@ object Scans extends OpModule {
       .toDF("n_rows", "n_hi_discount", "qty_sum")
   }
 
-  /** Manifest-based versioned table with TIME TRAVEL
-    * ([[graft.sources.VersionedTable]] — per-version immutable data
-    * dirs + atomically-renamed JSON manifests listing each snapshot's
-    * complete file set): commit the ≤1996 order book as v1, append
-    * 1997 as v2, then read BOTH snapshots back and roll each up. The
-    * graded rows prove snapshot isolation (v1's numbers are unchanged
-    * by v2's commit) and time travel (both versions remain readable).
-    * Reads plan ordinary parquet scans over the resolved file list,
-    * so pushdown/pruning apply unchanged; the manifest is O(files)
-    * driver-side JSON — the table-format trick that makes appends
-    * O(new data) at 100 TB. */
   private val vtableRun = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A fresh versioned-table root for one run of a table op:
+    * `<leaf><n>` under the pid-scoped `vtable` sink, `n` a per-JVM run
+    * counter — concurrent runs (parallel suites, bench reps) must not
+    * race each other's single-writer table — cleared of anything a
+    * previous run left there. */
+  private def vtableRoot(dir: String, leaf: String): String = {
+    val root = Tables.sinkPath("vtable", dir,
+      s"$leaf${vtableRun.incrementAndGet()}")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    root
+  }
 
   /** Register (idempotently) and return the graft catalog serving
     * `dir`'s warehouse. Spark's CatalogManager caches the INITIALIZED
@@ -377,14 +378,21 @@ object Scans extends OpModule {
     name
   }
 
+  /** Manifest-based versioned table with TIME TRAVEL
+    * ([[graft.sources.VersionedTable]] — per-version immutable data
+    * dirs + create-new JSON manifests listing each snapshot's
+    * complete file set): commit the ≤1996 order book as v1, append
+    * 1997 as v2, then read BOTH snapshots back and roll each up. The
+    * graded rows prove snapshot isolation (v1's numbers are unchanged
+    * by v2's commit) and time travel (both versions remain readable).
+    * Reads plan ordinary parquet scans over the resolved file list,
+    * so pushdown/pruning apply unchanged; the manifest is O(files)
+    * driver-side JSON — the table-format trick that makes appends
+    * O(new data) at 100 TB. */
   def scanTimetravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    // unique root per invocation: concurrent runs (parallel suites,
-    // bench reps) must not race each other's single-writer table
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_v${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_v")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
     val v1 = VersionedTable.commit(
@@ -410,9 +418,7 @@ object Scans extends OpModule {
   def scanTableRollback(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_rb${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_rb")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
     val v1 = VersionedTable.commit(
@@ -443,9 +449,7 @@ object Scans extends OpModule {
   def scanFileSkipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_fs${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_fs")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -473,9 +477,7 @@ object Scans extends OpModule {
   def scanTableOptimize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_opt${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_opt")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -506,9 +508,7 @@ object Scans extends OpModule {
   def scanTableMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_mrg${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_mrg")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -543,9 +543,7 @@ object Scans extends OpModule {
   def scanTableMergeTargeted(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_tmrg${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_tmrg")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -587,9 +585,7 @@ object Scans extends OpModule {
   def scanTableDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_del${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_del")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -632,11 +628,9 @@ object Scans extends OpModule {
   def scanTableClone(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val src = Tables.sinkPath("vtable", dir,
-      s"orders_clsrc${vtableRun.incrementAndGet()}")
+    val src = vtableRoot(dir, "orders_clsrc")
     val tgt = s"${src}_fork"
-    Seq(src, tgt).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tgt))
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -672,9 +666,7 @@ object Scans extends OpModule {
   def scanTableRename(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_ren${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_ren")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -717,9 +709,7 @@ object Scans extends OpModule {
   def scanTableWiden(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_wd${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_wd")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", year($"o_orderdate").as("o_year"))
     val v1 = VersionedTable.commit(
@@ -759,9 +749,7 @@ object Scans extends OpModule {
   def scanTableDrop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_dr${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_dr")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -804,9 +792,7 @@ object Scans extends OpModule {
   def scanStatsMulticol(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_ms${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_ms")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -842,9 +828,7 @@ object Scans extends OpModule {
   def scanPartOverwrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_ow${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_ow")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -879,9 +863,7 @@ object Scans extends OpModule {
   def scanTableSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_sql${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_sql")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1072,9 +1054,7 @@ object Scans extends OpModule {
   def scanTableRefs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_refs${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_refs")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1108,9 +1088,7 @@ object Scans extends OpModule {
   def scanTableHistory(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_hist${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_hist")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1147,9 +1125,7 @@ object Scans extends OpModule {
   def scanTableConstraints(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_chk${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_chk")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1193,9 +1169,7 @@ object Scans extends OpModule {
   def scanCdcConsume(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.{ChangeFeedConsumer, VersionedTable}
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_cons${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_cons")
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(s"${root}_ckpt"))
     val o = Tables.t(s, dir, "orders")
@@ -1233,9 +1207,7 @@ object Scans extends OpModule {
   def scanTableCluster(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_clu${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_clu")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice")
     val mx = o.agg(max($"o_orderkey")).head.getLong(0)
@@ -1273,9 +1245,7 @@ object Scans extends OpModule {
   def scanTableDeleteMor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_mor${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_mor")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1319,9 +1289,7 @@ object Scans extends OpModule {
   def scanCdcMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_cdc${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_cdc")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1358,9 +1326,7 @@ object Scans extends OpModule {
   def scanCdcAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_cdcagg${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_cdcagg")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1402,9 +1368,7 @@ object Scans extends OpModule {
   def scanIncrAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_ia${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_ia")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1441,9 +1405,7 @@ object Scans extends OpModule {
   def scanTableEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_ev${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_ev")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1482,9 +1444,7 @@ object Scans extends OpModule {
   def scanConcurrentCommit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_cc${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_cc")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))
@@ -1549,9 +1509,7 @@ object Scans extends OpModule {
   def scanPartitionPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.VersionedTable
-    val root = Tables.sinkPath("vtable", dir,
-      s"orders_pp${vtableRun.incrementAndGet()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = vtableRoot(dir, "orders_pp")
     val o = Tables.t(s, dir, "orders")
       .select($"o_orderkey", $"o_totalprice",
         year($"o_orderdate").as("o_year"))

@@ -127,22 +127,17 @@ object LogSegments {
       finally st.close()
     }
     try {
-      // CREATE-NEW publish via hard link (the manifest recipe):
-      // Files.move(ATOMIC_MOVE) maps to rename(2) on POSIX, which
-      // SILENTLY REPLACES an existing target — a racing producer would
-      // overwrite the winner's published segment with no error. A hard
-      // link fails with FileAlreadyExistsException instead, which is
-      // the collision signal the retry loop needs.
+      // CREATE-NEW publish via hard link (the manifest recipe,
+      // VersionedTable.linkNew): Files.move(ATOMIC_MOVE) maps to
+      // rename(2) on POSIX, which SILENTLY REPLACES an existing target
+      // — a racing producer would overwrite the winner's published
+      // segment with no error. A lost link is the collision signal the
+      // retry loop needs.
       var idx = segments(dir).size
-      while (true) {
-        try {
-          Files.createLink(Paths.get(dir, f"seg-$idx%06d.jsonl"), part)
-          return idx
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => idx += 1
-        }
-      }
-      -1 // unreachable
+      while (!VersionedTable.linkNew(Paths.get(dir, f"seg-$idx%06d.jsonl"),
+          part))
+        idx += 1
+      idx
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(tmpDir.toFile)
   }

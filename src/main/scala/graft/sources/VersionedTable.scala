@@ -26,7 +26,10 @@ import scala.jdk.CollectionConverters._
   * (optimize / merge / rollback) rewrote a snapshot that is now stale,
   * so it aborts with `ConcurrentModificationException` — the caller
   * re-reads and re-runs. This is exactly the serializable-commit recipe
-  * the real table formats document.
+  * the real table formats document. Every write — appends, replaces,
+  * targeted rewrites, schema evolution, clones, the streaming upsert
+  * sink — publishes through the one loop [[publish]], which also
+  * deletes the files of a commit that fails to land.
   *
   * '''Manifest deltas + checkpoints.''' A manifest records the files
   * ADDED and REMOVED vs its parent — O(change) JSON per commit, not
@@ -306,25 +309,17 @@ object VersionedTable {
 
   /** Resolve version `v`'s complete file list: nearest checkpoint at or
     * below `v`, plus the delta chain forward. O(CheckpointInterval)
-    * manifest reads, O(files) driver memory — never touches data. */
-  def resolveFiles(root: String, v: Int): Seq[FileEntry] = {
-    if (v == 0) return Nil
-    val node = readNode(root, v)
-    if (node.has("files")) parseEntries(node.get("files"))
-    else {
-      val removed = Option(node.get("remove"))
-        .map(_.elements().asScala.map(_.asText()).toSet)
-        .getOrElse(Set.empty[String])
-      val added = Option(node.get("add")).map(parseEntries)
-        .getOrElse(Nil)
-      resolveFiles(root, node.get("parent").asInt())
-        .filterNot(f => removed(f.path)) ++ added
-    }
-  }
+    * manifest reads, O(files) driver memory — never touches data.
+    * Throws [[IllegalArgumentException]] when `v` or a manifest of its
+    * chain is missing (never published, or vacuumed). */
+  def resolveFiles(root: String, v: Int): Seq[FileEntry] =
+    resolveFilesOpt(root, v).getOrElse(throw new IllegalArgumentException(
+      s"version $v not found under $root (it, or a manifest of its " +
+        "delta chain, is missing)"))
 
-  /** [[resolveFiles]] that returns None when the delta chain is broken
-    * (a prior vacuum removed a manifest it needs) — used by vacuum so a
-    * re-run skips already-collected history instead of throwing. */
+  /** The one chain walk behind [[resolveFiles]]: None when the delta
+    * chain is broken (a prior vacuum removed a manifest it needs), so
+    * vacuum skips already-collected history instead of throwing. */
   private def resolveFilesOpt(root: String, v: Int): Option[Seq[FileEntry]] = {
     if (v == 0) return Some(Nil)
     if (!Files.exists(manifestPath(root, v))) return None
@@ -395,20 +390,121 @@ object VersionedTable {
       o.put("seq", d.seq)
     }
 
-  /** Atomic CREATE-NEW publish: the manifest is fully written to a
-    * unique temp file, then HARD-LINKED to its final name — readers see
-    * it fully or not at all, and a second writer racing the same
-    * version number gets [[FileAlreadyExistsException]] instead of
-    * silently clobbering the winner (the conflict signal the commit
-    * loop rebases on). */
-  private def publishAtomic(root: String, v: Int, parent: Int,
-      add: Seq[FileEntry], remove: Seq[String],
-      checkpoint: Option[Seq[FileEntry]], rollbackOf: Option[Int],
-      batchKey: Option[String], recentBatchKeys: Seq[String],
-      cdc: Seq[String], cdcKind: Option[String],
+  /** CREATE-NEW by hard link: true when `link` now names `file`, false
+    * when `link` already existed — a racing writer won it. The one
+    * collision signal of every create-new publish in this package (the
+    * manifests here, the segments of [[LogSegments]]): a rename would
+    * silently replace the winner instead. */
+  private[sources] def linkNew(link: Path, file: Path): Boolean =
+    try { Files.createLink(link, file); true }
+    catch { case _: FileAlreadyExistsException => false }
+
+  /** One commit, described once and handed to [[publish]]. `remove`
+    * is None for an APPEND (the parent's files carry; a checkpoint lands
+    * every [[CheckpointInterval]]-th version) and Some(paths) for a
+    * REWRITE (those paths leave, the rest carry, the full list is
+    * always checkpointed — [[replace]] removes every basis path).
+    * `eqDeletesFull` is the list a replace sets (an append checkpoint
+    * carries the parent's plus `eqDeleteAdd`); `schema` is the mapping
+    * an evolution sets (others copy the parent's). `wrote` is false when
+    * `add` republishes existing files (rollback, clone), which the loop
+    * must never delete. `rebase(head)` is the collision policy: None
+    * when the commit may publish on top of `head`, else why it aborts —
+    * by default always, since a replace rewrote a snapshot that is
+    * stale the moment the head moves. */
+  private case class Commit(what: String, add: Seq[FileEntry],
+      remove: Option[Seq[String]] = None,
       eqDeleteAdd: Seq[EqDelete] = Nil,
       eqDeletesFull: Option[Seq[EqDelete]] = None,
-      schemaSet: Option[TableSchema] = None): Unit = {
+      schema: Option[TableSchema] = None,
+      cdc: Seq[String] = Nil, cdcKind: Option[String] = None,
+      rollbackOf: Option[Int] = None, batchKey: Option[String] = None,
+      wrote: Boolean = true,
+      rebase: Int => Option[String] = _ => Some("its basis is stale"))
+
+  /** [[publish]]es `c` as an APPEND on the current head: its files
+    * live in a fresh per-commit directory, disjoint from any concurrent
+    * commit's, so it rebases on every collision. */
+  private def append(root: String, c: Commit): Int =
+    publish(root, currentVersion(root), c.copy(rebase = _ => None))
+
+  /** [[publish]]es `c` as a whole-table REPLACE of `basis`'s snapshot:
+    * every basis path leaves, and the pending equality deletes are
+    * materialized (the new full list is `c.eqDeletesFull`, empty unless
+    * a rollback restores one). Aborts on any collision. */
+  private def replace(root: String, basis: Int, c: Commit): Int =
+    publish(root, basis, c.copy(
+      remove = Some(resolveFiles(root, basis).map(_.path)),
+      eqDeletesFull = c.eqDeletesFull.orElse(Some(Nil))))
+
+  /** The one publish loop — every version of every table lands here:
+    * publishes `c` as the version after `basis` and returns it. Each
+    * attempt calls [[onBeforePublish]] and CREATE-NEWs the manifest
+    * resolved against its parent ([[publishAtomic]]). On a collision a
+    * head whose batch-key window already holds `c`'s key is returned
+    * (the batch is in); otherwise `c.rebase` picks between the head as
+    * the next parent (at most [[MaxCommitRetries]] attempts) and a
+    * [[java.util.ConcurrentModificationException]]. No leak: on ANY
+    * failure, or when a duplicate of the batch won, the files `c` wrote
+    * are deleted unless a manifest references them — vacuum only
+    * collects paths a manifest names. */
+  private def publish(root: String, basis: Int, c: Commit): Int = {
+    def dropWritten(): Unit = {
+      val wrote = if (c.wrote) c.add.map(_.path) ++ c.cdc else Nil
+      if (wrote.nonEmpty && !manifestReferences(root, wrote))
+        wrote.foreach(p => Files.deleteIfExists(Paths.get(p)))
+    }
+    var parent = basis
+    var attempts = 0
+    try {
+      while (true) {
+        attempts += 1
+        onBeforePublish()
+        val v = parent + 1
+        if (publishAtomic(root, v, parent, c)) return v
+        val head = currentVersion(root)
+        if (c.batchKey.exists(recentBatchKeys(root, head).contains)) {
+          dropWritten() // a duplicate of this batch won: ours is unused
+          return head
+        }
+        c.rebase(head)
+          .orElse(if (attempts < MaxCommitRetries) None
+            else Some(s"gave up after $attempts rebases"))
+          .foreach(why => throw new java.util.ConcurrentModificationException(
+            s"${c.what} at $root lost the race for v$v ($why) — re-read " +
+              "and re-run"))
+        parent = head
+      }
+      -1 // unreachable
+    } catch {
+      case e: Throwable => dropWritten(); throw e
+    }
+  }
+
+  /** Atomic CREATE-NEW publish of `c` as version `v` on `parent`: the
+    * manifest is fully written to a unique temp file, then HARD-LINKED
+    * to its final name ([[linkNew]]) — readers see it fully or not at
+    * all, and a writer that lost the version gets false instead of
+    * silently clobbering the winner. */
+  private def publishAtomic(root: String, v: Int, parent: Int,
+      c: Commit): Boolean = {
+    // the file list against THIS parent: an append carries the parent's
+    // files (embedded every K-th version), a rewrite drops its removed
+    // paths and is always checkpointed
+    lazy val parentFiles = resolveFiles(root, parent)
+    val isCheckpoint = c.remove.isDefined || parent == 0 ||
+      v % CheckpointInterval == 0
+    val checkpoint = if (!isCheckpoint) None else Some(c.remove.fold(
+      parentFiles) { r =>
+        val gone = r.toSet
+        parentFiles.filterNot(f => gone(f.path))
+      } ++ c.add)
+    // an append checkpoint carries the parent's accumulated equality
+    // deletes plus this commit's additions
+    val eqDeletesFull = c.eqDeletesFull.orElse(
+      if (isCheckpoint && c.remove.isEmpty)
+        Some(resolveDeletes(root, parent) ++ c.eqDeleteAdd)
+      else None)
     Files.createDirectories(manifestDir(root))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val body = om.createObjectNode()
@@ -421,33 +517,34 @@ object VersionedTable {
     // column mapping: an evolution commit SETS the schema; every other
     // commit copies its parent's forward (so resolution stays O(1) once
     // mapping is active and a rollback/vacuum can't orphan it)
-    schemaSet.orElse(if (parent > 0) resolveSchema(root, parent) else None)
+    c.schema.orElse(if (parent > 0) resolveSchema(root, parent) else None)
       .foreach { s =>
         val sn = body.putObject("schema")
         sn.put("lastId", s.lastId)
         val ca = sn.putArray("cols")
-        s.cols.foreach { c =>
+        s.cols.foreach { col =>
           val o = ca.addObject()
-          o.put("id", c.id); o.put("name", c.name)
-          o.put("phys", c.phys); o.put("dt", c.dt)
+          o.put("id", col.id); o.put("name", col.name)
+          o.put("phys", col.phys); o.put("dt", col.dt)
         }
         if (s.retired.nonEmpty) {
           val ra = sn.putArray("retired")
           s.retired.foreach(ra.add)
         }
       }
-    rollbackOf.foreach(body.put("rollbackOf", _))
-    batchKey.foreach(body.put("batchKey", _))
+    c.rollbackOf.foreach(body.put("rollbackOf", _))
+    c.batchKey.foreach(body.put("batchKey", _))
     // idempotence horizon: parent's recent keys + ours, newest last
-    val allKeys = (recentBatchKeys ++ batchKey).takeRight(BatchIdHorizon)
+    val allKeys = (recentBatchKeys(root, parent) ++ c.batchKey)
+      .takeRight(BatchIdHorizon)
     if (allKeys.nonEmpty) {
       val ids = body.putArray("batchKeys")
       allKeys.foreach(ids.add)
     }
-    cdcKind.foreach(body.put("cdcKind", _))
-    if (cdc.nonEmpty) {
-      val c = body.putArray("cdc")
-      cdc.foreach(c.add)
+    c.cdcKind.foreach(body.put("cdcKind", _))
+    if (c.cdc.nonEmpty) {
+      val ca = body.putArray("cdc")
+      c.cdc.foreach(ca.add)
     }
     // sequence stamping: files born in THIS commit get seq = v; files
     // carried through (checkpoint embeds of parent files) keep the seq
@@ -456,92 +553,29 @@ object VersionedTable {
     // and restamping a pre-feature (seq 0) entry above the restored
     // equality deletes' sequence would stop their masks applying and
     // resurrect deleted rows (ADVICE r12)
-    val addPaths = add.map(_.path).toSet
+    val addPaths = c.add.map(_.path).toSet
     def stamp(f: FileEntry): FileEntry =
-      if (rollbackOf.isEmpty && f.seq == 0 && addPaths(f.path))
+      if (c.rollbackOf.isEmpty && f.seq == 0 && addPaths(f.path))
         f.copy(seq = v) else f
     def stampD(d: EqDelete): EqDelete =
       if (d.seq == 0) d.copy(seq = v) else d
-    writeEntries(body.putArray("add"), add.map(stamp))
-    if (remove.nonEmpty) {
+    writeEntries(body.putArray("add"), c.add.map(stamp))
+    c.remove.filter(_.nonEmpty).foreach { remove =>
       val r = body.putArray("remove")
       remove.foreach(r.add)
     }
     checkpoint.foreach(full =>
       writeEntries(body.putArray("files"), full.map(stamp)))
-    if (eqDeleteAdd.nonEmpty)
-      writeEqDeletes(body.putArray("eqDeleteAdd"), eqDeleteAdd.map(stampD))
+    if (c.eqDeleteAdd.nonEmpty)
+      writeEqDeletes(body.putArray("eqDeleteAdd"), c.eqDeleteAdd.map(stampD))
     eqDeletesFull.foreach(full =>
       writeEqDeletes(body.putArray("eqDeletesFull"), full.map(stampD)))
     val tmp = manifestDir(root).resolve(
       f".v$v%05d-${ProcessHandle.current().pid()}%d-" +
         f"${commitSeq.incrementAndGet()}%d.json.tmp")
     Files.writeString(tmp, om.writeValueAsString(body))
-    try Files.createLink(manifestPath(root, v), tmp)
+    try linkNew(manifestPath(root, v), tmp)
     finally Files.deleteIfExists(tmp)
-  }
-
-  /** The optimistic-concurrency commit loop shared by every publishing
-    * operation. Append commits (replace=false) rebase on collision —
-    * their `newFiles` live in a fresh per-commit directory, disjoint
-    * from any concurrent commit's, so head-files ++ newFiles is correct
-    * against whatever head they re-read. Replace commits abort: the
-    * snapshot they rewrote is stale the moment the head moves. */
-  private def publishLoop(root: String, newFiles: Seq[FileEntry],
-      replace: Boolean, rollbackOf: Option[Int],
-      batchKey: Option[String], cdc: Seq[String] = Nil,
-      cdcKind: Option[String] = None,
-      eqDeleteAdd: Seq[EqDelete] = Nil,
-      eqDeletesReplace: Option[Seq[EqDelete]] = None): Int = {
-    var parent = currentVersion(root)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      onBeforePublish()
-      val v = parent + 1
-      val parentFiles = resolveFiles(root, parent)
-      val full = if (replace) newFiles else parentFiles ++ newFiles
-      val checkpoint = replace || parent == 0 || v % CheckpointInterval == 0
-      // equality-delete list carried by a checkpoint: a REPLACE commit
-      // materialized the masks (empty, unless a rollback restores a
-      // version's own list); an append checkpoint carries the parent's
-      // accumulated list plus this commit's additions
-      val eqFull: Option[Seq[EqDelete]] =
-        if (replace) Some(eqDeletesReplace.getOrElse(Nil))
-        else if (checkpoint)
-          Some(resolveDeletes(root, parent) ++ eqDeleteAdd)
-        else None
-      try {
-        publishAtomic(root, v, parent,
-          add = newFiles,
-          remove = if (replace) parentFiles.map(_.path) else Nil,
-          checkpoint = if (checkpoint) Some(full) else None,
-          rollbackOf, batchKey,
-          recentBatchKeys = recentBatchKeys(root, parent),
-          cdc = cdc, cdcKind = cdcKind,
-          eqDeleteAdd = eqDeleteAdd, eqDeletesFull = eqFull)
-        return v
-      } catch {
-        case _: FileAlreadyExistsException =>
-          if (replace)
-            throw new java.util.ConcurrentModificationException(
-              s"replace-commit at $root lost the race for v$v: the " +
-                "snapshot it rewrote is stale — re-read and re-run")
-          require(attempts < MaxCommitRetries,
-            s"append commit at $root gave up after $attempts rebases")
-          // a batch retried concurrently with its own duplicate must
-          // still be idempotent: if the winning head's recent-key
-          // window carries our batch key, the batch is already in —
-          // return that version (checking only the head's OWN key
-          // lost idempotence when another writer appended in between)
-          val head = currentVersion(root)
-          val alreadyIn = batchKey.exists(b =>
-            recentBatchKeys(root, head).contains(b))
-          if (alreadyIn) return head
-          parent = head
-      }
-    }
-    -1 // unreachable
   }
 
   private def batchKeyOf(appId: String, batchId: Long): String = {
@@ -575,10 +609,17 @@ object VersionedTable {
     * sink documents. `appId` namespaces the window per writer: two
     * streaming queries (both starting at batchId 0) feeding one table
     * must pass distinct, restart-stable appIds (e.g. the checkpoint
-    * path) or they would drop each other's batches as retries. Returns
-    * the (possibly pre-existing) version id. */
-  def commitBatch(df: DataFrame, root: String, batchId: Long,
-      statsCol: Option[String] = None, appId: String = ""): Int = {
+    * path) or they would drop each other's batches as retries.
+    *
+    * `df` is built only when the batch is not already in. By default
+    * it is appended; with `basis = Some(v)` it is the WHOLE new
+    * snapshot, computed from version `v`, and publishes as a replace of
+    * `v` (a snapshot-merging sink: a head that moved past `v` aborts,
+    * unless it already holds this batch). Returns the (possibly
+    * pre-existing) version id. */
+  def commitBatch(df: => DataFrame, root: String, batchId: Long,
+      statsCol: Option[String] = None, appId: String = "",
+      basis: Option[Int] = None): Int = {
     val cur = currentVersion(root)
     val key = batchKeyOf(appId, batchId)
     // the head's recent-key WINDOW, not just its own key: a retry
@@ -586,7 +627,11 @@ object VersionedTable {
     // (ADVICE r10 — the lost-idempotence case under OCC)
     if (cur > 0 && recentBatchKeys(root, cur).contains(key))
       return cur // retry of an already-committed batch
-    commit(df, root, statsCol, Some(key))
+    basis match {
+      case None => commit(df, root, statsCol, Some(key))
+      case Some(b) => replace(root, b, Commit("commitBatch",
+        writeData(df, root, statsCol, Nil), batchKey = Some(key)))
+    }
   }
 
   /** Append `df` as a new version; returns the published version id.
@@ -599,8 +644,8 @@ object VersionedTable {
       statsCol: Option[String] = None,
       batchKey: Option[String] = None,
       statsCols: Seq[String] = Nil): Int =
-    publishLoop(root, writeData(df, root, statsCol, Nil, statsCols),
-      replace = false, rollbackOf = None, batchKey)
+    append(root, Commit("append",
+      writeData(df, root, statsCol, Nil, statsCols), batchKey = batchKey))
 
   /** INSERT OVERWRITE semantics (round 14, the catalog's truncate
     * write path): ONE replace commit swapping the entire snapshot for
@@ -609,9 +654,10 @@ object VersionedTable {
     * un-sidecar'd replace: a consumer whose window crosses it fails
     * loudly instead of silently re-emitting the table. */
   def overwriteAll(df: DataFrame, root: String,
-      statsCol: Option[String] = None): Int =
-    publishLoop(root, writeData(df, root, statsCol, Nil),
-      replace = true, rollbackOf = None, batchKey = None)
+      statsCol: Option[String] = None): Int = {
+    val add = writeData(df, root, statsCol, Nil)
+    replace(root, currentVersion(root), Commit("overwriteAll", add))
+  }
 
   /** Guarded append — COMMIT-TIME enforcement (the Delta
     * constraints/schema-enforcement role): the batch is admitted only
@@ -689,8 +735,8 @@ object VersionedTable {
   def commitPartitioned(df: DataFrame, root: String, partCols: Seq[String],
       statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil): Int =
-    publishLoop(root, writeData(df, root, statsCol, partCols, statsCols),
-      replace = false, rollbackOf = None, batchKey = None)
+    append(root, Commit("commitPartitioned",
+      writeData(df, root, statsCol, partCols, statsCols)))
 
   /** Dynamic partition OVERWRITE (the INSERT OVERWRITE ... PARTITION
     * semantics): replace exactly the partition tuples PRESENT in the
@@ -708,12 +754,7 @@ object VersionedTable {
   def overwritePartitions(df: DataFrame, root: String,
       partCols: Seq[String], statsCol: Option[String] = None): Int = {
     require(partCols.nonEmpty, "overwritePartitions needs partition columns")
-    val basis = currentVersion(root)
-    require(basis > 0,
-      s"overwritePartitions: $root has no committed version")
-    require(resolveDeletes(root, basis).isEmpty,
-      s"overwritePartitions: $root has pending equality deletes — run " +
-        "optimize (the materialization point) first")
+    val basis = rewriteBasis(root, "overwritePartitions")
     val all = resolveFiles(root, basis)
     // layout guard: a carried file is safe ONLY if its partition tuple
     // is keyed on exactly this overwrite's partCols — a file committed
@@ -735,31 +776,23 @@ object VersionedTable {
         "duplicate overwritten rows; OPTIMIZE into one layout first")
     val newFiles = writeData(df, root, statsCol, partCols)
     val touched = newFiles.map(_.part).toSet
-    val removed = all.filter(f => f.part.isEmpty || touched(f.part))
-      .map(_.path)
-    try {
-      onBeforePublish()
-      val v = basis + 1
-      val removedSet = removed.toSet
-      val carried = all.filterNot(f => removedSet(f.path))
-      try publishAtomic(root, v, basis,
-        add = newFiles, remove = removed,
-        checkpoint = Some(carried ++ newFiles),
-        rollbackOf = None, batchKey = None,
-        recentBatchKeys = recentBatchKeys(root, basis),
-        cdc = Nil, cdcKind = None)
-      catch {
-        case _: FileAlreadyExistsException =>
-          throw new java.util.ConcurrentModificationException(
-            s"partition overwrite at $root lost the race for v$v: the " +
-              "partitions it rewrote are stale — re-read and re-run")
-      }
-      v
-    } catch {
-      case e: Throwable =>
-        newFiles.map(_.path).foreach(p => Files.deleteIfExists(Paths.get(p)))
-        throw e
-    }
+    publish(root, basis, Commit("overwritePartitions", newFiles,
+      remove = Some(all.filter(f => f.part.isEmpty || touched(f.part))
+        .map(_.path))))
+  }
+
+  /** The head a partial rewrite starts from (targeted merge/delete,
+    * partition overwrite): it must exist and carry no pending equality
+    * deletes — the rewrite reads only the files it replaces and carries
+    * the rest verbatim, so a read-time mask would silently drop out of
+    * the carried files' rows; [[optimize]] materializes them first. */
+  private def rewriteBasis(root: String, what: String): Int = {
+    val basis = currentVersion(root)
+    require(basis > 0, s"$what: $root has no committed version")
+    require(resolveDeletes(root, basis).isEmpty,
+      s"$what: $root has pending equality deletes — run optimize " +
+        "(the materialization point) first")
+    basis
   }
 
   /** Write `df` to a fresh per-commit directory (unique across JVMs and
@@ -974,19 +1007,15 @@ object VersionedTable {
     require(resolveDeletes(sourceRoot, v).isEmpty,
       s"clone: $sourceRoot@v$v has pending equality deletes — run " +
         "optimize (the materialization point) first")
-    val files = resolveFiles(sourceRoot, v).map(_.copy(seq = 0))
-    // an append-shaped v1 (no remove, no marker): a change-feed
+    // an append-shaped v1 (nothing removed, no marker): a change-feed
     // consumer starting from 0 correctly sees the cloned snapshot as
-    // its initial inserts
-    publishAtomic(targetRoot, 1, 0,
-      add = files, remove = Nil,
-      checkpoint = Some(files),
-      rollbackOf = None, batchKey = None, recentBatchKeys = Nil,
-      cdc = Nil, cdcKind = None,
+    // its initial inserts. The files are the source's: never deleted,
+    // and a racing creator of the target's v1 aborts the clone
+    publish(targetRoot, 0, Commit("clone",
+      resolveFiles(sourceRoot, v).map(_.copy(seq = 0)), remove = Some(Nil),
       // the clone must speak the source's logical names over the
       // shared physical files — carry the column mapping verbatim
-      schemaSet = resolveSchema(sourceRoot, v))
-    1
+      schema = resolveSchema(sourceRoot, v), wrote = false))
   }
 
   /** The commit HISTORY as a DataFrame (the DESCRIBE HISTORY role):
@@ -1055,7 +1084,8 @@ object VersionedTable {
     // targeted merge/delete actually bite after ingest scrambled the
     // key space (the liquid-clustering/OPTIMIZE ZORDER role). Stats
     // are recorded on the cluster column by default.
-    val base = read(spark, root)
+    val basis = currentVersion(root)
+    val base = read(spark, root, Some(basis))
     val laid = clusterBy match {
       case Some(c) =>
         import org.apache.spark.sql.functions.col
@@ -1063,12 +1093,11 @@ object VersionedTable {
           .sortWithinPartitions(col(c))
       case None => base.repartition(numFiles)
     }
-    publishLoop(root,
+    replace(root, basis, Commit("optimize",
       writeData(laid, root, statsCol.orElse(clusterBy), Nil, statsCols),
-      replace = true, rollbackOf = None, batchKey = None,
       // row-NEUTRAL replace: same logical rows, new layout — the change
       // feed skips it instead of failing or re-emitting the table
-      cdcKind = Some("neutral"))
+      cdcKind = Some("neutral")))
   }
 
   /** MERGE (upsert) as a copy-on-write REWRITE commit: rows of the
@@ -1084,47 +1113,46 @@ object VersionedTable {
   def merge(spark: SparkSession, root: String, updates: DataFrame,
       keyCol: String, numFiles: Int = 1,
       statsCol: Option[String] = None, cdc: Boolean = false): Int = {
+    val basis = currentVersion(root)
+    val (merged, feed) =
+      mergeRows(read(spark, root, Some(basis)), updates, keyCol)
+    // Row-level change-feed sidecar (cdc=true): O(change) parquet
+    // written BESIDE the rewritten snapshot and recorded in the
+    // manifest, so an incremental consumer crosses this replace commit
+    // at O(change) instead of a full rescan
+    val cdcPaths =
+      if (cdc) writeCdc(feed, root, resolveSchema(root, basis)) else Nil
+    replace(root, basis, Commit("merge",
+      writeData(merged.repartition(numFiles), root, statsCol, Nil),
+      cdc = cdcPaths, cdcKind = if (cdc) Some("merge") else None))
+  }
+
+  /** The upsert algebra [[merge]] and [[mergeTargeted]] share over
+    * `base` (the whole snapshot, or the rewrite set): the merged rows —
+    * `base` rows whose key matches an `updates` row are replaced,
+    * unmatched update rows inserted — and the change feed: the
+    * pre-image of every matched row, the post-image, and each inserted
+    * row, tagged `_change_type`. The feed's three legs reuse the
+    * merge's own key-join shape (semi/anti over the same key
+    * partitioning — at scale AQE reuses the exchange; a bounded update
+    * batch broadcasts); matched-but-identical rows still emit a
+    * pre/post pair, the contract real change feeds document for COW
+    * merge. Both frames are lazy: the feed costs nothing unless
+    * written. */
+  private def mergeRows(base: DataFrame, updates: DataFrame,
+      keyCol: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.{col, lit}
-    val current = read(spark, root)
-    val merged = current
-      .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
+    val keys = updates.select(col(keyCol))
+    val baseKeys = base.select(col(keyCol))
+    val merged = base.join(keys, Seq(keyCol), "left_anti")
       .unionByName(updates)
-    // Row-level change-feed sidecar (cdc=true): pre-image of every
-    // matched row, post-image, and each inserted row — O(change)
-    // parquet written BESIDE the rewritten snapshot and recorded in
-    // the manifest, so an incremental consumer crosses this replace
-    // commit at O(change) instead of a full rescan. The three legs
-    // reuse the merge's own key-join shape (semi/anti over the same
-    // key partitioning — at scale AQE reuses the exchange; a bounded
-    // update batch broadcasts). Matched-but-identical rows still emit
-    // a pre/post pair, the same contract real change feeds document
-    // for COW merge.
-    val cdcPaths = if (!cdc) Nil else {
-      val keys = updates.select(col(keyCol))
-      val curKeys = current.select(col(keyCol))
-      val feed = current.join(keys, Seq(keyCol), "left_semi")
-        .withColumn("_change_type", lit("update_preimage"))
-        .unionByName(updates.join(curKeys, Seq(keyCol), "left_semi")
-          .withColumn("_change_type", lit("update_postimage")))
-        .unionByName(updates.join(curKeys, Seq(keyCol), "left_anti")
-          .withColumn("_change_type", lit("insert")))
-      writeCdc(feed, root, resolveSchema(root, currentVersion(root)))
-    }
-    // data + sidecar are written BEFORE the manifest publish; if the
-    // replace commit then aborts (head moved → Concurrent-
-    // ModificationException), no manifest ever references those files
-    // and vacuum (which sweeps manifest-referenced paths) would leak
-    // them forever — delete them on the way out (ADVICE r11)
-    val newFiles = writeData(merged.repartition(numFiles), root, statsCol, Nil)
-    try publishLoop(root, newFiles,
-      replace = true, rollbackOf = None, batchKey = None,
-      cdc = cdcPaths, cdcKind = if (cdc) Some("merge") else None)
-    catch {
-      case e: Throwable =>
-        (cdcPaths ++ newFiles.map(_.path))
-          .foreach(p => Files.deleteIfExists(Paths.get(p)))
-        throw e
-    }
+    val feed = base.join(keys, Seq(keyCol), "left_semi")
+      .withColumn("_change_type", lit("update_preimage"))
+      .unionByName(updates.join(baseKeys, Seq(keyCol), "left_semi")
+        .withColumn("_change_type", lit("update_postimage")))
+      .unionByName(updates.join(baseKeys, Seq(keyCol), "left_anti")
+        .withColumn("_change_type", lit("insert")))
+    (merged, feed)
   }
 
   /** Key-range-TARGETED merge — the file-level refinement of [[merge]]
@@ -1156,44 +1184,18 @@ object VersionedTable {
     * skip them too. Returns the published version id. */
   def mergeTargeted(spark: SparkSession, root: String, updates: DataFrame,
       keyCol: String, numFiles: Int = 1, cdc: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val basis = currentVersion(root)
-    require(basis > 0, s"mergeTargeted: $root has no committed version")
-    // the targeted rewrite reads ONLY touched files raw and carries the
-    // rest — pending read-time masks would be silently dropped from
-    // carried files' rows it never looks at; materialize first
-    require(resolveDeletes(root, basis).isEmpty,
-      s"mergeTargeted: $root has pending equality deletes — run " +
-        "optimize (the materialization point) first")
-    val all = resolveFiles(root, basis)
-    val schema = resolveSchema(root, basis)
-    val physKey = schema.fold(keyCol)(_.physOf(keyCol))
-    val rewritePaths = overlapTargets(spark, all, updates, keyCol, physKey)
-    val touched =
-      if (rewritePaths.isEmpty) read(spark, root, Some(basis)).limit(0)
-      else fromPhysical(readFilesMapped(spark, rewritePaths,
-        mergeSchema = false, schema), schema)
-    val merged = touched
-      .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-      .unionByName(updates)
+    import org.apache.spark.sql.functions.col
+    val r = targeted(spark, root, "mergeTargeted")(
+      (all, phys) => overlapTargets(spark, all, updates, keyCol, phys(keyCol)))
     // CDC legs confined to the rewrite set (matches can live nowhere
     // else — the stats argument above); same three-leg contract as
     // [[merge]](cdc=true)
-    val cdcPaths = if (!cdc) Nil else {
-      val keys = updates.select(col(keyCol))
-      val touchedKeys = touched.select(col(keyCol))
-      val feed = touched.join(keys, Seq(keyCol), "left_semi")
-        .withColumn("_change_type", lit("update_preimage"))
-        .unionByName(updates.join(touchedKeys, Seq(keyCol), "left_semi")
-          .withColumn("_change_type", lit("update_postimage")))
-        .unionByName(updates.join(touchedKeys, Seq(keyCol), "left_anti")
-          .withColumn("_change_type", lit("insert")))
-      writeCdc(feed, root, schema)
-    }
-    publishTargetedRewrite(spark, root, basis, all, rewritePaths,
-      merged, numFiles, Some(keyCol), cdcPaths, cdc, "targeted merge",
+    val (merged, feed) = mergeRows(r.touched, updates, keyCol)
+    val cdcPaths = if (cdc) writeCdc(feed, root, r.schema) else Nil
+    publishTargetedRewrite(root, r, merged, numFiles, Some(keyCol),
+      cdcPaths, cdc, "mergeTargeted",
       interleaved => overlapTargets(spark, interleaved,
-        updates.select(col(keyCol)), keyCol, physKey).nonEmpty)
+        updates.select(col(keyCol)), keyCol, r.phys(keyCol)).nonEmpty)
   }
 
   /** Targeted DELETE — row erasure as a partial copy-on-write: files
@@ -1209,28 +1211,17 @@ object VersionedTable {
   def delete(spark: SparkSession, root: String, deletes: DataFrame,
       keyCol: String, numFiles: Int = 1, cdc: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{col, lit}
-    val basis = currentVersion(root)
-    require(basis > 0, s"delete: $root has no committed version")
-    require(resolveDeletes(root, basis).isEmpty,
-      s"delete: $root has pending equality deletes — run optimize " +
-        "(the materialization point) first")
-    val all = resolveFiles(root, basis)
-    val schema = resolveSchema(root, basis)
-    val physKey = schema.fold(keyCol)(_.physOf(keyCol))
-    val rewritePaths = overlapTargets(spark, all, deletes, keyCol, physKey)
-    val touched =
-      if (rewritePaths.isEmpty) read(spark, root, Some(basis)).limit(0)
-      else fromPhysical(readFilesMapped(spark, rewritePaths,
-        mergeSchema = false, schema), schema)
+    val r = targeted(spark, root, "delete")(
+      (all, phys) => overlapTargets(spark, all, deletes, keyCol, phys(keyCol)))
     val keys = deletes.select(col(keyCol))
-    val survivors = touched.join(keys, Seq(keyCol), "left_anti")
+    val survivors = r.touched.join(keys, Seq(keyCol), "left_anti")
     val cdcPaths = if (!cdc) Nil else
-      writeCdc(touched.join(keys, Seq(keyCol), "left_semi")
-        .withColumn("_change_type", lit("delete")), root, schema)
-    publishTargetedRewrite(spark, root, basis, all, rewritePaths,
-      survivors, numFiles, Some(keyCol), cdcPaths, cdc, "targeted delete",
+      writeCdc(r.touched.join(keys, Seq(keyCol), "left_semi")
+        .withColumn("_change_type", lit("delete")), root, r.schema)
+    publishTargetedRewrite(root, r, survivors, numFiles, Some(keyCol),
+      cdcPaths, cdc, "delete",
       interleaved => overlapTargets(spark, interleaved, keys, keyCol,
-        physKey).nonEmpty)
+        r.phys(keyCol)).nonEmpty)
   }
 
   /** Conservative file-level evaluation of one pushed filter against a
@@ -1303,11 +1294,6 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, root: String,
       filters: Seq[sources.Filter], numFiles: Int = 1): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val basis = currentVersion(root)
-    require(basis > 0, s"deleteWhere: $root has no committed version")
-    require(resolveDeletes(root, basis).isEmpty,
-      s"deleteWhere: $root has pending equality deletes — run optimize " +
-        "(the materialization point) first")
     val pred = filters
       .map(f => GraftScanBuilder.toColumn(f).getOrElse(
         throw new UnsupportedOperationException(
@@ -1315,23 +1301,15 @@ object VersionedTable {
             "gate on the translatable set (canDeleteWhere)")))
       .reduceOption(_ && _).getOrElse(lit(true))
     val hit = coalesce(pred, lit(false))
-    val all = resolveFiles(root, basis)
-    val schema = resolveSchema(root, basis)
-    def phys(n: String): String = schema.fold(n)(_.physOf(n))
-    val rewritePaths = all
-      .filter(f => filters.forall(mayMatch(_, f, phys))).map(_.path)
-    val touched =
-      if (rewritePaths.isEmpty) read(spark, root, Some(basis)).limit(0)
-      else fromPhysical(readFilesMapped(spark, rewritePaths,
-        mergeSchema = false, schema), schema)
-    val survivors = touched.filter(not(hit))
-    val cdcPaths = writeCdc(touched.filter(hit)
-      .withColumn("_change_type", lit("delete")), root, schema)
-    publishTargetedRewrite(spark, root, basis, all, rewritePaths,
-      survivors, numFiles, None, cdcPaths, cdc = true,
-      "predicate delete",
+    val r = targeted(spark, root, "deleteWhere")((all, phys) =>
+      all.filter(f => filters.forall(mayMatch(_, f, phys))).map(_.path))
+    val survivors = r.touched.filter(not(hit))
+    val cdcPaths = writeCdc(r.touched.filter(hit)
+      .withColumn("_change_type", lit("delete")), root, r.schema)
+    publishTargetedRewrite(root, r, survivors, numFiles, None, cdcPaths,
+      cdc = true, "deleteWhere",
       interleaved => interleaved
-        .exists(f => filters.forall(mayMatch(_, f, phys))))
+        .exists(f => filters.forall(mayMatch(_, f, r.phys))))
   }
 
   /** Overlap plan shared by [[mergeTargeted]] and [[delete]]: the
@@ -1373,11 +1351,36 @@ object VersionedTable {
     }
   }
 
+  /** What a targeted rewrite starts from: its `basis` version (see
+    * [[rewriteBasis]]), that version's files and column mapping, the
+    * `paths` it rewrites, and their rows read back under logical names
+    * (`touched` — an empty frame of the snapshot's schema when nothing
+    * is targeted). */
+  private case class Rewrite(basis: Int, all: Seq[FileEntry],
+      schema: Option[TableSchema], paths: Seq[String], touched: DataFrame) {
+    def phys(name: String): String = schema.fold(name)(_.physOf(name))
+  }
+
+  /** The prologue every targeted rewrite shares: the basis, its files
+    * and mapping, the files `pick` targets (given the basis files and
+    * the logical → physical name map) and their rows. */
+  private def targeted(spark: SparkSession, root: String, what: String)(
+      pick: (Seq[FileEntry], String => String) => Seq[String]): Rewrite = {
+    val basis = rewriteBasis(root, what)
+    val all = resolveFiles(root, basis)
+    val schema = resolveSchema(root, basis)
+    val paths = pick(all, n => schema.fold(n)(_.physOf(n)))
+    val touched =
+      if (paths.isEmpty) read(spark, root, Some(basis)).limit(0)
+      else fromPhysical(readFilesMapped(spark, paths,
+        mergeSchema = false, schema), schema)
+    Rewrite(basis, all, schema, paths, touched)
+  }
+
   /** Publish step shared by the targeted rewrites: write the rewritten
     * rows (key stats recorded so FUTURE targeted commits can skip the
-    * new files too), carry every untouched entry verbatim, publish as
-    * a replace-style commit (remove = rewritten paths only), and never
-    * leak unpublished data/sidecar files.
+    * new files too) and [[publish]] them as a rewrite commit that
+    * removes only `r.paths` and carries every untouched entry verbatim.
     *
     * DISJOINTNESS-AWARE OCC (round 13 — the r12 verdict item: abort-on-
     * any-moved-head serialized ALL table maintenance at many-writer
@@ -1390,8 +1393,8 @@ object VersionedTable {
     *     (no concurrent commit touched our input; contents are
     *     immutable, so presence ⇒ unchanged);
     *  2. no file the interleaved commits ADDED can contain one of our
-    *     keys (checked by the same stats-overlap plan as targeting —
-    *     a stat-less or other-column-stats new file is conservatively
+    *     keys (`mayConflict`, the same stats-overlap plan as targeting
+    *     — a stat-less or other-column-stats new file is conservatively
     *     a conflict);
     *  3. the head carries no pending equality deletes (our masked-free
     *     read precondition must still hold);
@@ -1403,8 +1406,7 @@ object VersionedTable {
     * the SAME key range still serialize, but disjoint maintenance
     * (the common case: per-partition backfills, per-tenant GDPR
     * deletes) now lands concurrently. */
-  private def publishTargetedRewrite(spark: SparkSession, root: String,
-      basis: Int, all: Seq[FileEntry], rewritePaths: Seq[String],
+  private def publishTargetedRewrite(root: String, r: Rewrite,
       rewritten: DataFrame, numFiles: Int, statsCol: Option[String],
       cdcPaths: Seq[String], cdc: Boolean, what: String,
       mayConflict: Seq[FileEntry] => Boolean): Int = {
@@ -1415,64 +1417,29 @@ object VersionedTable {
     // to a conservative full rewrite. Basis stats keys are physical —
     // translate back to the logical names writeData speaks.
     val basisStats = {
-      val schema = resolveSchema(root, basis)
       val live = rewritten.columns.toSet // dropped columns have no data
-      all.flatMap(_.statsCols).distinct
-        .map(p => schema.fold(p)(_.nameOfPhys(p)))
+      r.all.flatMap(_.statsCols).distinct
+        .map(p => r.schema.fold(p)(_.nameOfPhys(p)))
         .filter(live)
     }
     val newFiles = writeData(rewritten.repartition(numFiles), root,
       statsCol, Nil, basisStats.filterNot(c => statsCol.contains(c)))
-    val removed = rewritePaths.toSet
-    val basisPaths = all.map(_.path).toSet
-    val schemaAtBasis = resolveSchema(root, basis)
-    def abort(v: Int, why: String): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"$what at $root lost the race for v$v ($why) — re-read and re-run")
-    try {
-      var parent = basis
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        onBeforePublish()
-        val v = parent + 1
-        val carried = resolveFiles(root, parent)
-          .filterNot(f => removed(f.path))
-        try {
-          publishAtomic(root, v, parent,
-            add = newFiles, remove = rewritePaths,
-            checkpoint = Some(carried ++ newFiles),
-            rollbackOf = None, batchKey = None,
-            recentBatchKeys = recentBatchKeys(root, parent),
-            cdc = cdcPaths, cdcKind = if (cdc) Some("merge") else None)
-          return v
-        } catch {
-          case _: FileAlreadyExistsException =>
-            val head = currentVersion(root)
-            val headFiles = resolveFiles(root, head)
-            if (!rewritePaths.forall(headFiles.map(_.path).toSet))
-              abort(v, "a concurrent commit rewrote one of its input files")
-            if (resolveDeletes(root, head).nonEmpty)
-              abort(v, "concurrent equality deletes are pending")
-            if (resolveSchema(root, head) != schemaAtBasis)
-              abort(v, "the column mapping changed concurrently")
-            val interleaved = headFiles.filterNot(f => basisPaths(f.path))
-            if (mayConflict(interleaved))
-              abort(v, "a concurrently added file may contain " +
-                "affected rows")
-            if (attempts >= MaxCommitRetries)
-              abort(v, s"gave up after $attempts rebases")
-            parent = head
-        }
-      }
-      -1 // unreachable
-    } catch {
-      case e: Throwable =>
-        if (!manifestReferences(root, newFiles.map(_.path) ++ cdcPaths))
-          (cdcPaths ++ newFiles.map(_.path))
-            .foreach(p => Files.deleteIfExists(Paths.get(p)))
-        throw e
-    }
+    val basisPaths = r.all.map(_.path).toSet
+    publish(root, r.basis, Commit(what, newFiles, remove = Some(r.paths),
+      cdc = cdcPaths, cdcKind = if (cdc) Some("merge") else None,
+      rebase = { head =>
+        val headFiles = resolveFiles(root, head)
+        val headPaths = headFiles.map(_.path).toSet
+        if (!r.paths.forall(headPaths))
+          Some("a concurrent commit rewrote one of its input files")
+        else if (resolveDeletes(root, head).nonEmpty)
+          Some("concurrent equality deletes are pending")
+        else if (resolveSchema(root, head) != r.schema)
+          Some("the column mapping changed concurrently")
+        else if (mayConflict(headFiles.filterNot(f => basisPaths(f.path))))
+          Some("a concurrently added file may contain affected rows")
+        else None
+      }))
   }
 
   /** True when any surviving manifest references one of `paths` —
@@ -1859,9 +1826,9 @@ object VersionedTable {
     val physKey = resolveSchema(root, cur).fold(keyCol)(_.physOf(keyCol))
     val paths = writeCdc(
       deletes.select(col(keyCol).as(physKey)).distinct(), root)
-    publishLoop(root, Nil, replace = false, rollbackOf = None,
-      batchKey = None, cdc = paths, cdcKind = Some("eqdelete"),
-      eqDeleteAdd = paths.map(p => EqDelete(p, physKey, 0)))
+    append(root, Commit("deleteDeferred", Nil, cdc = paths,
+      cdcKind = Some("eqdelete"),
+      eqDeleteAdd = paths.map(p => EqDelete(p, physKey, 0))))
   }
 
   /** Stats-pruned snapshot read for the stats column ∈ [lo, hi]: files
@@ -1940,12 +1907,14 @@ object VersionedTable {
     * silently discarding the concurrent commit. Returns the published
     * version id. */
   def rollback(root: String, toVersion: Int): Int =
-    publishLoop(root, resolveFiles(root, toVersion), replace = true,
-      rollbackOf = Some(toVersion), batchKey = None,
+    replace(root, currentVersion(root), Commit("rollback",
+      resolveFiles(root, toVersion), rollbackOf = Some(toVersion),
       // restore the target's VISIBLE state: its pending equality
       // deletes come back with it (a bare file-list restore would
       // resurrect masked rows)
-      eqDeletesReplace = Some(resolveDeletes(root, toVersion)))
+      eqDeletesFull = Some(resolveDeletes(root, toVersion)),
+      // the restored files are the target version's, never deleted
+      wrote = false))
 
   // ---- column-mapping schema evolution (round 13) ------------------
 
@@ -1974,9 +1943,10 @@ object VersionedTable {
     }
 
   /** Shared metadata-only evolution commit: the new schema publishes
-    * as a delta manifest carrying NO file changes (`cdcKind=schema` —
-    * the history shows it, the change feed skips it as zero rows, and
-    * file/delete resolution recurse straight through). Concurrency:
+    * as an append-shaped manifest carrying NO file changes
+    * (`cdcKind=schema` — the history shows it, the change feed skips it
+    * as zero rows, and file/delete resolution carry straight through,
+    * embedding the list at a checkpoint version). Concurrency:
     * abort on ANY head move (the replace rule — an evolution is cheap
     * to re-run, and silently rebasing a rename over a concurrent drop
     * of the same column would corrupt the mapping). */
@@ -1990,19 +1960,8 @@ object VersionedTable {
     require(s1.cols.map(_.phys).distinct.size == s1.cols.size,
       s"$what: duplicate physical name in resulting schema")
     require(s1.cols.nonEmpty, s"$what: schema cannot become empty")
-    onBeforePublish()
-    val v = basis + 1
-    try publishAtomic(root, v, basis, add = Nil, remove = Nil,
-      checkpoint = None, rollbackOf = None, batchKey = None,
-      recentBatchKeys = recentBatchKeys(root, basis),
-      cdc = Nil, cdcKind = Some("schema"), schemaSet = Some(s1))
-    catch {
-      case _: FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$what at $root lost the race for v$v: the schema it evolved " +
-            "is stale — re-read and re-run")
-    }
-    v
+    publish(root, basis,
+      Commit(what, Nil, schema = Some(s1), cdcKind = Some("schema")))
   }
 
   /** RENAME a column WITHOUT severing history (round 13 — the r12

@@ -50,6 +50,26 @@ class GraftSessionSpec extends SparkSpec {
       Seq("GraftSession.scala"))
   }
 
+  test("src/main has one create-new collision catch and no marker-file commit") {
+    // every table write publishes through VersionedTable's one commit
+    // loop, whose hard-link helper is the only place a lost create-new
+    // race (FileAlreadyExistsException) is caught; a second catch, or a
+    // `_current` pointer file, is a second commit protocol
+    val catchAt = ("case\\s+\\w+\\s*:\\s*(java\\.nio\\.file\\.)?" +
+      "FileAlreadyExistsException").r
+    val walk = Files.walk(Paths.get("src/main"))
+    val (catches, markers) =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map { p =>
+          val src = new String(Files.readAllBytes(p), "UTF-8")
+          (catchAt.findAllIn(src).size, src.contains("\"_current"))
+        }.foldLeft((0, false)) { case ((n, m), (c, k)) => (n + c, m || k) }
+      finally walk.close()
+    assert(catches === 1,
+      s"FileAlreadyExistsException is caught in $catches places")
+    assert(!markers, "a source under src/main writes a _current marker")
+  }
+
   test("no source under src/main reads a spark.graft.* option") {
     // every behaviour is fixed by the code or by a standard Spark conf;
     // a session-level option would fork plans the graded run never takes

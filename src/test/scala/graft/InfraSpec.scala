@@ -198,6 +198,19 @@ class InfraSpec extends SparkSpec {
     } finally graft.ops.OpCache.clear(ns)
   }
 
+  test("the bloom-filtered join runs no job once the calling session read its tables") {
+    // the join reads on a clone that carries its own confs; the schemas
+    // come from the calling session's memo, not the clone's empty one
+    val ns = spark.newSession()
+    try {
+      Seq("orders", "lineitem").foreach(Tables.t(ns, sf, _))
+      val (joined, jobs) =
+        jobsDuring(graft.ops.Joins.joinBloomFiltered(ns, sf))
+      assert(jobs === 0, s"building q_join_bloom_filtered ran $jobs jobs")
+      assert(joined.columns.toSeq === Seq("o_year", "revenue", "n_items"))
+    } finally graft.ops.OpCache.clear(ns)
+  }
+
   test("streamParts sizes a directory-stored table by the files under it") {
     // two sparse 20 MB part files: 40 MB at 16 MB a partition is 3
     // partitions on the 4-core spec session (the directory entry alone
@@ -324,6 +337,18 @@ class InfraSpec extends SparkSpec {
       // the concurrent append survived; the aborted optimize changed nothing
       assert(VersionedTable.currentVersion(root) === 3)
       assert(VersionedTable.read(spark, root).count() === 3)
+      // ... and left none of its rewritten parquet behind
+      val written = {
+        import scala.jdk.CollectionConverters._
+        val st = Files.walk(java.nio.file.Paths.get(root, "data"))
+        try st.iterator().asScala.map(_.toString)
+          .filter(p => p.endsWith(".parquet") &&
+            java.nio.file.Paths.get(p).getFileName.toString
+              .startsWith("part-")).toSet
+        finally st.close()
+      }
+      assert(written === VersionedTable.resolveFiles(root, 3).map(_.path).toSet,
+        "the aborted optimize must delete the files it rewrote")
       // a clean re-run compacts all three rows
       val v4 = VersionedTable.optimize(spark, root)
       assert(v4 === 4)

@@ -224,7 +224,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       val sinkFn: (org.apache.spark.sql.DataFrame, Long) => Unit =
         (df, id) => {
           lastBatch = id
-          streaming.ForeachUpsert.applyBatch(spark, target, id, df, "event_type")
+          ops.Streaming.upsertBatch(spark, target, id, df, "event_type")
         }
       def runOnce(): Unit = {
         val q = spark.readStream.schema(schema).parquet(srcDir.toString)
@@ -234,7 +234,7 @@ class StreamingSemanticsSpec extends SparkSpec {
         q.awaitTermination()
       }
       def serving: Map[String, Long] =
-        streaming.ForeachUpsert.read(spark, target)
+        ops.Streaming.upserted(spark, target)
           .as[(String, Long)].collect().toMap
       def batchCounts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
         df.groupBy($"event_type").agg(count(lit(1)).as("n"))
@@ -244,7 +244,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       assert(serving === batchCounts(all.filter($"event_id" % 2 === 0)),
         "after run 1 the serving table must equal the half-A aggregate")
       // at-least-once replay: the SAME batch id with the same rows
-      streaming.ForeachUpsert.applyBatch(spark, target, lastBatch,
+      ops.Streaming.upsertBatch(spark, target, lastBatch,
         spark.read.schema(schema).parquet(srcDir.toString), "event_type")
       assert(serving === batchCounts(all.filter($"event_id" % 2 === 0)),
         "a re-delivered batch must be a no-op, not a double-apply")

@@ -162,6 +162,54 @@ class VersionedTableCdcSpec extends SparkSpec {
     }
   }
 
+  test("a commit that loses its race leaves no parquet under data/ or cdc/") {
+    // every kind of lost publish: the replace commits abort at the first
+    // collision, the append rebases until it gives up after
+    // MaxCommitRetries. Each wrote its files before publishing; vacuum
+    // only collects paths a manifest names, so any file left behind
+    // would stay for good.
+    def rows(k: Long, v: String): DataFrame =
+      Seq((k, v, (k % 2).toInt)).toDF("k", "v", "p")
+    val cases: Seq[(String, String => Int)] = Seq(
+      "optimize" -> (root => VersionedTable.optimize(spark, root)),
+      "overwriteAll" -> (root => VersionedTable.overwriteAll(rows(7L, "o"), root)),
+      "merge" -> (root => VersionedTable.merge(spark, root, rows(1L, "m"), "k",
+        cdc = true)),
+      "overwritePartitions" -> (root => VersionedTable.overwritePartitions(
+        rows(1L, "w"), root, Seq("p"))),
+      "append" -> (root => VersionedTable.commit(rows(9L, "late"), root)))
+    for ((name, op) <- cases) withTmpDir(s"graft_lost_$name") { base =>
+      val root = s"$base/t"
+      VersionedTable.commitPartitioned(rows(1L, "a"), root, Seq("p"))
+      // a competing append lands before EVERY publish attempt (its own
+      // publish is not raced)
+      var racers = 0
+      var racing = false
+      VersionedTable.onBeforePublish = () => if (!racing) {
+        racing = true
+        try {
+          racers += 1
+          VersionedTable.commitPartitioned(rows(100L + racers, "r"), root,
+            Seq("p"))
+        } finally racing = false
+      }
+      try intercept[java.util.ConcurrentModificationException](op(root))
+      finally VersionedTable.onBeforePublish = () => ()
+      val expectedRacers =
+        if (name == "append") VersionedTable.MaxCommitRetries else 1
+      assert(racers === expectedRacers, name)
+      val head = VersionedTable.currentVersion(root)
+      assert(head === 1 + racers, s"$name must publish nothing")
+      val referenced = (1 to head)
+        .flatMap(v => VersionedTable.resolveFiles(root, v).map(_.path)).toSet
+      val orphans = parquetFilesUnder(s"$root/data").toSet -- referenced
+      assert(orphans.isEmpty, s"$name left orphaned data files: $orphans")
+      assert(parquetFilesUnder(s"$root/cdc").isEmpty,
+        s"$name left orphaned change-feed sidecars")
+      assert(VersionedTable.read(spark, root).count() === 1 + racers, name)
+    }
+  }
+
   test("targeted merge rewrites only overlapping files, carries the rest verbatim") {
     // round 12: mergeTargeted — three single-file commits with disjoint
     // key ranges; an update batch hitting only the first band must
