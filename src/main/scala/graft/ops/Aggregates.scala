@@ -918,41 +918,23 @@ object Aggregates extends OpModule {
     * Fully integer (ppm floor-division) → bit-exact oracle.
     *
     * Scale: one map-combinable customer rollup, then everything
-    * downstream is O(customers) → O(10): the global ntile is the
-    * one genuinely serial step (single-partition window over the
-    * customer rollup — the [[Ranks]] distributed-rank machinery is
-    * the 100-TB path; at catalog-bounded customer counts the direct
-    * window is the honest cheaper plan). */
-  /** Exact NTILE(k) bucket from a 1-based global rank and total count
-    * — the SQL-standard fill (first n mod k buckets take one extra
-    * row), computed with integer div so the [[Ranks]] two-level rank
-    * can replace the single-partition `ntile` window bit-for-bit. */
-  private def ntileFromRank(rn: Column, n: Column, k: Int): Column = {
-    // floor() over doubles is exact here: every operand is an integer
-    // far below 2^52
-    val sz = floor(n / lit(k)).cast("long")
-    val rem = (n - sz * lit(k.toLong)).cast("long")
-    val cut = rem * (sz + lit(1L))
-    when(sz === 0L, rn.cast("int")) // n < k: bucket = rank
-      .otherwise(
-        when(rn <= cut, floor((rn - 1) / (sz + lit(1L))) + lit(1L))
-          .otherwise(rem + floor((rn - cut - 1) / sz) + lit(1L))
-          .cast("int"))
-  }
-
+    * downstream is O(customers) → O(10): the global decile is
+    * [[Ranks.withGlobalRn]]'s two-level exact rank (no customer-sized
+    * single-partition window) with `ntile(10)` reconstructed by
+    * [[Ranks.ntileFromRn]]. */
   def aggLorenz(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val cust = Tables.t(s, dir, "orders")
       .groupBy($"o_custkey")
       .agg(sum(round($"o_totalprice" * 100).cast("long")).as("spend_c"))
-    // global spend rank via the two-level Ranks machinery (no
+    // global spend rank via the two-level Ranks scan (no
     // customer-sized single-partition window), then the exact NTILE
     // arithmetic — bit-identical to ntile(10) OVER (ORDER BY ...)
     val ranked = Ranks.withGlobalRn(cust, $"spend_c",
       Seq($"spend_c", $"o_custkey"), "rn", "n_total", "lorenz")
     val g = ranked
-      .withColumn("decile", ntileFromRank($"rn", $"n_total", 10))
+      .withColumn("decile", Ranks.ntileFromRn($"rn", $"n_total", 10))
       .groupBy($"decile")
       .agg(count(lit(1)).as("n_customers"), sum($"spend_c").as("decile_c"))
     val total = g.agg(sum($"decile_c").as("total_c"))
@@ -1000,7 +982,7 @@ object Aggregates extends OpModule {
     val ranked = Ranks.withGlobalRn(scored, -$"c_acctbal",
       Seq($"c_acctbal".desc, $"c_custkey"), "rn", "n_total", "lift")
     val g = ranked
-      .withColumn("decile", ntileFromRank($"rn", $"n_total", 10))
+      .withColumn("decile", Ranks.ntileFromRn($"rn", $"n_total", 10))
       .groupBy($"decile")
       .agg(count(lit(1)).as("n"), sum($"label").as("n_pos"))
     val tot = g.agg(sum($"n").as("tot_n"), sum($"n_pos").as("tot_pos"))

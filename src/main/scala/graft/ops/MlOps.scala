@@ -468,16 +468,16 @@ object MlOps extends OpModule {
     * expression; ROUND(×10⁴) lands on a BIGINT so every aggregate
     * downstream is an exact integer sum cast once to double.
     *
-    * Scale shape (round 8): one custkey shuffle for history features,
-    * a semi-join label, then the three exact percent-ranks from one
+    * Scale shape: one custkey shuffle for history features, a
+    * semi-join label, then the three exact percent-ranks from one
     * long-form rank ([[Ranks.axisRanks]]) and one two-level decile
-    * ([[Ranks.withGlobalRn]] — range-binned partitioned windows +
-    * broadcast offsets; zero single-partition sorts at any corpus
-    * size). percent_rank is reconstructed as
-    * (rn−1)/(n−1) — the identical IEEE division Spark's PercentRank
-    * evaluates over this tie-free total order, so the oracle hash is
-    * unchanged; [[Ranks.approxNtile]] is the tested approx-boundary
-    * 100-TB variant. */
+    * ([[Ranks.withGlobalRn]] — sketch bins + [[Ranks.runningSum]]'s
+    * bin-partitioned window and broadcast offsets; zero
+    * single-partition sorts at any corpus size). percent_rank is
+    * reconstructed as (rn−1)/(n−1) — the identical IEEE division
+    * Spark's PercentRank evaluates over this tie-free total order, so
+    * the oracle hash is unchanged; [[Ranks.approxNtile]] is the tested
+    * approx-boundary 100-TB variant. */
   def mlCalibration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val scored = OpCache.cached(s, dir, "rfm_scored")(rfmScored(s, dir))

@@ -442,14 +442,14 @@ object PipelineOps extends OpModule {
     * The scale story is the HIERARCHICAL prefix: a naive
     * cumsum-per-tier would total-order each tier's slice of a 100-TB
     * corpus through ~3 window partitions (single-reducer death). Here
-    * the only per-row window is the within-SOURCE cumsum (parallel
-    * across sources — and a source outgrowing one reducer subdivides
-    * by hash prefix the same way), and tier ordering happens on the
-    * O(sources) summary table: source totals get hash-ordered
-    * exclusive prefix offsets within their tier, broadcast back, and
-    * a doc is kept iff source_offset + within-source-cumsum fits the
-    * tier budget. No corpus-wide sort ever happens; the budget row
-    * and offsets are broadcast; selection is one filter. */
+    * the per-tier running sum is [[Ranks.runningSum]] binned by source
+    * (sources hash-ordered, `within` the tier): the only per-row window
+    * is the within-SOURCE cumsum (parallel across sources — and a
+    * source outgrowing one reducer subdivides by hash prefix the same
+    * way), and the source offsets come from the O(sources) rollup,
+    * broadcast back; a doc is kept iff its running sum fits the tier
+    * budget. No corpus-wide sort ever happens; the budget row and
+    * offsets are broadcast; selection is one filter. */
   def sampleMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val srcn = expr("cast(substr(source, 4) as int)")
@@ -464,21 +464,11 @@ object PipelineOps extends OpModule {
       ("reference", 200000L)).toDF("tier", "w_ppm")
     val tb = tiers.crossJoin(broadcast(budget))
       .select($"tier", expr("b * w_ppm div 1000000").as("tier_budget"))
-    val inWin = Window.partitionBy($"source").orderBy($"dh", $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val incum = docs.withColumn("cum_in", sum($"n_chars").over(inWin))
-    val stot = docs.groupBy($"source", $"tier")
-      .agg(sum($"n_chars").as("s_chars"))
-      .withColumn("sh", md5int($"source"))
-    val offWin = Window.partitionBy($"tier").orderBy($"sh", $"source")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val soff = stot
-      .select($"source",
-        coalesce(sum($"s_chars").over(offWin), lit(0L)).as("s_off"))
-    incum
-      .join(broadcast(soff), Seq("source"))
+    Ranks.runningSum(docs, $"n_chars", "source", Seq($"dh", $"doc_id"),
+        "cum", within = Seq("tier"),
+        binOrder = Seq(md5int($"source"), $"source"))
       .join(broadcast(tb), Seq("tier"))
-      .filter($"s_off" + $"cum_in" <= $"tier_budget")
+      .filter($"cum" <= $"tier_budget")
       .select($"doc_id", $"tier", $"n_chars".cast("long").as("n_chars"))
       .orderBy($"doc_id")
   }
@@ -678,32 +668,20 @@ object PipelineOps extends OpModule {
     * rn — no int overflow past 2³¹ events), so the assignment is exact
     * and append-stable up to the new data.
     *
-    * Scale shape (round 8): the global (ts, event_id) rank is the
-    * TWO-LEVEL rank, never a single-partition window — calendar day is
-    * a monotone prefix of the sort key, so rank = per-day local
-    * row_number (window bounded by one day's events) + broadcast
-    * exclusive prefix offsets from the O(days) per-day-count rollup
-    * (the `q_sample_mix`/`q_shard_manifest` shape). At 100 TB the
-    * biggest sort any task runs is one day ÷ parallelism, and the
-    * 80/10/10 integer cuts apply to the reconstructed rank
+    * Scale shape: the global (ts, event_id) rank is
+    * [[Ranks.runningSum]] of 1 binned by calendar day — a monotone
+    * prefix of the sort key — so rank = per-day running count (window
+    * bounded by one day's events) + the day's broadcast offset from the
+    * O(days) per-day-count rollup, which also yields the total. At
+    * 100 TB the biggest sort any task runs is one day ÷ parallelism,
+    * and the 80/10/10 integer cuts apply to the reconstructed rank
     * unchanged. */
   def splitTemporal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.t(s, dir, "events").select($"ts", $"event_id")
       .withColumn("__d", to_date($"ts"))
-    val counts = ev.groupBy($"__d").agg(count(lit(1)).as("__cnt"))
-    // O(days) rollup — whitelisted tiny unpartitioned window
-    val offW = Window.orderBy($"__d")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val totW = Window.orderBy($"__d")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = counts.select($"__d",
-      coalesce(sum($"__cnt").over(offW), lit(0L)).as("__off"),
-      sum($"__cnt").over(totW).as("n_total"))
-    val local = Window.partitionBy($"__d").orderBy($"ts", $"event_id")
-    ev.withColumn("__lrn", row_number().over(local).cast("long"))
-      .join(broadcast(offsets), Seq("__d"))
-      .withColumn("rn", $"__off" + $"__lrn")
+    Ranks.runningSum(ev, lit(1L), "__d", Seq($"ts", $"event_id"), "rn",
+        total = Some("n_total"))
       .withColumn("split",
         when($"rn" * 10 <= $"n_total" * 8, "1_train")
           .when($"rn" * 10 <= $"n_total" * 9, "2_val")
@@ -791,26 +769,19 @@ object PipelineOps extends OpModule {
     * shard where its first byte falls, so the assignment is a pure
     * function of the corpus — rebuildable and diffable.
     *
-    * Scale shape: the global running sum is two-level, exactly like
-    * [[sampleMix]] — a per-source window (shuffle bounded by the
-    * source partition) plus a BROADCAST prefix-offset table built from
-    * the 20-row per-source totals. No single-partition window ever
-    * sees the corpus; at 100 TB the "source" level is whatever
-    * ingest partition the corpus already has. */
+    * Scale shape: the global running sum is [[Ranks.runningSum]]
+    * binned by source, exactly like [[sampleMix]] — a per-source window
+    * (shuffle bounded by the source partition) plus a BROADCAST
+    * prefix-offset table built from the 20-row per-source totals. No
+    * single-partition window ever sees the corpus; at 100 TB the
+    * "source" level is whatever ingest partition the corpus already
+    * has. */
   def shardManifest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.t(s, dir, "documents")
       .select($"doc_id", $"source", $"n_chars")
-    val inWin = Window.partitionBy($"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = docs.withColumn("cum_in", sum($"n_chars").over(inWin))
-    val stot = docs.groupBy($"source").agg(sum($"n_chars").as("s_chars"))
-    val offWin = Window.orderBy($"source")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val soff = stot.select($"source",
-      coalesce(sum($"s_chars").over(offWin), lit(0L)).as("s_off"))
-    cum.join(broadcast(soff), Seq("source"))
-      .withColumn("shard_id", expr("(s_off + cum_in - n_chars) div 10000"))
+    Ranks.runningSum(docs, $"n_chars", "source", Seq($"doc_id"), "cum")
+      .withColumn("shard_id", expr("(cum - n_chars) div 10000"))
       .groupBy($"shard_id")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("total_chars"),
         min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"))

@@ -4,98 +4,131 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale-safe EXACT global ranking — the two-level range-bin rank that
-  * replaces every `Window.orderBy(...)` with empty partitioning over
-  * data-sized input (the single-partition-window anti-pattern: Spark
-  * executes an unpartitioned window by moving every row to ONE task).
+/** Exact global ranks and running offsets without a data-sized
+  * single-partition window (Spark executes `Window.orderBy(...)` with
+  * empty partitioning by moving every row to ONE task).
   *
-  * Shape (the `q_sample_mix`/`q_shard_manifest` family, generalized to
-  * arbitrary sort keys):
+  * Two pieces, each written once:
   *
-  *   1. `approx_percentile` boundaries over the leading sort key →
-  *      a ≤(bins−1)-element broadcast array. Boundary QUALITY only
-  *      affects load balance, never the answer — the rank below is
-  *      exact for ANY consistent binning, so the sketch's error bound
-  *      needs no tuning and the whole step is one combinable aggregate.
-  *   2. Stateless bin assignment: bin = #(boundaries < key). Monotone
-  *      in the sort order by construction, so bins are contiguous rank
-  *      ranges; equal keys always share a bin (ties stay inside one
-  *      partition-local sort).
-  *   3. Per-bin `row_number` — a window PARTITIONED by bin (shuffle
-  *      bounded by the bin width, ~n/bins rows per task).
-  *   4. Per-bin counts → exclusive prefix offsets + grand total via a
-  *      window over the O(bins) ROLLUP (the one legitimately tiny
-  *      unpartitioned window — `PlanSpec`'s global pin whitelists
-  *      exactly this rollup shape), broadcast back.
-  *   5. global row_number = offset + local row_number (LongType — no
-  *      int overflow at any corpus size).
+  *   - [[runningSum]], the two-level prefix scan: a per-bin running sum
+  *     (a window PARTITIONED by the bin, ~n/bins rows per task) plus the
+  *     bin's offset, an exclusive running sum of the bin totals over the
+  *     O(bins) rollup (the one legitimately tiny unpartitioned window —
+  *     `PlanSpec`'s global pin whitelists exactly this rollup shape),
+  *     broadcast back. The bin is a monotone prefix of the order: the
+  *     caller's own (calendar day in `PipelineOps.splitTemporal`, source
+  *     in `shardManifest`, `sampleMix` and `TextOps.textPack`) or the
+  *     sketch's.
+  *   - `sketch`, the boundary sketch: `percentile_approx` k-quantile
+  *     boundaries of a numeric key, a ≤(k−1)-element broadcast array,
+  *     and bucket = #(boundaries < key). Monotone in the key, and equal
+  *     keys always share a bucket.
   *
-  * Exactness contract: `order` must be a TOTAL order over the rows
-  * (include a unique tiebreak column) and `binOn` must be a non-null
-  * ASC-monotone function of `order`'s leading key (negate it for a
-  * DESC leading key). Then the produced rank equals
-  * `row_number().over(Window.orderBy(order: _*))` bit-for-bit — the
-  * six ops refactored in round 8 keep their oracle hashes unchanged.
+  * Callers: [[withGlobalRn]] (global row_number and row count = sketch
+  * bins + a scan of 1) and [[withGlobalCumsumExcl]] (sketch bins + a
+  * scan of the value) serve `Aggregates.aggLorenz`, `aggDecileLift`,
+  * `featTierMigration`, `aggSpearman` and `MlOps.mlCalibration`;
+  * [[axisRanks]] puts several rank axes of one key through one
+  * [[withGlobalRn]] (`featRfmSegments`, the `MlOps` RFM score); and
+  * [[approxNtile]] is the sketch bucket alone, the zero-window 100-TB
+  * quantile bin (`featRfmApprox`). [[ntileFromRn]] and
+  * [[percentRankUnique]] turn a rank into `ntile` / `percent_rank`.
   *
-  * The APPROXIMATE variant ([[approxNtile]]) is the documented 100-TB
-  * default for quantile BINNING (tiers/RFM/deciles): it skips the rank
-  * entirely and bins each row against the same broadcast boundaries —
-  * zero windows, one aggregate + one stateless map. Tie runs land in
-  * one bucket (no fabricated intra-tie order), so bucket sizes wobble
-  * by the tie mass; the ScalaTest laws pin the wobble envelope vs the
-  * exact path on the graded fixtures.
+  * Sketch QUALITY only affects load balance, never an exact answer: the
+  * scan is exact for ANY bins that are a monotone prefix of a TOTAL
+  * order, so a rank equals `row_number().over(Window.orderBy(order:
+  * _*))` bit-for-bit. [[approxNtile]]'s buckets are the sketch's own:
+  * tie runs land in one bucket, so bucket sizes wobble by the tie mass;
+  * the ScalaTest laws pin that envelope against the exact path.
   */
 object Ranks {
 
+  /** Range bins of a sketched rank: load balance only, never the answer. */
+  private val Bins = 32
+  /** `percentile_approx` accuracy: rank error ≤ n/10⁴ per boundary. */
+  private val Accuracy = 10000
+
+  /** The one boundary sketch: adds `out` (IntegerType, 0..k−1), the
+    * number of approximate k-quantile boundaries of `binOn` below the
+    * row's key. `binOn` is cast to double for binning only — double
+    * collisions on huge integers just share a bucket. */
+  private def sketch(df: DataFrame, binOn: Column, k: Int,
+      out: String): DataFrame = {
+    val probs = (1 until k).map(i => i.toDouble / k)
+    val bnds = df.agg(percentile_approx(binOn.cast("double"),
+      typedLit(probs), lit(Accuracy)).as("__bnds"))
+    df.crossJoin(broadcast(bnds))
+      .withColumn(out, size(filter(col("__bnds"),
+        x => x < binOn.cast("double"))).cast("int"))
+      .drop("__bnds")
+  }
+
+  /** The one two-level prefix scan: adds `out`, the running sum of
+    * `value` over (`within`; `bin`; `order`) — bins ascending by
+    * `binOrder` (default: the `bin` column itself), rows within a bin
+    * by `order` — and, if asked, `total`, the sum over the row's
+    * `within` group. For non-NULL values that is SQL's `SUM(value) OVER
+    * (PARTITION BY within ORDER BY binOrder, order ROWS UNBOUNDED
+    * PRECEDING)` exactly. A NULL value adds nothing, but a row gets
+    * NULL while every value up to it in its BIN is NULL: `out` is the
+    * bin's offset (0 for the first bin) plus the bin-local window sum,
+    * the `s_off + cum_in` form the `q_sample_mix`, `q_shard_manifest`
+    * and `q_text_pack` oracles spell out. The sum is INCLUSIVE; for a
+    * non-NULL value the exclusive sum is `out − value`.
+    *
+    * Contract: `bin` names a column of `df` that is constant on a run
+    * of the order (a monotone prefix of it), `order` is a total order
+    * inside a bin, and each bin lies inside one `within` group. The
+    * local window is partitioned by `bin` alone and sums `value` as
+    * given; the bin totals and their offsets are an O(bins) rollup,
+    * partitioned by `within` (unpartitioned when it is empty) and
+    * broadcast back. */
+  def runningSum(df: DataFrame, value: Column, bin: String,
+      order: Seq[Column], out: String, total: Option[String] = None,
+      within: Seq[String] = Nil,
+      binOrder: Seq[Column] = Nil): DataFrame = {
+    val (tot, off) = (s"__tot_$out", s"__off_$out")
+    val totals = df.groupBy((within :+ bin).map(col): _*)
+      .agg(sum(value).as(tot))
+    // O(bins) rollup — the whitelisted tiny unpartitioned window
+    val rollup = Window.partitionBy(within.map(col): _*)
+      .orderBy((if (binOrder.isEmpty) Seq(col(bin)) else binOrder): _*)
+    val offsets = totals.select(Seq(col(bin),
+      coalesce(sum(col(tot)).over(rollup
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as(off)) ++
+      total.map(t => sum(col(tot)).over(rollup.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)).as(t)): _*)
+    val local = Window.partitionBy(col(bin)).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn(out, sum(value).over(local))
+      .join(broadcast(offsets), Seq(bin))
+      .withColumn(out, col(off) + col(out))
+      .drop(off)
+  }
+
   /** Exact global row_number (LongType) over `order`, plus the total
-    * row count, without any data-sized single-partition window.
+    * row count: sketch bins of `binOn` and a [[runningSum]] of 1.
     *
     * Adds `rnCol` (1-based global row_number) and `nCol` (total rows)
     * to `df`; all intermediate columns are dropped. `tag` keeps
     * internal column names unique when several ranks meet in one plan
     * (calibration's decile over the RFM rank); several axes of one key
-    * take [[axisRanks]] instead.
+    * take [[axisRanks]] instead. `order` must be a TOTAL order (include
+    * a unique tiebreak column).
     *
     * @param binOn non-null numeric column, ASC-aligned with `order`'s
-    *              leading key (pass `-key` for a DESC leading key);
-    *              cast to double only for BINNING — double collisions
-    *              on huge integers are harmless (same bin, exact order
-    *              restored by the in-bin sort).
+    *              leading key (pass `-key` for a DESC leading key).
+    * @param persist wraps the input, which the sketch and the scan's
+    *              rollup and window each read — without it each read
+    *              recomputes the whole upstream lineage.
     */
   def withGlobalRn(df: DataFrame, binOn: Column, order: Seq[Column],
-      rnCol: String, nCol: String, tag: String, bins: Int = 32,
+      rnCol: String, nCol: String, tag: String,
       persist: DataFrame => DataFrame = identity): DataFrame = {
     val b = s"__bin_$tag"
-    val lrn = s"__lrn_$tag"
-    val off = s"__off_$tag"
-    // the input is read three times (boundary sketch, bin counts, the
-    // ranked pass itself) — without the persist hook each read would
-    // recompute the ENTIRE upstream lineage, and stacked ranks would
-    // multiply that recomputation geometrically
-    val in = persist(df)
-    val probs = (1 until bins).map(i => i.toDouble / bins)
-    val bnds = in.agg(percentile_approx(binOn.cast("double"),
-      typedLit(probs), lit(1000)).as("__bnds"))
-    val binned = in
-      .crossJoin(broadcast(bnds))
-      .withColumn(b, size(filter(col("__bnds"),
-        x => x < binOn.cast("double"))).cast("int"))
-      .drop("__bnds")
-    val counts = binned.groupBy(col(b)).agg(count(lit(1)).as("__cnt"))
-    // O(bins) rollup — the whitelisted tiny unpartitioned window
-    val offW = Window.orderBy(col(b))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val totW = Window.orderBy(col(b))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = counts.select(col(b),
-      coalesce(sum(col("__cnt")).over(offW), lit(0L)).as(off),
-      sum(col("__cnt")).over(totW).as(nCol))
-    val local = Window.partitionBy(col(b)).orderBy(order: _*)
-    binned
-      .withColumn(lrn, row_number().over(local).cast("long"))
-      .join(broadcast(offsets), Seq(b))
-      .withColumn(rnCol, col(off) + col(lrn))
-      .drop(b, lrn, off)
+    runningSum(sketch(persist(df), binOn, Bins, b), lit(1L), b, order,
+        rnCol, total = Some(nCol))
+      .drop(b)
   }
 
   /** Exact per-axis ranks of several sort axes of one key from ONE
@@ -138,41 +171,20 @@ object Ranks {
           max(when(axis === a.toLong, col("__out"))).as(axes(a)._1)): _*)
   }
 
-  /** Exact global EXCLUSIVE running sum of `valueCol` over `order` —
-    * the two-level cumsum twin of [[withGlobalRn]] (same binning, same
-    * broadcast offsets; the in-bin window accumulates `valueCol` over
-    * `rowsBetween(unboundedPreceding, -1)`). Adds `outCol` (LongType,
-    * 0 for the first row). The building block for exact tie-aware
-    * ranks: #rows-before-a-value-group = exclusive cumsum of group
-    * counts over the value-grain rollup. */
+  /** Exact global EXCLUSIVE running sum of `valueCol` over `order`
+    * (LongType, 0 for the first row; a NULL value counts as 0): sketch
+    * bins of `binOn` and a [[runningSum]] less the row's own value.
+    * The building block for exact tie-aware ranks: #rows-before-a-
+    * value-group = exclusive cumsum of group counts over the
+    * value-grain rollup. */
   def withGlobalCumsumExcl(df: DataFrame, binOn: Column,
       order: Seq[Column], valueCol: Column, outCol: String,
-      tag: String, bins: Int = 32,
-      persist: DataFrame => DataFrame = identity): DataFrame = {
+      tag: String, persist: DataFrame => DataFrame = identity): DataFrame = {
     val b = s"__cbin_$tag"
-    val lcs = s"__lcs_$tag"
-    val off = s"__coff_$tag"
-    val in = persist(df)
-    val probs = (1 until bins).map(i => i.toDouble / bins)
-    val bnds = in.agg(percentile_approx(binOn.cast("double"),
-      typedLit(probs), lit(1000)).as("__cbnds"))
-    val binned = in
-      .crossJoin(broadcast(bnds))
-      .withColumn(b, size(filter(col("__cbnds"),
-        x => x < binOn.cast("double"))).cast("int"))
-      .drop("__cbnds")
-    val totals = binned.groupBy(col(b)).agg(sum(valueCol).as("__ctot"))
-    val offW = Window.orderBy(col(b))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = totals.select(col(b),
-      coalesce(sum(col("__ctot")).over(offW), lit(0L)).as(off))
-    val local = Window.partitionBy(col(b)).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    binned
-      .withColumn(lcs, coalesce(sum(valueCol).over(local), lit(0L)))
-      .join(broadcast(offsets), Seq(b))
-      .withColumn(outCol, col(off) + col(lcs))
-      .drop(b, lcs, off)
+    val v = coalesce(valueCol, lit(0L))
+    runningSum(sketch(persist(df), binOn, Bins, b), v, b, order, outCol)
+      .withColumn(outCol, col(outCol) - v)
+      .drop(b)
   }
 
   /** Exact long floor-division for non-negative operands, without the
@@ -201,17 +213,10 @@ object Ranks {
       .otherwise(lit(0.0d))
 
   /** APPROXIMATE quantile bucket — the 100-TB path for tier/RFM/decile
-    * binning: bucket = #(approx boundaries < key) + 1 (IntegerType,
-    * 1..k), zero windows. Equal keys share a bucket; the exact path
-    * above remains the graded-oracle surface. */
+    * binning: the sketch bucket + 1 (IntegerType, 1..k), zero windows.
+    * Equal keys share a bucket; the exact path above remains the
+    * graded-oracle surface. */
   def approxNtile(df: DataFrame, binOn: Column, k: Int,
-      outCol: String, accuracy: Int = 10000): DataFrame = {
-    val probs = (1 until k).map(i => i.toDouble / k)
-    val bnds = df.agg(percentile_approx(binOn.cast("double"),
-      typedLit(probs), lit(accuracy)).as("__qbnds"))
-    df.crossJoin(broadcast(bnds))
-      .withColumn(outCol, (size(filter(col("__qbnds"),
-        x => x < binOn.cast("double"))) + 1).cast("int"))
-      .drop("__qbnds")
-  }
+      outCol: String): DataFrame =
+    sketch(df, binOn, k, outCol).withColumn(outCol, col(outCol) + 1)
 }

@@ -98,39 +98,28 @@ object TextOps extends OpModule {
     * about). Same recipe ⇒ same packs on any cluster.
     *
     * The global order is HIERARCHICAL exactly like [[PipelineOps
-    * .sampleMix]]: within-source hash-ordered cumsum windows run in
-    * parallel across sources, and only the O(sources) total table is
-    * totally ordered (hash-ordered exclusive offsets, broadcast back).
-    * A 100-TB corpus is packed with no corpus-wide sort: the per-row
-    * stage is a source-partitioned window plus map-side div/mod. */
+    * .sampleMix]]: [[Ranks.runningSum]] binned by source runs the
+    * within-source hash-ordered cumsum windows in parallel across
+    * sources, and only the O(sources) total table is totally ordered
+    * (hash-ordered exclusive offsets, broadcast back). A 100-TB corpus
+    * is packed with no corpus-wide sort: the per-row stage is a
+    * source-partitioned window plus map-side div/mod. */
   def textPack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val packLen = 256L
     val docs = Tables.t(s, dir, "documents")
       .select($"doc_id", $"source",
         size(split($"text", " ")).cast("long").as("toks"),
         graft.Det.md5int60($"doc_id".cast("string")).as("dh"))
-    val inWin = Window.partitionBy($"source").orderBy($"dh", $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val incum = docs
-      .withColumn("cum_in", sum($"toks").over(inWin) - $"toks")
-    val stot = docs.groupBy($"source")
-      .agg(sum($"toks").as("s_toks"))
-      .withColumn("sh", graft.Det.md5int60($"source"))
-    val offWin = Window.orderBy($"sh", $"source")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val soff = stot
-      .select($"source",
-        coalesce(sum($"s_toks").over(offWin), lit(0L)).as("s_off"))
-    val cum = $"s_off" + $"cum_in"
-    incum
-      .join(broadcast(soff), Seq("source"))
+    // the exclusive global sum: tokens before this doc
+    Ranks.runningSum(docs, $"toks", "source", Seq($"dh", $"doc_id"), "cum",
+        binOrder = Seq(md5int($"source"), $"source"))
+      .withColumn("cum", $"cum" - $"toks")
       .select($"doc_id", $"toks".as("n_tokens"),
-        expr(s"(s_off + cum_in) div $packLen").as("pack_id"),
-        (cum % packLen).as("pack_offset"),
-        when(expr(s"(s_off + cum_in) div $packLen") =!=
-          expr(s"(s_off + cum_in + toks - 1) div $packLen"), 1L)
+        expr(s"cum div $packLen").as("pack_id"),
+        ($"cum" % packLen).as("pack_offset"),
+        when(expr(s"cum div $packLen") =!=
+          expr(s"(cum + toks - 1) div $packLen"), 1L)
           .otherwise(0L).as("crosses"))
       .orderBy($"doc_id")
   }

@@ -123,6 +123,11 @@ case class AsOfJoinExec(
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil
 
+  // both children arrive as stage inputs, so this node owns its stage's
+  // data-producing loop the way a leaf does: a LIMIT above the stage may
+  // stop it through `limitNotReachedCond`
+  override def canCheckLimitNotReached: Boolean = true
+
   // output vars reference the retained candidate row, which mutates as
   // the loop advances — a buffering parent must copy
   override def needCopyResult: Boolean = true

@@ -538,6 +538,11 @@ case class BandJoinProbeExec(
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil
 
+  // both children arrive as stage inputs, so this node owns its stage's
+  // data-producing loop the way a leaf does: a LIMIT above the stage may
+  // stop it through `limitNotReachedCond`
+  override def canCheckLimitNotReached: Boolean = true
+
   // output vars alias the reused left-child row buffer
   override def needCopyResult: Boolean = true
 

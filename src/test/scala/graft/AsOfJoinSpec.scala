@@ -179,4 +179,21 @@ class AsOfJoinSpec extends SparkSpec {
       assert(a === b)
     } finally graft.ops.OpCache.clear(ss)
   }
+
+  test("a LIMIT over the exec raises no non-leaf limit-check warning") {
+    // The exec reads both children as stage inputs and owns its stage's
+    // produce loop, so it may put limitNotReachedCond into it; Spark
+    // warns "Only leaf nodes and blocking nodes need to call
+    // 'limitNotReachedCond'…" for a node that does not declare so.
+    val ns = spark.newSession()
+    try {
+      val warned = warningsDuring(classOf[graft.plans.AsOfJoinExec].getName) {
+        val df = SparkEntry.queries("q_join_asof_native")(ns, sf).limit(5)
+        assert(df.collect().length === 5)
+        assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+      }
+      assert(!warned.exists(_.contains("limitNotReachedCond")),
+        warned.mkString("\n"))
+    } finally graft.ops.OpCache.clear(ns)
+  }
 }

@@ -284,4 +284,23 @@ class BandJoinSpec extends SparkSpec {
       pinned("BandJoinProbe")
     } finally graft.ops.OpCache.clear(ss)
   }
+
+  test("a LIMIT over the probe exec raises no non-leaf limit-check warning") {
+    // The AsOfJoinSpec test of the same name, for the shuffled probe
+    // form (broadcast threshold disabled), which also reads both
+    // children as stage inputs.
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val warned = warningsDuring(
+          classOf[graft.plans.BandJoinProbeExec].getName) {
+        val df = SparkEntry.queries("q_join_range_native")(ns, sf).limit(5)
+        assert(df.collect().length === 5)
+        assert(df.queryExecution.executedPlan.toString
+          .contains("BandJoinProbe"))
+      }
+      assert(!warned.exists(_.contains("limitNotReachedCond")),
+        warned.mkString("\n"))
+    } finally graft.ops.OpCache.clear(ns)
+  }
 }

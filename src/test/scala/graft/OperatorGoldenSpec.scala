@@ -770,6 +770,15 @@ class OperatorGoldenSpec extends SparkSpec {
       ((150, "38210ace9374331cb502ffb3c0168464")))
   }
 
+  // No oracle (DuckDB's approx_quantile is another sketch), so the rows
+  // of the approx quintiles, which come from Ranks' boundary sketch,
+  // are pinned.
+  test("approx RFM segment output is pinned at sf0.01 (spec session)") {
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    assert(pinnedRows("q_feat_rfm_approx", sf001) ===
+      ((5, "0b2789ef489541aef97bbb93e0f6c6b1")))
+  }
+
   test("funnel stages are monotone non-increasing") {
     val stages = run("q_feat_funnel")
       .select($"stage", $"n_users").as[(String, Long)].collect().toMap
@@ -2719,6 +2728,40 @@ class OperatorGoldenSpec extends SparkSpec {
     val cdiff = cumExpected.join(cumGot, Seq("v"))
       .filter($"cs0" =!= $"cs").count()
     assert(cdiff === 0L)
+    // the scan under them with caller bins, `within` groups and NULL
+    // values: rank (a sum of 1), running and exclusive sums and the
+    // group total equal the windows partitioned by `within` alone, with
+    // bins ascending by their own value and, via binOrder, descending;
+    // the running sum is NULL where the row's bin holds no value yet
+    val scoped = rows.map { case (v, id) =>
+      (rnd.nextInt(3).toLong, v, id,
+        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(1000).toLong))
+    }.toDF("g", "v", "id", "x")
+      .withColumn("b", expr("g * 100 + (v + 18) div 5"))
+    Seq(Nil, Seq(-$"b")).foreach { binOrder =>
+      val w = Window.partitionBy($"g")
+        .orderBy((if (binOrder.isEmpty) Seq($"b") else binOrder) ++
+          Seq($"v", $"id"): _*)
+      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val want = scoped
+        .withColumn("rk0", row_number().over(w).cast("long"))
+        .withColumn("cum0", when(sum($"x").over(Window.partitionBy($"b")
+          .orderBy($"v", $"id")).isNotNull, sum($"x").over(run)))
+        .withColumn("excl0", coalesce(sum($"x").over(
+          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("tot0", sum($"x").over(Window.partitionBy($"g")))
+      val rk = Ranks.runningSum(scoped, lit(1L), "b", Seq($"v", $"id"),
+        "rk", within = Seq("g"), binOrder = binOrder)
+      val cum = Ranks.runningSum(scoped, $"x", "b", Seq($"v", $"id"),
+        "cum", total = Some("tot"), within = Seq("g"), binOrder = binOrder)
+      val bad = want.join(rk.select("v", "id", "rk"), Seq("v", "id"))
+        .join(cum.select("v", "id", "cum", "tot"), Seq("v", "id"))
+        .filter($"rk" =!= $"rk0" || !($"cum" <=> $"cum0") ||
+          ($"x".isNotNull && $"cum" - $"x" =!= $"excl0") ||
+          !($"tot" <=> $"tot0"))
+        .count()
+      assert(bad === 0L, s"binOrder $binOrder: $bad rows differ")
+    }
   }
 
   test("kcore peel trace is monotone non-increasing (round 13)") {

@@ -65,6 +65,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Runs `body` and returns the messages `logger` logged at WARN or
+    * above meanwhile. The spec session logs at ERROR, so the logger is
+    * lowered to WARN for the duration. */
+  def warningsDuring(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender(s"warnings-$logger", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    val l = LogManager.getLogger(logger).asInstanceOf[Logger]
+    val level = l.getLevel
+    app.start()
+    l.addAppender(app)
+    l.setLevel(Level.WARN)
+    try body
+    finally {
+      l.removeAppender(app)
+      l.setLevel(level)
+      app.stop()
+    }
+    seen.asScala.toSeq
+  }
+
   override def afterAll(): Unit = () // session shared across suites
 }
 
